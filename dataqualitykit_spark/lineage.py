@@ -283,18 +283,26 @@ def run_resumable(
             .partitionBy("bucket_id")
             .parquet(io._path("labeled"))
         )
+        # the metrics table comes from ONE read of the written partition:
+        # aggregating the lazy `labeled` frame would re-run the whole
+        # pipeline and scorer a second time
         (
-            quality_metrics(labeled.drop("bucket_id"))
+            quality_metrics(
+                io.read("labeled").filter(F.col("bucket_id") == b).drop("bucket_id")
+            )
             .withColumn("bucket_id", F.lit(b))
             .write.mode("overwrite")
             .option("partitionOverwriteMode", "dynamic")
             .partitionBy("bucket_id")
             .parquet(io._path("metrics"))
         )
-        # count the WRITTEN parquet (cheap metadata scan) instead of
-        # recomputing the whole UDF pipeline a second time
+        # the manifest row count is the written metrics' docs total (a
+        # read of a few rows, not of the labeled partition again)
         rows = (
-            io.read("labeled").filter(F.col("bucket_id") == b).count()
+            io.read("metrics")
+            .filter(F.col("bucket_id") == b)
+            .agg(F.sum("docs"))
+            .first()[0]
         )
         manifest.mark(b, rows)
         done.add(b)

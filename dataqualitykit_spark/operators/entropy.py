@@ -29,7 +29,7 @@ rounded to 6 on both sides like every float metric in the contract.
 from __future__ import annotations
 
 import pandas as pd
-from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql import DataFrame, functions as F
 
 from ..semantics import token_entropy_stats
 
@@ -46,28 +46,6 @@ def py_token_entropy(text: str | None) -> tuple[int, int, float | None]:
     Delegates to semantics.token_entropy_stats (the shared mirror the
     fused Arrow scorer's opt-in gate field also uses)."""
     return token_entropy_stats(text)
-
-
-def token_entropy_col(s: Column) -> Column:
-    """JVM column-algebra twin for the 'columns' metrics engine: same H,
-    0.0 for token-less text (matching the scorer's null-extras value).
-
-    O(distinct x tokens) interpreted HOF per row — the parity-check
-    engine, NOT the hot path (the fused Arrow pass computes this in the
-    tokenize it already does; the repetition gates measured this exact
-    trade at ~9x). JVM Math.log differs from libm by <= 1 ulp, so
-    cross-engine equality holds only after the contract's round-to-6."""
-    from ..functions.text import words
-
-    toks = words(s)
-    n = F.size(toks)
-    c_of = lambda w: F.size(F.filter(toks, lambda x: x == w)).cast("double")  # noqa: E731
-    ssum = F.aggregate(
-        F.array_distinct(toks),
-        F.lit(0.0),
-        lambda acc, w: acc + c_of(w) * F.log(c_of(w)),
-    )
-    return F.when(n > 0, F.log(n.cast("double")) - ssum / n).otherwise(F.lit(0.0))
 
 
 def token_entropy(

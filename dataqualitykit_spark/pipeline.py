@@ -2,8 +2,8 @@
 
     ingest (project html away) -> salt repartition by url ->
     missing flag -> url keep-most-recent -> content keep-one (raw-text md5)
-    -> [survivors only] scrub UDF -> metric columns -> langid/ppl UDF
-    -> quality decide -> union dropped rows back -> labeled frame
+    -> [survivors only] fused scrub+score Arrow UDF (every metric +
+    langid/ppl) -> quality decide -> labeled frame
 
 Why this shape at 100 TB (BASELINE.json north_rule):
 
@@ -15,8 +15,8 @@ Why this shape at 100 TB (BASELINE.json north_rule):
 - Dedup happens BEFORE the Arrow UDF stage on md5 of the raw text, so the
   expensive model scoring (langid, perplexity — fastText/KenLM in
   production) runs once per unique present document, not once per mirror.
-- All heuristic rules are native column algebra over the scrubbed text —
-  whole-stage codegen, zero Python outside the two Arrow UDFs.
+- The rule decisions are native column algebra over the scorer's metric
+  struct — whole-stage codegen, zero Python outside the one Arrow UDF.
 - decide folds flags into (keep, drop_reason) with the pinned priority
   order shared with the oracle (config.DROP_REASON_ORDER).
 
@@ -34,8 +34,7 @@ from pyspark.sql import functions as F
 
 from .config import DEFAULT_CONFIG, PipelineConfig
 from .functions import text as T
-from .udfs import lang_ppl_udf, scoring_udf, scrub_udf
-from .udfs.scoring import fused_scrub_score_udf
+from .udfs.scoring import SCORE_SCHEMA, fused_scrub_score_udf
 
 # metric columns produced by the survivor stage (null for dropped rows)
 _METRIC_COLS: dict[str, str] = {
@@ -58,10 +57,9 @@ _METRIC_COLS: dict[str, str] = {
 def _repetition_flag(cfg: PipelineConfig) -> list[tuple[str, Column]]:
     """Opt-in Gopher repetition gate — reads the dup_line_char_frac /
     dup_5gram_frac columns with_metrics guarantees when either threshold
-    is set (computed inside the fused Arrow scorer on the 'udf' path:
-    the interpreted JVM HOF forms were measured at ~0.16 ms/doc, 9x the
-    whole fused stage, so the python mirrors ride the existing tokenize
-    pass instead)."""
+    is set (computed inside the fused Arrow scorer: the interpreted JVM
+    HOF forms were measured at ~0.16 ms/doc, 9x the whole fused stage,
+    so the python mirrors ride the existing tokenize pass instead)."""
     if cfg.max_dup_line_char_frac is None and cfg.max_dup_5gram_frac is None:
         return []
     cond = F.lit(False)
@@ -101,8 +99,8 @@ def _entropy_flag(cfg: PipelineConfig) -> list[tuple[str, Column]]:
 def _line_shape_flag(cfg: PipelineConfig) -> list[tuple[str, Column]]:
     """Opt-in Gopher line-shape gate (Rae 2021 A1.1.1) — reads the
     bullet/ellipsis/alpha fraction columns with_metrics guarantees when
-    any threshold is set (fused into the Arrow scorer on the 'udf' path,
-    same engine policy as the repetition gates)."""
+    any threshold is set (fused into the Arrow scorer, like the
+    repetition gates)."""
     if not _line_shape_on(cfg):
         return []
     cond = F.lit(False)
@@ -184,149 +182,51 @@ def _quality_flags(cfg: PipelineConfig) -> list[tuple[str, Column]]:
 def with_metrics(df: DataFrame, cfg: PipelineConfig = DEFAULT_CONFIG) -> DataFrame:
     """scrub + metric + score columns; pure projection (no shuffle).
 
-    metrics_engine='udf' (default): every per-doc metric comes from the
-    fused Arrow scorer — measured ~5x faster end-to-end than interpreted
-    JVM string/array expressions on this workload (see udfs/scoring.py).
-    metrics_engine='columns': pure column algebra from functions/text.py.
-    Identical values either way (tests/test_text_metrics.py).
+    ONE fused Arrow pass (udfs/scoring.fused_scrub_score_udf): scrub +
+    every metric + langid/ppl (and the cfg model seam) — the text crosses
+    the JVM<->Python boundary once. Interpreted JVM string/array
+    expressions were measured ~5x slower end-to-end on this workload.
 
-    Adds every _METRIC_COLS column plus `_missing` (scrub-level missing)."""
-    if cfg.metrics_engine == "udf":
-        # ONE fused Arrow pass: scrub + every metric + langid/ppl (and the
-        # cfg model seam) — the text crosses the JVM<->Python boundary
-        # once; two chained UDFs (scrub then score) would ship it twice
-        rep_on = (
-            cfg.max_dup_line_char_frac is not None
-            or cfg.max_dup_5gram_frac is not None
-        )
-        line_on = _line_shape_on(cfg)
-        ent_on = cfg.min_token_entropy is not None
-        fused = fused_scrub_score_udf(
-            cfg.lang_model_loader,
-            cfg.ppl_model_loader,
-            repetition=rep_on,
-            line_shape=line_on,
-            entropy=ent_on,
-        )
-        m = F.col("_score")
-        rep_cols = (
-            [
-                m["dup_line_char_frac"].alias("dup_line_char_frac"),
-                m["dup_5gram_frac"].alias("dup_5gram_frac"),
-            ]
-            if rep_on
-            else []
-        )
-        if line_on:
-            rep_cols += [
-                m["bullet_line_frac"].alias("bullet_line_frac"),
-                m["ellipsis_line_frac"].alias("ellipsis_line_frac"),
-                m["alpha_word_frac"].alias("alpha_word_frac"),
-            ]
-        if ent_on:
-            rep_cols += [m["token_entropy"].alias("token_entropy")]
-        df = df.withColumn("_score", fused(F.col("text")))
-        return df.select(
-            "*",
-            *rep_cols,
-            m["scrubbed_text"].alias("scrubbed_text"),
-            m["missing"].alias("_missing"),
-            m["n_chars"].alias("n_chars"),
-            (
-                m["symbol_count"] / F.greatest(m["n_chars"], F.lit(1))
-            ).alias("symbol_ratio"),
-            m["n_lines"].alias("n_lines"),
-            F.when(m["n_lines"] == 0, F.lit(1.0))
-            .otherwise(m["distinct_lines"] / m["n_lines"].cast("double"))
-            .alias("distinct_line_ratio"),
-            m["boilerplate_hits"].alias("boilerplate_hits"),
-            m["lang"].alias("lang_pred"),
-            m["lang_conf"].alias("lang_conf"),
-            m["ppl"].alias("ppl"),
-            m["n_words"].alias("n_words"),
-            m["mean_word_len"].alias("mean_word_len"),
-            m["stopword_hits"].alias("stopword_hits"),
-            (
-                m["stopword_hits"] / F.greatest(m["n_words"], F.lit(1))
-            ).alias("stopword_density"),
-        ).drop("_score")
-    # pure column-algebra path
-    s = F.col("scrubbed_text")
-    df = df.withColumn("scrubbed_text", scrub_udf(F.col("text")))
-    if cfg.max_dup_line_char_frac is not None or cfg.max_dup_5gram_frac is not None:
-        from .operators import repetition as _rep
-
-        df = df.withColumn(
-            "dup_line_char_frac",
-            F.when(s.isNull(), F.lit(0.0)).otherwise(
-                _rep.dup_line_char_frac_col(s)
-            ),
-        ).withColumn(
-            "dup_5gram_frac",
-            F.when(s.isNull(), F.lit(0.0)).otherwise(_rep.dup_5gram_frac_col(s)),
-        )
-    if _line_shape_on(cfg):
-        from .operators import repetition as _rep
-
-        df = (
-            df.withColumn(
-                "bullet_line_frac",
-                F.when(s.isNull(), F.lit(0.0)).otherwise(
-                    _rep.bullet_line_frac_col(s)
-                ),
-            )
-            .withColumn(
-                "ellipsis_line_frac",
-                F.when(s.isNull(), F.lit(0.0)).otherwise(
-                    _rep.ellipsis_line_frac_col(s)
-                ),
-            )
-            .withColumn(
-                "alpha_word_frac",
-                F.when(s.isNull(), F.lit(0.0)).otherwise(
-                    _rep.alpha_word_frac_col(s)
-                ),
-            )
-        )
-    if cfg.min_token_entropy is not None:
-        from .operators.entropy import token_entropy_col
-
-        df = df.withColumn(
-            "token_entropy",
-            F.when(s.isNull(), F.lit(0.0)).otherwise(token_entropy_col(s)),
-        )
-    # model seam: real fastText/KenLM loaders (cfg) replace the embedded
-    # stand-ins' lang/ppl outputs; everything else is unchanged
-    score = (
-        scoring_udf(cfg.lang_model_loader, cfg.ppl_model_loader)
-        if (cfg.lang_model_loader is not None or cfg.ppl_model_loader is not None)
-        else lang_ppl_udf
+    Adds every _METRIC_COLS column, the enabled opt-in gate columns, and
+    `_missing` (scrub-level missing)."""
+    fused = fused_scrub_score_udf(
+        cfg.lang_model_loader,
+        cfg.ppl_model_loader,
+        repetition=cfg.max_dup_line_char_frac is not None
+        or cfg.max_dup_5gram_frac is not None,
+        line_shape=_line_shape_on(cfg),
+        entropy=cfg.min_token_entropy is not None,
     )
-    df = df.withColumn("_lines", T.nonempty_lines(s))
-    df = df.select(
-        "*",
-        T.char_count(s).alias("n_chars"),
-        T.symbol_ratio(s).alias("symbol_ratio"),
-        F.size("_lines").alias("n_lines"),
-        F.when(F.size("_lines") == 0, F.lit(1.0))
-        .otherwise(F.size(F.array_distinct("_lines")) / F.size("_lines").cast("double"))
-        .alias("distinct_line_ratio"),
-        T.boilerplate_hits(s).alias("boilerplate_hits"),
-        T.stopword_hits(s).alias("stopword_hits"),
-        T.word_count(s).alias("n_words"),
-        T.mean_word_length(s).alias("mean_word_len"),
-        score(s).alias("_score"),
-    )
+    # the opt-in gate fields are whatever the scorer appended after the
+    # always-on ones — the gate-to-field choice lives in udfs/scoring only
+    fixed = {"scrubbed_text", *SCORE_SCHEMA.fieldNames()}
+    gate_cols = [n for n in fused.returnType.fieldNames() if n not in fixed]
+    m = F.col("_score")
+    df = df.withColumn("_score", fused(F.col("text")))
     return df.select(
         "*",
-        T.is_missing(s).alias("_missing"),
-        F.col("_score.lang").alias("lang_pred"),
-        F.col("_score.lang_conf").alias("lang_conf"),
-        F.col("_score.ppl").alias("ppl"),
+        *[m[n].alias(n) for n in gate_cols],
+        m["scrubbed_text"].alias("scrubbed_text"),
+        m["missing"].alias("_missing"),
+        m["n_chars"].alias("n_chars"),
         (
-            F.col("stopword_hits") / F.greatest(F.col("n_words"), F.lit(1))
+            m["symbol_count"] / F.greatest(m["n_chars"], F.lit(1))
+        ).alias("symbol_ratio"),
+        m["n_lines"].alias("n_lines"),
+        F.when(m["n_lines"] == 0, F.lit(1.0))
+        .otherwise(m["distinct_lines"] / m["n_lines"].cast("double"))
+        .alias("distinct_line_ratio"),
+        m["boilerplate_hits"].alias("boilerplate_hits"),
+        m["lang"].alias("lang_pred"),
+        m["lang_conf"].alias("lang_conf"),
+        m["ppl"].alias("ppl"),
+        m["n_words"].alias("n_words"),
+        m["mean_word_len"].alias("mean_word_len"),
+        m["stopword_hits"].alias("stopword_hits"),
+        (
+            m["stopword_hits"] / F.greatest(m["n_words"], F.lit(1))
         ).alias("stopword_density"),
-    ).drop("_score", "_lines")
+    ).drop("_score")
 
 
 def _quality_reasons_array(cfg: PipelineConfig) -> Column:
@@ -383,11 +283,11 @@ def run_pipeline(df: DataFrame, cfg: PipelineConfig = DEFAULT_CONFIG) -> DataFra
         # compute, content window on): the content window's own exchange
         # rebalances before the scorer stage, so the repartition would be
         # a full shuffle of the text that feeds nothing (guide §2.4 —
-        # remove shuffles outright). The near branch keeps it: under the
-        # scale-safe 'recompute' default the base subtree is evaluated
-        # twice (signature pass + final join-back), and this exchange is
-        # the stable rebalance point feeding both — measured at 400k near
-        # docs, skipping it cost ~12% on the leg while saving nothing.
+        # remove shuffles outright). The near branch keeps it: nothing is
+        # pinned there, so the base subtree is evaluated twice (signature
+        # pass + final join-back), and this exchange is the stable
+        # rebalance point feeding both — measured at 400k near docs,
+        # skipping it cost ~12% on the leg while saving nothing.
         # Results are partitioning-independent either way (total window
         # orders).
         base = base.repartition(n_salt, url_key)
@@ -495,23 +395,13 @@ def run_pipeline(df: DataFrame, cfg: PipelineConfig = DEFAULT_CONFIG) -> DataFra
     # connected components -> keep the canonical (min url) row per
     # cluster. The pair/CC frames hold only near-dup PARTICIPANTS — tiny
     # relative to the corpus — so the left join back is broadcastable by
-    # AQE; the corpus itself is never re-shuffled. localCheckpoint
-    # materializes the dedup subtree once (the CC loop is iterative).
+    # AQE; the corpus itself is never re-shuffled. Nothing is pinned: the
+    # pairs branch and the join-back each evaluate the base subtree (one
+    # extra source scan beats caching the corpus in executor storage; run
+    # near-dedup per lineage bucket to bound the working set).
     if cfg.dedup_near:
         from .operators import dedup as _dedup
 
-        if cfg.near_dup_materialize == "localCheckpoint":
-            # materialize the dedup subtree once — right up to corpora
-            # that fit executor storage. At 10^12 docs storing the corpus
-            # in the block manager is infeasible: use 'recompute' (the
-            # pairs branch re-scans the source — one extra read beats
-            # caching 100 TB), or better, run near-dedup per lineage
-            # bucket (lineage.run_resumable) so the working set is bounded.
-            # LAZY: the signature stage materializes the blocks inside its
-            # own first job — an eager checkpoint here cost one extra
-            # blocking driver round-trip per run (measured r7; same
-            # finding as minhash_jaccard's round-2 regression).
-            base = base.localCheckpoint(eager=False)
         surv = base.filter(F.col("_survivor")).select("url", "text")
         if cfg.near_dup_hash == "md5":
             pairs = _dedup.minhash_jaccard_portable(
@@ -579,38 +469,13 @@ def run_pipeline(df: DataFrame, cfg: PipelineConfig = DEFAULT_CONFIG) -> DataFra
     # tokenize); the picked-url set joins back small (AQE broadcast).
     # COST NOTE: under a fully lazy plan the sampler's bucket-sums action
     # evaluates the pipeline subtree once more than a budget-less run —
-    # measured 3.5x at sf0.1 — so cfg.budget_materialize defaults to
-    # localCheckpoint (see config.py / PLANS.md "Token-budget stage").
+    # measured 3.5x at sf0.1 — so labeled is localCheckpointed first
+    # (PLANS.md "Token-budget stage"); the stage is already eager (the
+    # sampler's bucket-sum prefix is an action), so pinning adds none.
     if cfg.token_budget is not None:
         from .operators.sampling import sample_to_token_budget
 
-        # AUTO = localCheckpoint: measured at sf0.1 the lazy recompute
-        # runs the scorer subtree twice at a 3.5x cost (23.0 s vs 6.5 s,
-        # scripts/microbench_budget_materialize.py; table in PLANS.md) —
-        # and the budget stage is already eager (the sampler's bucket-sum
-        # prefix is an action), so pinning adds no new eagerness
-        mode = cfg.budget_materialize or "localCheckpoint"
-        if mode == "localCheckpoint":
-            labeled = labeled.localCheckpoint()
-        elif mode == "persist_parquet":
-            # scratch-parquet intermediate: one write, both downstream
-            # actions read columnar blocks — unlike localCheckpoint this
-            # survives executor loss on a real cluster (blocks live on
-            # the DFS/scratch volume, not in executor storage). Without
-            # cfg.budget_scratch_dir the tempdir is on the DRIVER's
-            # filesystem — local mode only.
-            scratch = cfg.budget_scratch_dir
-            if scratch is None:
-                import tempfile as _tf
-
-                scratch = _tf.mkdtemp(prefix="dqx_budget_labeled_")
-            labeled.write.mode("overwrite").parquet(scratch)
-            labeled = labeled.sparkSession.read.parquet(scratch)
-        elif mode != "recompute":
-            raise ValueError(
-                "budget_materialize must be None/'recompute'/"
-                f"'localCheckpoint'/'persist_parquet', got {mode!r}"
-            )
+        labeled = labeled.localCheckpoint()
         kept = labeled.filter(F.col("keep"))
         by = cfg.budget_by
         if by is None:

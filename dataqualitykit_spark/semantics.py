@@ -843,10 +843,10 @@ def _score_document_low(text: str, low: str) -> tuple[str, float, float, int, fl
 
 
 def full_metrics(text: str) -> tuple:
-    """Every per-document metric in one pass — the fused fast path the
-    pipeline's scoring UDF uses (metrics_engine='udf'). Field-for-field
-    equal to the individual functions here and to the column algebra in
-    functions/text.py (parity tests pin all three).
+    """Every per-document metric in one pass — what the pipeline's fused
+    scoring UDF computes per doc. Field-for-field equal to the individual
+    functions here, which tests/test_text_metrics.py also pins to the
+    column algebra in functions/text.py.
 
     Returns (lang, lang_conf, ppl, n_words, mean_word_len, stopword_hits,
              n_chars, symbol_count, n_lines, distinct_lines,

@@ -9,9 +9,9 @@ materialization, per-element lambdas, line splits); this fused UDF costs
 ~0.27 ms/doc single-threaded and scales with Python workers.
 
 The column-algebra equivalents live on in functions/text.py — they back
-the operator library and the DuckDB-checked driver queries, and
-tests/test_text_metrics.py pins all three paths (python, JVM columns,
-this UDF) to identical values.
+the operator library and the DuckDB-checked `__spark_entry__` queries;
+tests/test_text_metrics.py pins them and this UDF to the python
+semantics.
 
 The model code is imported from ``dataqualitykit_spark.semantics`` (same
 functions the oracle calls), so engine and oracle cannot disagree. This is
@@ -61,70 +61,29 @@ def _score_batch(texts: pd.Series) -> pd.DataFrame:
     return pd.DataFrame(scored, columns=_COLS)
 
 
-# extended variant for the opt-in Gopher repetition gates: two extra
-# fields from the SAME python mirrors the oracle uses. A separate schema
-# (not extra always-on fields) so the default pipeline_full hot path pays
-# nothing when the gates are off. Measured motivation: the interpreted
-# JVM HOF forms of these two fractions cost ~0.16 ms/doc — 9x the whole
-# fused pipeline stage — while the in-Arrow computation rides the
-# existing tokenize pass.
-_REP_FIELDS = _FIELDS + [
+# opt-in gate fields, appended to the fused scorer's schema only when
+# their gate is on so the default pass pays nothing for them. Computed
+# from the SAME python mirrors the oracle uses, riding the existing
+# tokenize pass: the interpreted JVM HOF forms of the repetition
+# fractions were measured at ~0.16 ms/doc — 9x the whole fused stage.
+_REPETITION_FIELDS = [
     ("dup_line_char_frac", DoubleType()),
     ("dup_5gram_frac", DoubleType()),
 ]
 
-
-# Gopher line-shape gate fields (round 5) — same opt-in pattern: extra
-# schema fields only when the gate is on, computed from the semantics
-# mirror inside the fused pass (the per-line/per-word JVM HOF forms would
-# pay the same interpreted-expression tax the repetition gates measured)
+# Gopher line-shape gate fields
 _LINE_FIELDS = [
     ("bullet_line_frac", DoubleType()),
     ("ellipsis_line_frac", DoubleType()),
     ("alpha_word_frac", DoubleType()),
 ]
 
-# token-entropy gate field (round 5) — same opt-in pattern; 0.0 for
-# token-less text (the gate's entropy_min_words floor makes the
-# degenerate value unreachable by the decide clause)
+# token-entropy gate field; 0.0 for token-less text (the gate's
+# entropy_min_words floor makes the degenerate value unreachable by the
+# decide clause)
 _ENTROPY_FIELDS = [
     ("token_entropy", DoubleType()),
 ]
-
-
-def _extras_spec(repetition: bool, line_shape: bool, entropy: bool = False):
-    """(extra fields, per-text extras fn, null extras tuple) for the
-    enabled opt-in gate families — the fused schema and batch fn compose
-    from this so every gate combination shares one code path."""
-    from ..semantics import (
-        dup_5gram_frac,
-        dup_line_char_frac,
-        line_shape_fracs,
-        token_entropy_stats,
-    )
-
-    fields: list = []
-    fns = []
-    if repetition:
-        fields += _REP_FIELDS[len(_FIELDS):]
-        fns.append(lambda t: (dup_line_char_frac(t), dup_5gram_frac(t)))
-    if line_shape:
-        fields += _LINE_FIELDS
-        fns.append(line_shape_fracs)
-    if entropy:
-        fields += _ENTROPY_FIELDS
-        fns.append(
-            lambda t: ((lambda h: 0.0 if h is None else h)(token_entropy_stats(t)[2]),)
-        )
-    null_extras = tuple(0.0 for _ in fields)
-
-    def extras(t):
-        out: tuple = ()
-        for fn in fns:
-            out += tuple(fn(t))
-        return out
-
-    return fields, extras, null_extras
 
 
 # one model instance per python worker PROCESS (fastText/KenLM load once,
@@ -234,13 +193,9 @@ lang_ppl_udf = scoring_udf()
 
 # fused scrub+score: ONE Arrow round-trip instead of two chained pandas
 # UDFs (scrub_udf then lang_ppl_udf over its output) — the document text
-# otherwise crosses the JVM<->Python boundary twice per row. Output is
-# byte-identical by construction: the SAME _scrub_batch and _score_batch
-# compose in-process.
-FUSED_SCHEMA = StructType(
-    [StructField("scrubbed_text", StringType())]
-    + [StructField(n, t) for n, t in _FIELDS]
-)
+# otherwise crosses the JVM<->Python boundary twice per row. The metrics
+# are the same full_metrics tuple _score_batch builds, composed in-process
+# after the same _scrub_batch.
 def fused_scrub_score_udf(
     lang_model_loader=None,
     ppl_model_loader=None,
@@ -252,32 +207,50 @@ def fused_scrub_score_udf(
     dup_line_char_frac, dup_5gram_frac when repetition][,
     bullet_line_frac, ellipsis_line_frac, alpha_word_frac when
     line_shape][, token_entropy when entropy])."""
+    from ..semantics import (
+        dup_5gram_frac,
+        dup_line_char_frac,
+        line_shape_fracs,
+        token_entropy_stats,
+    )
     from .scrubbing import _scrub_batch
 
-    keys = (_loader_key(lang_model_loader), _loader_key(ppl_model_loader))
-    if repetition or line_shape or entropy:
-        fields, extras, null_extras = _extras_spec(repetition, line_shape, entropy)
-        cols = _COLS + [n for n, _ in fields]
-        null_row = _NULL_SCORE + null_extras
-        schema = StructType(
-            [StructField("scrubbed_text", StringType())]
-            + [StructField(n, t) for n, t in _FIELDS + fields]
+    # the enabled gate families' fields and per-text fns — both empty when
+    # every gate is off, so every gate combination shares one batch fn
+    fields: list = []
+    fns = []
+    if repetition:
+        fields += _REPETITION_FIELDS
+        fns.append(lambda t: (dup_line_char_frac(t), dup_5gram_frac(t)))
+    if line_shape:
+        fields += _LINE_FIELDS
+        fns.append(line_shape_fracs)
+    if entropy:
+        fields += _ENTROPY_FIELDS
+        fns.append(
+            lambda t: ((lambda h: 0.0 if h is None else h)(token_entropy_stats(t)[2]),)
         )
 
-        def score(texts: pd.Series) -> pd.DataFrame:
-            scored = [
-                null_row if t is None else full_metrics(t) + extras(t)
-                for t in texts
-            ]
-            return pd.DataFrame(scored, columns=cols)
+    def extras(t):
+        out: tuple = ()
+        for fn in fns:
+            out += tuple(fn(t))
+        return out
 
-    else:
-        score = _score_batch
-        schema = FUSED_SCHEMA
+    keys = (_loader_key(lang_model_loader), _loader_key(ppl_model_loader))
+    cols = _COLS + [n for n, _ in fields]
+    null_row = _NULL_SCORE + tuple(0.0 for _ in fields)
+    schema = StructType(
+        [StructField("scrubbed_text", StringType())]
+        + [StructField(n, t) for n, t in _FIELDS + fields]
+    )
 
     def batch(texts: pd.Series) -> pd.DataFrame:
         scrubbed = _scrub_batch(texts)
-        df = score(scrubbed)
+        df = pd.DataFrame(
+            [null_row if t is None else full_metrics(t) + extras(t) for t in scrubbed],
+            columns=cols,
+        )
         if lang_model_loader is not None or ppl_model_loader is not None:
             _apply_models(df, scrubbed, lang_model_loader, ppl_model_loader, keys)
         df.insert(0, "scrubbed_text", scrubbed)

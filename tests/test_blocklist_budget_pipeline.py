@@ -328,29 +328,3 @@ def test_blocked_domain_col_null_url_is_false(spark):
         per_cfg.append(got[0])
     # parity across the two configs (the planted row hits no blocked host)
     assert per_cfg[0] == per_cfg[1]
-
-
-def test_budget_materialize_modes_identical_labels(spark):
-    """The three budget materialization policies (recompute /
-    localCheckpoint / persist_parquet) are storage trades ONLY — labels,
-    reasons and kept sets must be bit-identical (round-6 knob,
-    PLANS.md 'Token-budget stage')."""
-    from dataqualitykit_spark.fixtures import pages_dataframe
-
-    df = pages_dataframe(spark, 300)
-    outs = []
-    for mode in ("recompute", "localCheckpoint", "persist_parquet"):
-        cfg = PipelineConfig(token_budget=1500, budget_materialize=mode)
-        outs.append(
-            {
-                (r["url"], r["warc_ts"]): (r["keep"], r["drop_reason"])
-                for r in run_pipeline(df, cfg)
-                .select("url", "warc_ts", "keep", "drop_reason")
-                .collect()
-            }
-        )
-    assert outs[0] == outs[1] == outs[2]
-    assert any(v[1] == "token_budget" for v in outs[0].values())
-
-    with pytest.raises(ValueError, match="budget_materialize"):
-        run_pipeline(df, PipelineConfig(token_budget=1500, budget_materialize="bogus"))

@@ -141,42 +141,6 @@ def test_pipeline_entropy_gate_matches_python_oracle(spark):
     # for the earlier length rule (34 chars < min_chars), NOT low_entropy
     assert got[("https://ent-short.example/p", ts)][1] == "too_short"
 
-    # engine parity: the 'columns' path (interpreted HOF twin) produces
-    # identical labels despite JVM-vs-libm log ulp differences
-    cols_cfg = PipelineConfig(min_token_entropy=2.2, metrics_engine="columns")
-    cols = {
-        (r["url"], r["warc_ts"]): (r["keep"], r["drop_reason"])
-        for r in run_pipeline(df, cols_cfg)
-        .select("url", "warc_ts", "keep", "drop_reason")
-        .collect()
-    }
-    assert cols == {k: v[:2] for k, v in got.items()}
-
-
-def test_token_entropy_col_matches_python_mirror(spark):
-    """JVM HOF twin vs the python mirror: equal to within log-ulp noise,
-    0.0 for token-less text (the scorer's null-extras convention)."""
-    from dataqualitykit_spark.operators.entropy import token_entropy_col
-    from dataqualitykit_spark.semantics import token_entropy_stats
-
-    texts = ["a a b b", "x", "the cat sat on the mat " * 5, "", "  ", None]
-    df = spark.createDataFrame(
-        [(i, t) for i, t in enumerate(texts)], "i long, t string"
-    )
-    got = {
-        r["i"]: r["h"]
-        for r in df.select(
-            "i",
-            F.when(F.col("t").isNull(), F.lit(0.0))
-            .otherwise(token_entropy_col(F.col("t")))
-            .alias("h"),
-        ).collect()
-    }
-    for i, t in enumerate(texts):
-        h = token_entropy_stats(t)[2]
-        expect = 0.0 if h is None else h
-        assert abs(got[i] - expect) < 1e-9, (i, got[i], expect)
-
 
 def test_link_density_everything_linked_page(spark):
     # a pure nav page: all visible text inside anchors -> exactly 1.0

@@ -48,13 +48,19 @@ def test_kill_and_resume_matches_uninterrupted(spark, tmp_path):
     assert _labeled_set(spark, clean_root) == _labeled_set(spark, resumed_root)
 
 
-def test_bucketed_input_written_once_and_pruned(spark, tmp_path):
+@pytest.fixture(scope="module")
+def four_bucket_root(spark, tmp_path_factory):
+    """One uninterrupted 4-bucket run over 200 fixture pages."""
+    root = str(tmp_path_factory.mktemp("four_buckets") / "out")
+    run_resumable(spark, pages_dataframe(spark, 200), root, n_buckets=4)
+    return root
+
+
+def test_bucketed_input_written_once_and_pruned(spark, four_bucket_root):
     """Scale contract: the source is scanned ONCE into a partitioned
     bucketed copy; per-bucket reads partition-prune; the cross-bucket
     dedup join carries no forced broadcast hint."""
-    src = pages_dataframe(spark, 200)
-    root = str(tmp_path / "out")
-    run_resumable(spark, src, root, n_buckets=4)
+    root = four_bucket_root
 
     # partitioned layout on disk, html column projected away
     bdirs = sorted(
@@ -83,6 +89,34 @@ def test_bucketed_input_written_once_and_pruned(spark, tmp_path):
     import dataqualitykit_spark.lineage as L
 
     assert "F.broadcast" not in inspect.getsource(L.run_resumable)
+
+
+def test_metrics_table_matches_labeled_and_manifest(spark, four_bucket_root):
+    """Per bucket, the metrics table's docs sum to the manifest row count
+    and each reason's docs equal that reason's row count in labeled."""
+    from pyspark.sql import functions as F
+
+    root = four_bucket_root
+    manifest = json.load(open(os.path.join(root, "manifest.json")))
+    got = {
+        (r["bucket_id"], r["reason"]): r["docs"]
+        for r in spark.read.parquet(f"{root}/metrics").collect()
+    }
+    want = {
+        (r["bucket_id"], r["reason"]): r["count"]
+        for r in spark.read.parquet(f"{root}/labeled")
+        .groupBy(
+            "bucket_id",
+            F.coalesce(F.col("drop_reason"), F.lit("kept")).alias("reason"),
+        )
+        .count()
+        .collect()
+    }
+    assert got == want
+    assert len({reason for _, reason in got}) > 2
+    for b in range(4):
+        rows = sum(docs for (bucket, _), docs in got.items() if bucket == b)
+        assert rows == manifest[str(b)]["rows"] > 0, b
 
 
 def test_cross_bucket_near_dedup_one_keeper(spark, tmp_path):

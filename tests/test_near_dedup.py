@@ -84,22 +84,6 @@ def test_near_dedup_off_by_default(near_golden):
     assert all(g.drop_reason != "dup_near" for g in golden_default)
 
 
-def test_recompute_materialization_matches_checkpoint(spark, near_labeled):
-    """The 100-TB materialization policy ('recompute': no corpus in the
-    block manager, pairs branch re-scans) must produce identical labels."""
-    cfg = PipelineConfig(
-        dedup_near=True, near_dup_hash="md5", near_dup_materialize="recompute"
-    )
-    rows = run_pipeline(pages_dataframe(spark, N_PAGES), cfg).select(
-        "url", "warc_ts", "keep", "drop_reason"
-    ).collect()
-    got = {(r["url"], r["warc_ts"]): (r["keep"], r["drop_reason"]) for r in rows}
-    want = {
-        k: (v["keep"], v["drop_reason"]) for k, v in near_labeled.items()
-    }
-    assert got == want
-
-
 def test_connected_components_raises_on_max_iter_exhaustion(spark):
     # a 12-edge path needs ~11 propagation rounds; max_iter=2 double-rounds
     # (4 propagation rounds) must fail loudly, never return split labels.

@@ -305,30 +305,6 @@ def test_pipeline_c4_gate_matches_python_oracle(spark):
     assert None in reasons  # punctuated keepers survive the line filter
 
 
-def test_pipeline_repetition_gate_columns_engine_parity(spark):
-    """The 'columns' metrics engine computes the gate fractions via the
-    JVM HOF forms — labels must match the fused-Arrow default exactly."""
-    from dataqualitykit_spark.config import PipelineConfig
-    from dataqualitykit_spark.fixtures import pages_dataframe
-    from dataqualitykit_spark.pipeline import run_pipeline
-
-    kw = dict(max_dup_line_char_frac=0.3, max_dup_5gram_frac=0.3)
-    df = pages_dataframe(spark, 250)
-    got_udf = {
-        r["url"]: (r["keep"], r["drop_reason"])
-        for r in run_pipeline(df, PipelineConfig(**kw))
-        .select("url", "keep", "drop_reason")
-        .collect()
-    }
-    got_cols = {
-        r["url"]: (r["keep"], r["drop_reason"])
-        for r in run_pipeline(df, PipelineConfig(metrics_engine="columns", **kw))
-        .select("url", "keep", "drop_reason")
-        .collect()
-    }
-    assert got_udf == got_cols
-
-
 def test_c4_crlf_lines_survive(spark):
     """CRLF documents: the trailing \\r must not defeat the terminal-
     punctuation test (space-only rtrim would silently empty the whole
@@ -547,32 +523,6 @@ def test_pipeline_line_shape_gate_matches_python_oracle(spark):
     )
     reasons = _pipeline_vs_oracle(spark, generate_pages(400) + planted, cfg)
     assert "line_shape" in reasons, sorted(r for r in reasons if r)
-
-    # engine parity: the 'columns' path produces identical labels
-    from dataqualitykit_spark.fixtures import PAGES_SCHEMA
-    from dataqualitykit_spark.pipeline import run_pipeline
-
-    rows = generate_pages(150) + planted
-    df = spark.createDataFrame(rows, schema=PAGES_SCHEMA)
-    udf_lab = {
-        (r["url"], r["warc_ts"]): (r["keep"], r["drop_reason"])
-        for r in run_pipeline(df, cfg).select(
-            "url", "warc_ts", "keep", "drop_reason"
-        ).collect()
-    }
-    cols_cfg = PipelineConfig(
-        max_bullet_line_frac=R.MAX_BULLET_LINE_FRAC,
-        max_ellipsis_line_frac=R.MAX_ELLIPSIS_LINE_FRAC,
-        min_alpha_word_frac=R.MIN_ALPHA_WORD_FRAC,
-        metrics_engine="columns",
-    )
-    cols_lab = {
-        (r["url"], r["warc_ts"]): (r["keep"], r["drop_reason"])
-        for r in run_pipeline(df, cols_cfg).select(
-            "url", "warc_ts", "keep", "drop_reason"
-        ).collect()
-    }
-    assert udf_lab == cols_lab
 
 
 def test_paragraph_ppl_scrub_goldens(spark):

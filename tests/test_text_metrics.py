@@ -116,21 +116,6 @@ def test_full_metrics_equals_separate_functions():
         assert missing == S.is_missing(t)
 
 
-def test_metrics_engines_agree(spark):
-    """'udf' and 'columns' metric engines produce identical labels."""
-    from dataqualitykit_spark.config import PipelineConfig
-    from dataqualitykit_spark.fixtures import pages_dataframe
-    from dataqualitykit_spark.pipeline import run_pipeline
-
-    df = pages_dataframe(spark, 300)
-    cols = ["url", "warc_ts", "keep", "drop_reason", "scrubbed_text"]
-    a = {tuple(r[c] for c in cols) for r in
-         run_pipeline(df, PipelineConfig(metrics_engine="udf")).select(*cols).collect()}
-    b = {tuple(r[c] for c in cols) for r in
-         run_pipeline(df, PipelineConfig(metrics_engine="columns")).select(*cols).collect()}
-    assert a == b
-
-
 def test_normalize_url_mirror_parity(spark):
     from pyspark.sql import functions as F
 
