@@ -902,54 +902,6 @@ def q_text_quality(spark, sf):
     )
 
 
-def q_pipeline_c4(spark, sf):
-    """Flagship pipeline with cfg.c4_lines (C4-style line rewrite +
-    policy_phrase gate). The corpus transform — '.' appended to every
-    line, a lorem-ipsum first line on every 7th doc — is injected
-    identically by the oracle's text_expr so both sides see the same
-    punctuated input (the raw fixture text has no terminal punctuation)."""
-    from dataqualitykit_spark.config import PipelineConfig
-
-    docs = _t(spark, sf, "documents").withColumn(
-        "text",
-        F.when(F.col("text").isNull(), F.lit(None).cast("string")).otherwise(
-            F.concat(
-                F.when(
-                    F.col("doc_id") % 7 == 0,
-                    F.lit("lorem ipsum dolor sit amet.\n"),
-                ).otherwise(F.lit("")),
-                F.regexp_replace("text", "\n", ".\n"),
-                F.lit("."),
-            )
-        ),
-    )
-    cfg = PipelineConfig(c4_lines=True)
-    return run_pipeline(adapt_documents(docs), cfg).select(
-        "url", "keep", "drop_reason"
-    )
-
-
-def q_pipeline_repetition(spark, sf):
-    """Flagship pipeline with the Gopher repetition gates (0.3/0.3).
-    Every 6th doc's text is doubled (both sides) so dup-5gram mass
-    demonstrably trips the gate."""
-    from dataqualitykit_spark.config import PipelineConfig
-
-    docs = _t(spark, sf, "documents").withColumn(
-        "text",
-        F.when(
-            (F.col("doc_id") % 6 == 0) & F.col("text").isNotNull(),
-            F.concat(F.col("text"), F.lit(" "), F.col("text")),
-        ).otherwise(F.col("text")),
-    )
-    cfg = PipelineConfig(
-        max_dup_line_char_frac=0.3, max_dup_5gram_frac=0.3
-    )
-    return run_pipeline(adapt_documents(docs), cfg).select(
-        "url", "keep", "drop_reason"
-    )
-
-
 # 25-token slogan appended to every 4th doc by BOTH sides of the
 # substring_scrub query: its 20-token windows duplicate corpus-wide, so
 # the first doc keeps them and every later copy is scrubbed
@@ -1220,106 +1172,6 @@ def q_top_fraction_sample(spark, sf):
     return out.select("doc_id", "lang", F.round("qs", 6).alias("qs"))
 
 
-# planted docs for the pipeline_line_shape query — each passes every
-# EARLIER pipeline gate (length, words, mean word length, symbol ratio,
-# distinct lines, repetition) so 'line_shape' is provably the first
-# failing rule; doc_id is baked in so content dedup cannot collapse them
-_LS_BULLET_LINES = (
-    "• the quick brown fox jumps over the lazy dog here",
-    "• a second bullet line with plenty of common words",
-    "• a third bullet line that keeps the list going on",
-)
-_LS_ELLIPSIS_LINES = (
-    "the first teaser line keeps you reading for more...",
-    "a second teaser line with the same trailing promise...",
-    "yet another line that simply never quite finishes…",
-)
-_LS_SOUP = (
-    "12 345 67 890 23 456 78 901 34 567 89 012 45 678 90 123 56 789 01 234 "
-    * 2
-)
-
-
-def q_pipeline_line_shape(spark, sf):
-    """Flagship pipeline with the Gopher line-shape gates ON (paper
-    thresholds 0.9/0.3/0.8): every 6th doc becomes an all-bullet list,
-    doc_id%6==1 an ellipsis teaser page, doc_id%6==2 numeric soup — each
-    planted to pass all earlier gates so drop_reason='line_shape' is the
-    demonstrable first failure; the oracle builds identical text and
-    mirrors the fractions in the decide CTE. 3-way parity like
-    pipeline_c4 (python doc_reasons / Spark fused-scorer flags / SQL)."""
-    from dataqualitykit_spark.config import PipelineConfig
-    from dataqualitykit_spark.operators import repetition as R
-
-    cfg = PipelineConfig(
-        max_bullet_line_frac=R.MAX_BULLET_LINE_FRAC,
-        max_ellipsis_line_frac=R.MAX_ELLIPSIS_LINE_FRAC,
-        min_alpha_word_frac=R.MIN_ALPHA_WORD_FRAC,
-    )
-    docs = _t(spark, sf, "documents")
-    did = F.col("doc_id").cast("string")
-    bullet_doc = F.concat(
-        F.lit("\n".join(_LS_BULLET_LINES) + "\n• unique closing item "), did
-    )
-    ellipsis_doc = F.concat(
-        F.lit("\n".join(_LS_ELLIPSIS_LINES) + "\nthe unique closing teaser "),
-        did,
-        F.lit(" still goes on..."),
-    )
-    soup_doc = F.concat(F.lit(_LS_SOUP), did)
-    planted = (
-        F.when(F.col("doc_id") % 6 == 0, bullet_doc)
-        .when(F.col("doc_id") % 6 == 1, ellipsis_doc)
-        .when(F.col("doc_id") % 6 == 2, soup_doc)
-        .otherwise(F.col("text"))
-    )
-    pages = docs.select(
-        F.concat(F.lit("doc://"), F.col("source"), F.lit("/"), F.col("doc_id")).alias("url"),
-        planted.alias("text"),
-        "lang",
-    )
-    return run_pipeline(pages, cfg).select("url", "keep", "drop_reason")
-
-
-# low-entropy doc planted by the pipeline_entropy query: a 6-word
-# sentence looped 30 times (H ~= 1.59) + a unique closing token so
-# content dedup cannot collapse the plants. Passes every EARLIER gate:
-# 695+ chars, 181 words, mean word len 2.84, zero symbols, ONE line (no
-# repeated_lines), repetition/line_shape gates off in this cfg.
-_ENT_SENTENCE = "the cat sat on the mat "
-_ENT_REPEATS = 30
-_ENT_MIN = 2.2  # natural docs with >= 20 tokens measured H in [2.44, 3.35]
-
-
-def q_pipeline_entropy(spark, sf):
-    """Flagship pipeline with the token-entropy floor ON
-    (min_token_entropy=2.2): every 4th doc becomes small-vocabulary spam
-    (one sentence looped — the keyword-stuffing shape the verbatim
-    repetition gates miss when no LINE or 5-gram repeats verbatim...
-    here it is single-line and the repetition gates are off) planted to
-    pass all earlier gates so drop_reason='low_entropy' is the
-    demonstrable first failure. 3-way parity like pipeline_line_shape
-    (python doc_reasons / Spark fused-scorer extras field / SQL
-    distinct-token fold in the decide CTE)."""
-    from dataqualitykit_spark.config import PipelineConfig
-
-    cfg = PipelineConfig(min_token_entropy=_ENT_MIN)
-    docs = _t(spark, sf, "documents")
-    spam = F.concat(
-        F.lit(_ENT_SENTENCE * _ENT_REPEATS + "d"),
-        F.col("doc_id").cast("string"),
-    )
-    planted = F.when(F.col("doc_id") % 4 == 0, spam).otherwise(F.col("text"))
-    pages = docs.select(
-        F.concat(
-            F.lit("doc://"), F.col("source"), F.lit("/"), F.col("doc_id")
-        ).alias("url"),
-        planted.alias("text"),
-        "lang",
-    )
-    return run_pipeline(pages, cfg).select("url", "keep", "drop_reason")
-
-
 # gibberish paragraph planted by the paragraph_ppl query — uniform-ish
 # rare-bigram letters score ppl ~22-27 vs ~8-14 for English prose
 _PPQ_GIBBERISH = "zxq qvk jxw zzv qqk xjz vqz kxq jzz wvx qkz zzq"
@@ -1552,136 +1404,6 @@ def q_simhash_fast(spark, sf):
 def q_pipeline_full(spark, sf):
     docs = _t(spark, sf, "documents")
     return run_pipeline(adapt_documents(docs)).select("url", "keep", "drop_reason")
-
-
-def q_pipeline_near_dedup(spark, sf):
-    from dataqualitykit_spark.config import PipelineConfig
-
-    cfg = PipelineConfig(dedup_near=True, near_dup_hash="md5")
-    docs = _t(spark, sf, "documents")
-    return run_pipeline(adapt_documents(docs), cfg).select(
-        "url", "keep", "drop_reason"
-    )
-
-
-# banner planted into every third doc by BOTH sides of the
-# pipeline_paragraph_scrub query: it repeats across far more than
-# paragraph_min_repeats urls, so the scrub must strip it everywhere
-_PS_BANNER = "cookie banner please accept cookies to continue"
-
-
-def q_pipeline_paragraph_scrub(spark, sf):
-    """Flagship pipeline with cfg.dedup_paragraphs: the CCNet-style
-    repeated-paragraph scrub rewrites text before the missing check,
-    content-dedup windows and models. A deterministic banner line is
-    prepended to every third doc so the scrub provably fires; the oracle
-    (_pipeline_sql(para_scrub=True)) injects the identical banner and
-    mirrors the scrub in SQL."""
-    from dataqualitykit_spark.config import PipelineConfig
-
-    cfg = PipelineConfig(dedup_paragraphs=True)
-    docs = _t(spark, sf, "documents").withColumn(
-        "text",
-        F.when(
-            F.col("doc_id") % 3 == 0,
-            F.concat(
-                F.lit(_PS_BANNER), F.lit("\n"), F.coalesce("text", F.lit(""))
-            ),
-        ).otherwise(F.col("text")),
-    )
-    return run_pipeline(adapt_documents(docs), cfg).select(
-        "url", "keep", "drop_reason"
-    )
-
-
-# blocklist for the pipeline_blocklist query: one real source domain
-# (blocks src3.example AND its planted sub.src3.example subdomain) plus
-# one entry matching nothing (exercises the no-hit path)
-_BL_DOMAINS = ("src3.example", "blocked.invalid")
-
-
-def q_pipeline_blocklist(spark, sf):
-    """Flagship pipeline with cfg.blocklist as the FIRST gate (VERDICT r4
-    item #4): urls are planted with dotted hosts '{source}.example', every
-    5th doc on a 'sub.' subdomain, so the suffix match demonstrably fires
-    for both the exact host and its subdomains; blocked rows are
-    ineligible for the content window (a blocked mirror never shadows a
-    keepable copy). The oracle mirrors host construction, suffix match,
-    eligibility and the 'blocked_domain'-first decide clause."""
-    from dataqualitykit_spark.config import PipelineConfig
-
-    cfg = PipelineConfig(blocklist=_BL_DOMAINS)
-    docs = _t(spark, sf, "documents")
-    pages = docs.select(
-        F.concat(
-            F.lit("doc://"),
-            F.when(F.col("doc_id") % 5 == 0, F.lit("sub.")).otherwise(F.lit("")),
-            F.col("source"),
-            F.lit(".example/"),
-            F.col("doc_id"),
-        ).alias("url"),
-        "text",
-        "lang",
-    )
-    return run_pipeline(pages, cfg).select("url", "keep", "drop_reason")
-
-
-# planted url keyword lexicon for the pipeline_url_keywords query — one
-# strict word blocks alone, two soft words must co-occur; doc_id%7
-# plants: 0 -> strict hit, 1 -> two soft hits (0.5+0.5 >= 1.0), 2 -> ONE
-# soft hit (0.5 < 1.0 — must SURVIVE the gate), rest -> clean urls
-_KW_WEIGHTS = (("casino", 1.0), ("betting", 0.5), ("pills", 0.5))
-
-
-def q_pipeline_url_keywords(spark, sf):
-    """Flagship pipeline with the RefinedWeb-style soft URL keyword gate
-    (cfg.url_keyword_weights) right after the hard blocklist slot: urls
-    planted with strict/soft/sub-threshold keyword paths show the
-    weighted score blocking at >= 1.0 and sparing the single soft hit;
-    flagged rows are ineligible for the content window and never scored.
-    The oracle mirrors the weighted contains-fold, eligibility and the
-    'url_keywords' decide clause."""
-    from dataqualitykit_spark.config import PipelineConfig
-
-    cfg = PipelineConfig(url_keyword_weights=_KW_WEIGHTS)
-    docs = _t(spark, sf, "documents")
-    path = (
-        F.when(F.col("doc_id") % 7 == 0, F.lit("/casino-night/"))
-        .when(F.col("doc_id") % 7 == 1, F.lit("/betting-pills/"))
-        .when(F.col("doc_id") % 7 == 2, F.lit("/betting-tips/"))
-        .otherwise(F.lit("/"))
-    )
-    pages = docs.select(
-        F.concat(
-            F.lit("doc://"), F.col("source"), path, F.col("doc_id")
-        ).alias("url"),
-        "text",
-        "lang",
-    )
-    return run_pipeline(pages, cfg).select("url", "keep", "drop_reason")
-
-
-# per-lang scrubbed-token budget for the pipeline_token_budget query —
-# sized so the cut fires for the big language groups at sf0.001 AND
-# sf0.01 while small groups stay under budget (both paths exercised)
-_TB_BUDGET = 6000
-
-
-def q_pipeline_token_budget(spark, sf):
-    """Flagship pipeline with cfg.token_budget as the FINAL stage (VERDICT
-    r4 item #4): kept rows beyond each lang group's deterministic
-    (md5(url), url)-ordered ~6k-token prefix flip to keep=false,
-    drop_reason='token_budget'. Spark runs the distributed prefix-sum cut
-    (256-bucket partials + driver prefix + window over only the cutoff
-    bucket); the oracle runs the one-window cumsum it is row-identical
-    to."""
-    from dataqualitykit_spark.config import PipelineConfig
-
-    cfg = PipelineConfig(token_budget=_TB_BUDGET)
-    docs = _t(spark, sf, "documents")
-    return run_pipeline(adapt_documents(docs), cfg).select(
-        "url", "keep", "drop_reason"
-    )
 
 
 def q_lsh_cosine_topk(spark, sf):
@@ -3135,8 +2857,7 @@ def q_ngram_lm(spark, sf):
     the DuckDB twin retrains the identical model (same caps, same
     (count DESC, keys ASC) tie order) and reproduces each token's
     backoff term and the left-fold sum exactly (engine parity prototyped
-    first in scripts/proto_ngram_lm_parity.py — 0 mismatches both sf
-    levels)."""
+    first — 0 mismatches at sf0.001 and sf0.01)."""
     from dataqualitykit_spark.operators import ngram_lm
 
     d = _t(spark, sf, "documents").select("doc_id", "text")
@@ -3176,9 +2897,8 @@ def q_justext(spark, sf):
     operators/justext.py). FULL per-doc value-hash oracle including the
     extracted text: the DuckDB twin re-runs segmentation, block metrics,
     classification and the lag/lead promotion pass over unnested blocks
-    (engine parity prototyped first in scripts/proto_justext_parity.py —
-    0 mismatches). At sf0.001: 105 core-good blocks promote 210
-    neighbors to 315 final-good."""
+    (engine parity prototyped first — 0 mismatches). At sf0.001: 105
+    core-good blocks promote 210 neighbors to 315 final-good."""
     from dataqualitykit_spark.operators import justext
 
     d = _t(spark, sf, "documents")
@@ -3776,7 +3496,7 @@ def q_pii_luhn(spark, sf):
     data-dependent (~17% of docs carry >=1 valid card). FULL byte-level
     oracle: DuckDB re-validates each candidate with a list-HOF Luhn and
     reconstructs the scrubbed text by split+interleave (parity prototyped
-    in scripts/proto_luhn_parity.py — 0 mismatches, byte level)."""
+    first — 0 mismatches, byte level)."""
     from dataqualitykit_spark.operators import pii
 
     d = _t(spark, sf, "documents")
@@ -3839,11 +3559,12 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # the whole near-dup/ANN family, and queries that have never appeared in
     # a driver CORRECTNESS file come first; single-operator rows with two
     # rounds of green driver history are rotated to the back (they remain
-    # fully oracle-checked by scripts/check_correctness.py and pytest).
+    # fully oracle-checked by tests/test_entry_contract.py; set
+    # DQX_TEST_SF_DIR to pick the scale).
     return {
-        # -- flagship pipeline rows (pinned per round-5 VERDICT) ------------
+        # -- flagship pipeline row (pinned per round-5 VERDICT; its opt-in
+        # gates are checked against oracle.run_oracle in pytest) ----------
         "pipeline_full": q_pipeline_full,
-        "pipeline_near_dedup": q_pipeline_near_dedup,
         # -- zero recorded rounds first (ordering contract: a first record
         # outranks any refresh). r6 sessions 1-5 added more new queries
         # than the ~50-row window holds, so ALL 26 zero-record rows sit
@@ -3892,7 +3613,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # -- exactly one green (r05) — confirming second record, in priority
         # order: the 5 ex-rows-only invariant conversions (weak-marked for
         # 4 recordless rounds before r5), the 12 rows round-5 VERDICT item
-        # #1 names, then the flagship pipeline singles. ---------------------
+        # #1 names. ---------------------------------------------------------
         "minhash_lsh_dups_fast": q_minhash_lsh_dups_fast,
         "simhash_fast": q_simhash_fast,
         "ivf_cosine_topk": q_ivf_cosine_topk,
@@ -3910,16 +3631,11 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "crawl_delta": q_crawl_delta,
         "link_density": q_link_density,
         "token_entropy": q_token_entropy,
-        "pipeline_blocklist": q_pipeline_blocklist,
-        "pipeline_token_budget": q_pipeline_token_budget,
-        "pipeline_line_shape": q_pipeline_line_shape,
-        "pipeline_entropy": q_pipeline_entropy,
-        "pipeline_url_keywords": q_pipeline_url_keywords,
         # ------------------------------------------------------------------
         # past the ~50-row recorded window from here down: everything below
-        # remains fully oracle-checked by scripts/check_correctness.py and
-        # pytest every session. First in line for r7 slots: the 15 r5
-        # singles displaced by the zero-record block (top_fraction_sample
+        # remains fully oracle-checked by tests/test_entry_contract.py.
+        # First in line for r7 slots: the 15 r5 singles displaced by the
+        # zero-record block (top_fraction_sample
         # hash_split noindex_flag gopher_line_rules paragraph_ppl
         # domain_reputation mojibake_fix domain_boilerplate dedup_keep_best
         # score_buckets dsir_weights nb_lang_classifier gumbel_sample
@@ -3949,9 +3665,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "neighborhood_dev": q_neighborhood_dev,
         "segment_stats": q_segment_stats,
         "embed_cosine_topk": q_embed_cosine_topk,
-        "pipeline_paragraph_scrub": q_pipeline_paragraph_scrub,
-        "pipeline_c4": q_pipeline_c4,
-        "pipeline_repetition": q_pipeline_repetition,
         "substring_scrub": q_substring_scrub,
         "gopher_repetition": q_gopher_repetition,
         "c4_line_filter": q_c4_line_filter,
@@ -4168,284 +3881,41 @@ def _ppl_sql(seq: str) -> str:
        END"""
 
 
-def _pipeline_sql(
-    near_dedup: bool = False,
-    final_select: str | None = None,
-    para_scrub: bool = False,
-    text_expr: str | None = None,
-    c4_lines: bool = False,
-    repetition: tuple[float, float] | None = None,
-    url_expr: str | None = None,
-    blocklist: tuple[str, ...] | None = None,
-    token_budget: int | None = None,
-    line_shape: tuple[float, float, float] | None = None,
-    entropy: tuple[float, int] | None = None,
-    url_keywords: tuple[tuple[str, float], ...] | None = None,
-    url_keyword_threshold: float = 1.0,
-) -> str:
-    """Full-pipeline oracle: content dedup -> [near-dup dedup via
-    md5-MinHash-LSH pairs + recursive-CTE connected components] -> scrub
+def _pipeline_sql(final_select: str | None = None) -> str:
+    """Full-pipeline oracle at the default config: content dedup -> scrub
     -> metrics -> langid/perplexity -> priority-ordered decide, mirroring
     run_pipeline over adapt_documents(documents) (no warc_ts column ->
     no url window). `final_select` overrides the last SELECT (it reads
-    from the `decided` CTE) — used by the per-domain report oracle.
-
-    para_scrub=True mirrors cfg.dedup_paragraphs: a planted banner line
-    (q_pipeline_paragraph_scrub injects the same one) plus any naturally
-    repeated paragraph (>= paragraph_min_repeats distinct urls, space-trim
-    nonempty — F.trim is space-only) is removed from every doc BEFORE the
-    missing check, content hash and models. DuckDB array_to_string over an
-    empty list is NULL where Spark array_join gives '' — hence the
-    coalesce (boilerplate-only docs must become '' -> missing_text).
-
-    text_expr replaces `text` in the first CTE (a SQL expression over
-    (text, doc_id) — the queries' deterministic corpus transforms, e.g.
-    punctuation injection for the c4 leg). c4_lines mirrors cfg.c4_lines
-    (kept-lines rewrite in base + policy_phrase decide clause).
-    repetition=(max_dup_line_char_frac, max_dup_5gram_frac) mirrors the
-    Gopher gates. url_expr overrides the url construction in base0 (the
-    blocklist query plants dotted hosts). blocklist mirrors cfg.blocklist:
-    host = the doc:// authority; blocked when it equals an entry or ends
-    with '.'+entry — FIRST decide clause, and blocked rows are ineligible
-    for the content window (ORDER BY eligible DESC). token_budget mirrors
-    cfg.token_budget with the ONE-WINDOW cumsum form the distributed
-    prefix-sum cut is row-identical to (budget_by='lang' via a documents
-    join on the reconstructed url). Stage order matches run_pipeline:
-    text_expr -> c4 -> paragraph scrub -> blocklist flag -> missing/hash/
-    dedup -> scrub -> metrics -> decide -> budget cut."""
+    from the `decided` CTE) — used by the per-domain report, reputation
+    and dataset-card oracles. The opt-in gates are checked row by row
+    against oracle.run_oracle in the pytest suite."""
     from dataqualitykit_spark.config import DEFAULT_CONFIG as C
 
     hits, lang_case, conf = _langid_cols("toks", "s")
     scrub = _sql_scrub("text")
     m_raw = _sql_missing("text")
     m_s = _sql_missing("s")
-
-    near_ctes = ""
-    if near_dedup:
-        idx_cols = ", ".join(f"toks[i+{j}]" for j in range(3))
-        slots = ", ".join(f"sig[4*b+{r + 1}]" for r in range(4))
-        near_ctes = f""" surv AS (
-  SELECT url, text FROM ded
-  WHERE NOT missing_raw AND NOT blocked AND NOT kw_blocked
-        AND NOT dup_content
-), ndtok AS (
-  SELECT url, {_sql_tokens('lower(text)')} AS toks FROM surv
-), ndsh AS (
-  SELECT url,
-         CASE WHEN len(toks) < 3 THEN [concat_ws(' ', toks)]
-              ELSE [concat_ws(' ', {idx_cols})
-                    for i in generate_series(1, len(toks) - 2)]
-         END AS shingles
-  FROM ndtok
-), ndsig AS (
-  SELECT url,
-         [list_min(list_transform(list_distinct(shingles),
-              s -> md5(concat(CAST(i AS VARCHAR), '|', s))))
-          for i in generate_series(0, 31)] AS sig
-  FROM ndsh
-), ndband AS (
-  SELECT url, b, md5(concat_ws('|', {slots})) AS bucket
-  FROM ndsig CROSS JOIN (SELECT unnest(generate_series(0, 7)) AS b)
-), ndpairs AS (
-  SELECT id_a, id_b FROM (
-    SELECT DISTINCT a.url AS id_a, c.url AS id_b
-    FROM ndband a
-    JOIN ndband c ON a.b = c.b AND a.bucket = c.bucket AND a.url < c.url
-  ) cand
-  JOIN ndsig sa ON sa.url = cand.id_a
-  JOIN ndsig sb ON sb.url = cand.id_b
-  WHERE len(list_filter(generate_series(1, 32), i -> sa.sig[i] = sb.sig[i]))
-        / 32.0 >= {C.near_dup_threshold}
-), edges AS (
-  SELECT id_a AS src, id_b AS dst FROM ndpairs
-  UNION SELECT id_b, id_a FROM ndpairs
-), reach(id, r) AS (
-  SELECT DISTINCT src, src FROM edges
-  UNION
-  SELECT reach.id, e.dst FROM reach JOIN edges e ON e.src = reach.r
-), noncanon AS (
-  SELECT id AS url FROM reach GROUP BY id HAVING min(r) <> id
-),"""
-    dup_near_col = (
-        "(noncanon.url IS NOT NULL) AS dup_near FROM ded LEFT JOIN noncanon USING (url)"
-        if near_dedup
-        else "FALSE AS dup_near FROM ded"
-    )
-    txt0 = text_expr or "text"
-    url0 = url_expr or "concat('doc://', source, '/', doc_id)"
-    base_ctes = f"""base0 AS (
-  SELECT {url0} AS url, {txt0} AS text
-  FROM documents
-)"""
-    cur = "base0"
-    if c4_lines:
-        from dataqualitykit_spark.operators import c4_filter as C4
-
-        ends = " OR ".join(
-            f"ends_with(trim(ln, {_sql_lit(C4.LINE_TRIM_CHARS)}), {_sql_lit(p)})" for p in C4.TERMINAL_PUNCT
-        )
-        bans = " OR ".join(
-            f"contains(lower(ln), {_sql_lit(ph)})" for ph in C4.LINE_BAN_PHRASES
-        )
-        ok = (
-            f"(({ends}) AND len({_sql_tokens('ln')}) >= "
-            f"{C.c4_min_words_per_line} AND NOT ({bans}))"
-        )
-        base_ctes += f""", basec4 AS (
-  SELECT url,
-         CASE WHEN text IS NULL THEN NULL
-              ELSE coalesce(array_to_string(
-                     list_filter(string_split(text, chr(10)), ln -> {ok}),
-                     chr(10)), '') END AS text
-  FROM {cur}
-)"""
-        cur = "basec4"
-    if para_scrub:
-        base_ctes += f""", psrep AS (
-  SELECT para FROM (
-    SELECT url, unnest(string_split(text, chr(10))) AS para FROM {cur}
-  ) x WHERE trim(para, ' ') <> ''
-  GROUP BY para HAVING count(DISTINCT url) >= {C.paragraph_min_repeats}
-), psbad AS (
-  SELECT coalesce(list(para), []) AS bad FROM psrep
-), base1 AS (
-  SELECT url,
-         CASE WHEN text IS NULL THEN NULL
-              ELSE coalesce(array_to_string(
-                     list_filter(string_split(text, chr(10)),
-                                 p -> NOT list_contains(bad, p)),
-                     chr(10)), '') END AS text
-  FROM {cur} CROSS JOIN psbad
-)"""
-        cur = "base1"
-    if blocklist:
-        host = "lower(regexp_extract(url, '^doc://([^/]+)/', 1))"
-        blocked_sql = " OR ".join(
-            f"({host} = {_sql_lit(e.lower())} OR "
-            f"ends_with({host}, {_sql_lit('.' + e.lower())}))"
-            for e in blocklist
-        )
-    else:
-        blocked_sql = "FALSE"
-    if url_keywords:
-        # mirrors operators/url_filter.url_keyword_score_col: weighted
-        # contains-fold over the lowercased url (fold order irrelevant at
-        # the threshold compare — weights are small exact binary floats)
-        kw_score = " + ".join(
-            f"(CASE WHEN contains(lower(url), {_sql_lit(w.lower())})"
-            f" THEN CAST({float(wt)!r} AS DOUBLE) ELSE 0.0 END)"
-            for w, wt in url_keywords
-        )
-        kw_sql = f"({kw_score}) >= {float(url_keyword_threshold)!r}"
-    else:
-        kw_sql = "FALSE"
-    base_ctes += f""", base AS (
-  SELECT url, text, {m_raw} AS missing_raw,
-         ({blocked_sql}) AS blocked,
-         ({kw_sql}) AS kw_blocked,
-         md5(coalesce(text, '')) AS chash
-  FROM {cur}
-)"""
-
-    # opt-in Gopher repetition + C4 policy gates (scrubbed-text metrics
-    # in met2, decide clauses at the pipeline's exact priority slots)
-    extra_met2, rep_when, policy_when = "", "", ""
-    if repetition is not None:
-        mx_dlcf, mx_d5g = repetition
-        line_chars = "list_sum(list_transform(nlines, l -> length(l)))"
-        dup_chars = (
-            "list_sum(list_transform(list_filter(nlines, "
-            "l -> len(list_filter(nlines, x -> x = l)) >= 2), "
-            "l -> length(l)))"
-        )
-        g5 = "concat_ws(' ', toks[i], toks[i+1], toks[i+2], toks[i+3], toks[i+4])"
-        g5_list = (
-            f"CASE WHEN len(toks) < 5 THEN [concat_ws(' ', toks)] "
-            f"ELSE [{g5} for i in generate_series(1, len(toks) - 4)] END"
-        )
-        extra_met2 += f""",
-         CASE WHEN coalesce({line_chars}, 0) > 0
-              THEN coalesce({dup_chars}, 0) / CAST({line_chars} AS DOUBLE)
-              ELSE 0.0 END AS dlcf,
-         CASE WHEN len({g5_list}) > 0
-              THEN (len({g5_list}) - len(list_distinct({g5_list})))
-                   / CAST(len({g5_list}) AS DOUBLE)
-              ELSE 0.0 END AS d5g"""
-        rep_when = f"WHEN dlcf > {mx_dlcf} OR d5g > {mx_d5g} THEN 'repetition'\n           "
-    line_when = ""
-    if line_shape is not None:
-        from dataqualitykit_spark.operators import repetition as _R
-
-        mx_bullet, mx_ellip, mn_alpha = line_shape
-        bullets = " OR ".join(
-            f"starts_with(ltrim(l), {_sql_lit(p)})" for p in _R.BULLET_PREFIXES
-        )
-        ellips = " OR ".join(
-            f"ends_with(trim(l, e' \\t\\r\\x0B\\f'), {_sql_lit(sfx)})"
-            for sfx in _R.ELLIPSIS_SUFFIXES
-        )
-        extra_met2 += f""",
-         len(list_filter(nlines, l -> {bullets})) AS ls_bullet,
-         len(list_filter(nlines, l -> {ellips})) AS ls_ellip,
-         len(list_filter(toks, w -> regexp_matches(w, '[A-Za-z]')))
-           AS ls_alpha"""
-        line_when = (
-            f"WHEN (n_lines > 0 AND ls_bullet / CAST(n_lines AS DOUBLE)"
-            f" > {mx_bullet})\n"
-            f"                OR (n_lines > 0 AND ls_ellip /"
-            f" CAST(n_lines AS DOUBLE) > {mx_ellip})\n"
-            f"                OR ((CASE WHEN nw > 0 THEN ls_alpha /"
-            f" CAST(nw AS DOUBLE) ELSE 0.0 END) < {mn_alpha})"
-            f" THEN 'line_shape'\n           "
-        )
-    entropy_when = ""
-    if entropy is not None:
-        # tok_entropy mirrors semantics.token_entropy_of: H = ln(n) -
-        # sum(c ln c)/n over first-occurrence-ordered distinct tokens
-        # (list_distinct preserves order like Counter insertion order —
-        # and the decide thresholds sit far from any ulp boundary anyway)
-        mn_h, mn_w = entropy
-        cnt = "len(list_filter(toks, x -> x = w))"
-        extra_met2 += f""",
-         CASE WHEN len(toks) = 0 THEN 0.0
-              ELSE ln(len(toks))
-                   - list_sum(list_transform(list_distinct(toks),
-                       w -> {cnt} * ln({cnt})))
-                     / len(toks) END AS tok_entropy"""
-        entropy_when = (
-            f"WHEN nw >= {mn_w} AND tok_entropy < {mn_h}"
-            f" THEN 'low_entropy'\n           "
-        )
-    if c4_lines:
-        from dataqualitykit_spark.operators import c4_filter as C4
-
-        doc_ban = " OR ".join(
-            f"contains(lower(s), {_sql_lit(ph)})" for ph in C4.DOC_BAN_PHRASES
-        )
-        extra_met2 += f",\n         ({doc_ban}) AS policy_ban"
-        policy_when = "WHEN policy_ban THEN 'policy_phrase'\n           "
     return f"""
-WITH RECURSIVE {base_ctes}, ded AS (
-  SELECT url, text, missing_raw, blocked, kw_blocked,
-         (NOT missing_raw AND NOT blocked AND NOT kw_blocked)
+WITH base AS (
+  SELECT concat('doc://', source, '/', doc_id) AS url, text,
+         {m_raw} AS missing_raw,
+         md5(coalesce(text, '')) AS chash
+  FROM documents
+), ded AS (
+  SELECT url, text, missing_raw,
+         NOT missing_raw
            AND row_number() OVER (
             PARTITION BY chash
-            ORDER BY (NOT missing_raw AND NOT blocked AND NOT kw_blocked)
-                     DESC, url ASC) > 1
+            ORDER BY (NOT missing_raw) DESC, url ASC) > 1
            AS dup_content
   FROM base
-),{near_ctes} ded2 AS (
-  SELECT ded.url, ded.text, ded.missing_raw, ded.blocked, ded.kw_blocked,
-         ded.dup_content,
-         {dup_near_col}
 ), scr AS (
-  SELECT url, missing_raw, blocked, kw_blocked, dup_content, dup_near,
-         CASE WHEN NOT missing_raw AND NOT blocked AND NOT kw_blocked
-                   AND NOT dup_content AND NOT dup_near
+  SELECT url, missing_raw, dup_content,
+         CASE WHEN NOT missing_raw AND NOT dup_content
               THEN {scrub} END AS s
-  FROM ded2
+  FROM ded
 ), met AS (
-  SELECT url, missing_raw, blocked, kw_blocked, dup_content, dup_near, s,
+  SELECT url, missing_raw, dup_content, s,
          {m_s} AS s_missing,
          length(s) AS n_chars,
          {_sql_tokens('s')} AS toks,
@@ -4459,7 +3929,7 @@ WITH RECURSIVE {base_ctes}, ded AS (
                              {_SQL_WS}, ' ', 'g'), ' ') AS seq
   FROM scr
 ), met2 AS (
-  SELECT url, missing_raw, blocked, kw_blocked, dup_content, dup_near,
+  SELECT url, missing_raw, dup_content,
          s_missing, n_chars,
          symbol_count, bp_hits, seq,
          len(toks) AS nw,
@@ -4469,7 +3939,7 @@ WITH RECURSIVE {base_ctes}, ded AS (
          len(list_filter(toks, x -> list_contains([{_stopword_sql_list()}], lower(x))))
            AS sw_hits,
          len(nlines) AS n_lines,
-         len(list_distinct(nlines)) AS n_distinct_lines{extra_met2},
+         len(list_distinct(nlines)) AS n_distinct_lines,
          {hits}
   FROM met
 ), met3 AS (
@@ -4481,11 +3951,8 @@ WITH RECURSIVE {base_ctes}, ded AS (
 ), decided AS (
   SELECT url, lang_pred, nw,
          CASE
-           WHEN blocked THEN 'blocked_domain'
-           WHEN kw_blocked THEN 'url_keywords'
            WHEN missing_raw THEN 'missing_text'
            WHEN dup_content THEN 'dup_content'
-           WHEN dup_near THEN 'dup_near'
            WHEN s_missing THEN 'missing_text'
            WHEN n_chars < {C.min_chars} THEN 'too_short'
            WHEN n_chars > {C.max_chars} THEN 'too_long'
@@ -4498,8 +3965,8 @@ WITH RECURSIVE {base_ctes}, ded AS (
            WHEN n_lines >= {C.min_lines_for_ratio}
                 AND n_distinct_lines / CAST(n_lines AS DOUBLE)
                     < {C.min_distinct_line_ratio} THEN 'repeated_lines'
-           {rep_when}{line_when}{entropy_when}WHEN bp_hits >= {C.max_boilerplate_hits} THEN 'boilerplate'
-           {policy_when}WHEN nw > 0 AND (sw_hits < {C.min_stopword_hits}
+           WHEN bp_hits >= {C.max_boilerplate_hits} THEN 'boilerplate'
+           WHEN nw > 0 AND (sw_hits < {C.min_stopword_hits}
                 OR sw_hits / CAST(greatest(nw, 1) AS DOUBLE)
                    < {C.min_stopword_density}) THEN 'stopword_density'
            WHEN lang_pred NOT IN ({', '.join(_sql_lit(lang) for lang in C.allowed_langs)})
@@ -4507,33 +3974,8 @@ WITH RECURSIVE {base_ctes}, ded AS (
            WHEN ppl > {C.max_perplexity} THEN 'perplexity'
          END AS drop_reason
   FROM met3
-){_budget_ctes(url0, token_budget)}
-{final_select or ("SELECT url, drop_reason, drop_reason IS NULL AS keep FROM tbfinal" if token_budget is not None else "SELECT url, drop_reason, drop_reason IS NULL AS keep FROM decided")}"""
-
-
-def _budget_ctes(url0: str, token_budget: int | None) -> str:
-    """Token-budget tail CTEs: the ONE-WINDOW cumsum form (per lang, the
-    pipeline's budget_by default) the distributed prefix-sum cut is
-    row-identical to. Kept rows past the cumulative nw > budget line flip
-    to drop_reason='token_budget'."""
-    if token_budget is None:
-        return ""
-    return f""", docmap AS (
-  SELECT {url0} AS url, lang FROM documents
-), keptb AS (
-  SELECT d.url, d.nw, dm.lang FROM decided d JOIN docmap dm USING (url)
-  WHERE d.drop_reason IS NULL
-), tb AS (
-  SELECT url,
-         sum(nw) OVER (PARTITION BY lang ORDER BY md5(url) ASC, url ASC
-                       ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum
-  FROM keptb
-), tbfinal AS (
-  SELECT d.url,
-         CASE WHEN d.drop_reason IS NULL AND tb.cum > {token_budget}
-              THEN 'token_budget' ELSE d.drop_reason END AS drop_reason
-  FROM decided d LEFT JOIN tb USING (url)
-)"""
+)
+{final_select or "SELECT url, drop_reason, drop_reason IS NULL AS keep FROM decided"}"""
 
 
 def _sign_bucket_expr(b: int, rpb: int, seed: int, dim: int) -> str:
@@ -4793,8 +4235,6 @@ def _noindex_sql() -> str:
 
 
 def oracle_sql() -> dict[str, str]:
-    from dataqualitykit_spark.config import DEFAULT_CONFIG as _DC
-
     m_text = _sql_missing("text")
     sw = _stopword_sql_list()
     d = {
@@ -5562,82 +5002,6 @@ def oracle_sql() -> dict[str, str]:
     d["minhash_lsh_dups"] = _minhash_sql()
     d["simhash"] = _simhash_sql()
     d["pipeline_full"] = _pipeline_sql()
-    d["pipeline_near_dedup"] = _pipeline_sql(near_dedup=True)
-    d["pipeline_blocklist"] = _pipeline_sql(
-        url_expr=(
-            "concat('doc://', CASE WHEN doc_id % 5 = 0 THEN 'sub.' "
-            "ELSE '' END, source, '.example/', doc_id)"
-        ),
-        blocklist=_BL_DOMAINS,
-    )
-    d["pipeline_token_budget"] = _pipeline_sql(token_budget=_TB_BUDGET)
-    from dataqualitykit_spark.operators import repetition as _Rr
-
-    _ls_bullet_sql = _sql_lit("\n".join(_LS_BULLET_LINES) + "\n• unique closing item ")
-    _ls_ellipsis_sql = _sql_lit(
-        "\n".join(_LS_ELLIPSIS_LINES) + "\nthe unique closing teaser "
-    )
-    d["pipeline_line_shape"] = _pipeline_sql(
-        text_expr=(
-            "CASE WHEN doc_id % 6 = 0 THEN "
-            f"concat({_ls_bullet_sql}, CAST(doc_id AS VARCHAR)) "
-            "WHEN doc_id % 6 = 1 THEN "
-            f"concat({_ls_ellipsis_sql}, CAST(doc_id AS VARCHAR), "
-            f"{_sql_lit(' still goes on...')}) "
-            "WHEN doc_id % 6 = 2 THEN "
-            f"concat({_sql_lit(_LS_SOUP)}, CAST(doc_id AS VARCHAR)) "
-            "ELSE text END"
-        ),
-        line_shape=(
-            _Rr.MAX_BULLET_LINE_FRAC,
-            _Rr.MAX_ELLIPSIS_LINE_FRAC,
-            _Rr.MIN_ALPHA_WORD_FRAC,
-        ),
-    )
-    d["pipeline_url_keywords"] = _pipeline_sql(
-        url_expr=(
-            "concat('doc://', source, "
-            "CASE WHEN doc_id % 7 = 0 THEN '/casino-night/' "
-            "WHEN doc_id % 7 = 1 THEN '/betting-pills/' "
-            "WHEN doc_id % 7 = 2 THEN '/betting-tips/' "
-            "ELSE '/' END, doc_id)"
-        ),
-        url_keywords=_KW_WEIGHTS,
-    )
-    d["pipeline_entropy"] = _pipeline_sql(
-        text_expr=(
-            f"CASE WHEN doc_id % 4 = 0 THEN "
-            f"concat({_sql_lit(_ENT_SENTENCE * _ENT_REPEATS + 'd')}, "
-            f"CAST(doc_id AS VARCHAR)) ELSE text END"
-        ),
-        entropy=(_ENT_MIN, _DC.entropy_min_words),
-    )
-    d["pipeline_paragraph_scrub"] = _pipeline_sql(
-        para_scrub=True,
-        text_expr=(
-            f"CASE WHEN doc_id % 3 = 0 "
-            f"THEN concat({_sql_lit(_PS_BANNER)}, chr(10), coalesce(text, '')) "
-            f"ELSE text END"
-        ),
-    )
-    d["pipeline_c4"] = _pipeline_sql(
-        c4_lines=True,
-        # punctuation injection: fixture corpora have no terminal
-        # punctuation, so the query side applies the IDENTICAL transform
-        text_expr=(
-            "CASE WHEN text IS NULL THEN NULL ELSE "
-            "CASE WHEN doc_id % 7 = 0 "
-            "THEN 'lorem ipsum dolor sit amet.' || chr(10) ELSE '' END "
-            "|| replace(text, chr(10), '.' || chr(10)) || '.' END"
-        ),
-    )
-    d["pipeline_repetition"] = _pipeline_sql(
-        repetition=(0.3, 0.3),
-        text_expr=(
-            "CASE WHEN doc_id % 6 = 0 AND text IS NOT NULL "
-            "THEN text || ' ' || text ELSE text END"
-        ),
-    )
     d["html_extract"] = _html_extract_sql()
     d["substring_scrub"] = f"""
         WITH t AS (

@@ -2,11 +2,13 @@
 from checkpoint with per-partition lineage + metrics").
 
 The input is split into B deterministic url-hash buckets
-(pmod(xxhash64(url), B) — the same salted key that defuses domain skew)
-in ONE pass: the bucketed input is written once, partitioned by _bucket,
-and every per-bucket read afterwards partition-prunes to a single
-directory. (Round 1 filtered the original source per bucket — B full
-input scans; at 100 TB with B=8 that is 800 TB of read.)
+(pmod(xxhash64(url), B) — the same salted key that defuses domain skew;
+the url window's key normalize_url(url) under cfg.normalize_urls, so
+mirrors of one page share a bucket and its url window) in ONE pass: the
+bucketed input is written once, partitioned by _bucket, and every
+per-bucket read afterwards partition-prunes to a single directory.
+(Round 1 filtered the original source per bucket — B full input scans;
+at 100 TB with B=8 that is 800 TB of read.)
 
 Each bucket is processed and appended to the output table, then its id is
 recorded in a JSON manifest. A restart skips completed buckets, so a run
@@ -48,6 +50,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .config import DEFAULT_CONFIG, PipelineConfig
+from .functions import text as T
 from .pipeline import quality_metrics, run_pipeline
 from .sources import TableIO
 
@@ -109,24 +112,43 @@ def run_resumable(
     # _bucket, then every per-bucket read below prunes to one partition
     # directory (PartitionFilters on _bucket). The marker file makes the
     # stage idempotent across restarts — a resume never re-scans the
-    # source, matching the north rule's "resumable mid-table".
+    # source, matching the north rule's "resumable mid-table". It records
+    # how the rows were bucketed: a resume that would bucket differently
+    # would loop over buckets the stored input does not have, so it is
+    # refused before anything is written.
     bucketed_path = io._path("bucketed")
     marker = os.path.join(out_root, "_bucketed_done")
-    if not os.path.exists(marker):
+    bucketing = {
+        "n_buckets": n_buckets,
+        "bucket_key": "normalize_url" if cfg.normalize_urls else "url",
+    }
+    if os.path.exists(marker):
+        with open(marker) as f:
+            stored = json.load(f)
+        if stored != bucketing:
+            raise ValueError(
+                f"run_resumable: {out_root} was bucketed as {stored}, this "
+                f"call asks for {bucketing} — resume with the original "
+                "n_buckets/normalize_urls or restart with a fresh out_root"
+            )
+    else:
+        # bucket on the url window's key, so every row one url window
+        # compares lands in the same bucket
+        key = T.normalize_url(F.col("url")) if cfg.normalize_urls else F.col("url")
         # project the pipeline's columns only — never rewrite `html`
         # page bytes into the bucketed copy
         keep = [c for c in ("url", "warc_ts", "text", "lang") if c in source.columns]
         (
             source.select(*keep)
             .withColumn(
-                "_bucket", F.pmod(F.xxhash64("url"), F.lit(n_buckets)).cast("int")
+                "_bucket", F.pmod(F.xxhash64(key), F.lit(n_buckets)).cast("int")
             )
             .write.mode("overwrite")
             .partitionBy("_bucket")
             .parquet(bucketed_path)
         )
         with open(marker, "w") as f:
-            f.write("ok")
+            json.dump(bucketing, f)
     bucketed = spark.read.parquet(bucketed_path)
 
     processed = 0
@@ -209,8 +231,8 @@ def run_resumable(
             # whose md5 IS content_md5 (pipeline.py captures _orig_text
             # after both scrubs), so no re-scrub and no (url, md5)
             # recovery join against the bucket input is needed — that
-            # path was measured at 11.6% of the bucket pass
-            # (scripts/microbench_lineage_scrub.py, PLANS.md round 6).
+            # path was measured at 11.6% of a 25k-doc bucket pass
+            # (1.03 s of 8.86 s; PLANS.md round 6).
             texts = (
                 labeled.filter(participant)
                 .select("url", F.col("_prescrub_text").alias("text"))

@@ -916,7 +916,7 @@ def simhash64(
     hand whole batches to native code). Round-7 A/B on the bench leg
     (200k docs, local[32], min-of-3): HOF vote 3.65 s -> this 1.0 s; the
     explode + 64-compiled-sum aggregate remains the slowest shape at
-    8.0 s (scripts/microbench_votes.py) and survives only as the
+    8.0 s (same corpus and cores) and survives only as the
     simhash64_agg parity twin. Word STRING hashing stays in the JVM; the
     k-adjacent combine replays Spark's xxhash64 chain in vectorized
     numpy (bit-exact — the parity twin and the python-vote test pin the
@@ -969,8 +969,8 @@ def simhash64_agg(
     of the single-pass array<int>[64] HOF accumulator — a different
     physical plan over the same shingle hashes. Used by the `simhash_fast`
     driver parity query (any divergence = a bug in one path). NOT the
-    production path: this is exactly the explode+sum shape
-    scripts/microbench_votes.py measured at 2.2x the HOF vote, kept here
+    production path: this is exactly the explode+sum shape that
+    measured 2.2x the HOF vote (200k docs, local[32]), kept here
     because a *check* wants plan diversity, not speed. Docs with NULL
     text produce no row (production emits a NULL simhash) — the parity
     join treats absent-vs-NULL as agreement."""

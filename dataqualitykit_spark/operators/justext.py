@@ -23,8 +23,9 @@ The python mirror below IS the executor code (shared semantics, the
 paragraph_ppl_scrub precedent), and the DuckDB oracle in
 __spark_entry__ reproduces segmentation, metrics (rounded 1e-6 before
 threshold compare, both sides), classification and promotion with
-window functions over unnested blocks — engine parity prototyped first
-in scripts/proto_justext_parity.py (0 mismatches at sf0.001/sf0.01).
+window functions over unnested blocks — engine parity was prototyped
+first (0 mismatches at sf0.001/sf0.01) and is now pinned by the
+`justext_extract` driver oracle.
 
 Reference parity: DataQualityKit has no HTML handling at all; this
 extends the html_to_text leg (functions/text.py:119) the input_hint's

@@ -34,8 +34,9 @@ pass, zero shuffle.
 Tokenization is ``[A-Za-z]+`` runs lowercased AFTER extraction — the
 ASCII-only lowercase dodges unicode ``lower()`` divergence between
 engines, which is what makes the FULL value-hash DuckDB oracle possible
-(prototyped engine-parity-first in scripts/proto_ngram_lm_parity.py:
-0 mismatches at sf0.001/sf0.01 including forced cap pressure).
+(prototyped engine-parity-first: 0 mismatches at sf0.001/sf0.01
+including forced cap pressure; now pinned by the `ngram_lm_score`
+driver oracle).
 
 Scoring term per token at position i (0-based), mirrored EXACTLY (same
 expression shapes, same left-fold order, shared floor(x*1e6+0.5)/1e6

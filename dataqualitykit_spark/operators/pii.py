@@ -19,9 +19,9 @@ Scale shape: per-document decision, ONE Arrow batch pass, zero shuffle.
 The DuckDB oracle reproduces the FULL byte-level scrub: RE2 splits the
 text on the candidate regex (parts = non-match segments), validates each
 candidate with a list-HOF Luhn, and re-interleaves parts with
-(valid ? '<CC>' : candidate) — engine parity prototyped first in
-scripts/proto_luhn_parity.py (0 mismatches at sf0.001/sf0.01, byte
-level, including 40-digit runs that exceed the length cap).
+(valid ? '<CC>' : candidate) — engine parity prototyped first (0
+mismatches at sf0.001/sf0.01, byte level, including 40-digit runs that
+exceed the length cap) and now pinned by the `pii_luhn` driver oracle.
 
 Reference parity: extends QualityControl.py's format-consistency checks
 (regex-only) with checksum validation the reference lacks.

@@ -789,9 +789,10 @@ def semantic_dedup(
     boundary is compared whenever either member's second cell is the
     other's first. Cost is linear: each row is replicated n_assign times
     before blocking, so the pair join grows ~n_assign^2 in the worst
-    case but in practice ~2x at n_assign=2 (measured sweep in
-    BENCH/BASELINE.md); a pair sharing SEVERAL cells emits duplicate
-    edges, which connected_components' min() aggregation absorbs.
+    case but in practice ~2x at n_assign=2 (measured on sf0.1
+    embeddings plus 10% planted copies); a pair sharing SEVERAL cells
+    emits duplicate edges, which connected_components' min() aggregation
+    absorbs.
 
     100 TB shape: assignment is a projection. `n_cells=None` scales the
     cell count with the corpus — ceil(sqrt(N)), clamped to [16, 4096] —

@@ -1,8 +1,9 @@
 """Round-5 pipeline stages (VERDICT r4 item #4): cfg.blocklist as the
 FIRST gate and cfg.token_budget as the FINAL stage, each verified by
-Spark-vs-pure-python-oracle parity on the pages fixture (the same 3-way
-scheme as pipeline_c4 — the SQL leg lives in __spark_entry__'s
-pipeline_blocklist / pipeline_token_budget driver oracles)."""
+Spark-vs-pure-python-oracle parity (oracle.run_oracle) on the pages
+fixture. The per-doc host match and budget cut are also checked
+independently of the pipeline by the `domain_blocklist` and
+`token_budget_sample` driver oracles."""
 
 from __future__ import annotations
 
@@ -254,6 +255,9 @@ def test_url_keyword_score_col_matches_python_mirror(spark):
     }
     for i, u in enumerate(urls):
         assert got[i] == url_keyword_score(u, URL_KEYWORD_WEIGHTS), (i, u)
+    # hand-computed goldens: strict casino; soft poker + betting; soft
+    # pills + adult across host and path, case-folded; no hit; NULL
+    assert [got[i] for i in range(len(urls))] == [1.0, 1.0, 1.0, 0.0, 0.0]
 
 
 def test_url_keyword_and_entropy_gates_add_no_exchanges(spark):

@@ -119,6 +119,69 @@ def test_metrics_table_matches_labeled_and_manifest(spark, four_bucket_root):
         assert rows == manifest[str(b)]["rows"] > 0, b
 
 
+def _reason_counts(df):
+    from collections import Counter
+
+    return Counter(r["drop_reason"] or "kept" for r in df.select("drop_reason").collect())
+
+
+def test_normalized_url_mirrors_share_a_bucket(spark, tmp_path):
+    """Under cfg.normalize_urls the url window keys on normalize_url(url),
+    so buckets must too: `#fragment` mirrors of a page land in its bucket
+    and every reason count equals one run_pipeline pass."""
+    from datetime import timedelta
+
+    from dataqualitykit_spark.config import PipelineConfig
+    from dataqualitykit_spark.fixtures import PAGES_SCHEMA, generate_pages
+    from dataqualitykit_spark.pipeline import run_pipeline
+
+    rows = generate_pages(200)
+    mirrors = [
+        dict(r, url=r["url"] + "#top", warc_ts=r["warc_ts"] + timedelta(days=1))
+        for r in rows[::5]
+    ]
+    src = spark.createDataFrame(rows + mirrors, schema=PAGES_SCHEMA)
+    cfg = PipelineConfig(normalize_urls=True)
+
+    want = _reason_counts(run_pipeline(src, cfg))
+    assert want["dup_url"] >= len(mirrors)
+    root = str(tmp_path / "norm")
+    run_resumable(spark, src, root, n_buckets=4, cfg=cfg)
+    assert _reason_counts(spark.read.parquet(f"{root}/labeled")) == want
+
+
+def test_resume_with_changed_bucketing_is_refused(spark, tmp_path):
+    """A run killed after 1 of 4 buckets and resumed with another bucket
+    count (or url key) would read the stored buckets under the new range
+    and silently lose rows; it must raise before writing anything."""
+    from dataqualitykit_spark.config import PipelineConfig
+
+    src = pages_dataframe(spark, 120)
+    root = str(tmp_path / "rebucket")
+    with pytest.raises(RuntimeError, match="injected failure"):
+        run_resumable(spark, src, root, n_buckets=4, fail_after=1)
+    with open(os.path.join(root, "_bucketed_done")) as f:
+        assert json.load(f) == {"n_buckets": 4, "bucket_key": "url"}
+
+    def snapshot():
+        files = {}
+        for d, _, names in os.walk(root):
+            for n in names:
+                p = os.path.join(d, n)
+                files[os.path.relpath(p, root)] = (os.path.getsize(p), os.path.getmtime(p))
+        return files
+
+    before = snapshot()
+    assert any(k.startswith("labeled/bucket_id=") for k in before)
+    with pytest.raises(ValueError, match="asks for {'n_buckets': 2"):
+        run_resumable(spark, src, root, n_buckets=2)
+    with pytest.raises(ValueError, match="'bucket_key': 'normalize_url'"):
+        run_resumable(
+            spark, src, root, n_buckets=4, cfg=PipelineConfig(normalize_urls=True)
+        )
+    assert snapshot() == before
+
+
 def test_cross_bucket_near_dedup_one_keeper(spark, tmp_path):
     """Planted near-dup clones whose urls hash into DIFFERENT buckets get
     exactly ONE keeper (the others drop as dup_near via the persisted-
