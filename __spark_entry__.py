@@ -3861,9 +3861,11 @@ def _langid_cols(toks: str = "toks", src: str = "text") -> tuple[str, str, str]:
     return ", ".join(cols), case, conf
 
 
-def _ppl_sql(seq: str) -> str:
-    """Char-bigram perplexity of a cleaned [a-z ] sequence column —
-    the 27x27 log-prob matrix is inlined from semantics._BIGRAM_LOGP."""
+def _bigram_cte() -> str:
+    """One-row CTE `bg(bg_m)` holding semantics._BIGRAM_LOGP as a 27x27
+    list literal. _ppl_sql indexes the column: an inlined literal inside
+    its per-character lambda is rebuilt for every character (62.7 s vs
+    0.12 s for one expression on sf0.001's 500 documents)."""
     lp = (
         "[["
         + "], [".join(
@@ -3871,12 +3873,19 @@ def _ppl_sql(seq: str) -> str:
         )
         + "]]"
     )
+    return f"bg AS (SELECT {lp} AS bg_m)"
+
+
+def _ppl_sql(seq: str) -> str:
+    """Char-bigram perplexity of a cleaned [a-z ] sequence column — reads
+    the log-prob matrix from `bg_m`, so the query must cross-join the
+    _bigram_cte() relation."""
     al = _sql_lit(S._ALPHABET)
     return f"""CASE WHEN {seq} IS NULL OR length({seq}) < 2 THEN 1000000000.0
        ELSE pow(2.0, -list_sum(list_transform(
               generate_series(1, length({seq}) - 1),
-              i -> ({lp})[strpos({al}, substr({seq}, i, 1))]
-                         [strpos({al}, substr({seq}, i + 1, 1))]))
+              i -> bg_m[strpos({al}, substr({seq}, i, 1))]
+                       [strpos({al}, substr({seq}, i + 1, 1))]))
             / (length({seq}) - 1))
        END"""
 
@@ -3896,7 +3905,7 @@ def _pipeline_sql(final_select: str | None = None) -> str:
     m_raw = _sql_missing("text")
     m_s = _sql_missing("s")
     return f"""
-WITH base AS (
+WITH {_bigram_cte()}, base AS (
   SELECT concat('doc://', source, '/', doc_id) AS url, text,
          {m_raw} AS missing_raw,
          md5(coalesce(text, '')) AS chash
@@ -3943,11 +3952,11 @@ WITH base AS (
          {hits}
   FROM met
 ), met3 AS (
-  SELECT *,
+  SELECT met2.*,
          {lang_case} AS lang_pred,
          {conf} AS lang_conf,
          {_ppl_sql('seq')} AS ppl
-  FROM met2
+  FROM met2 CROSS JOIN bg
 ), decided AS (
   SELECT url, lang_pred, nw,
          CASE
@@ -4173,7 +4182,7 @@ def _paragraph_ppl_sql(max_ppl: float = 22.0) -> str:
         f"{_SQL_WS}, ' ', 'g'), ' ')"
     )
     return f"""
-        WITH p0 AS (
+        WITH {_bigram_cte()}, p0 AS (
           SELECT doc_id,
                  CASE WHEN doc_id % 3 = 0 THEN text || {gib}
                       ELSE text END AS text
@@ -4197,7 +4206,7 @@ def _paragraph_ppl_sql(max_ppl: float = 22.0) -> str:
           SELECT doc_id, pos, para, blank,
                  CASE WHEN blank THEN TRUE
                       ELSE ({_ppl_sql('seq')}) <= {max_ppl} END AS keepp
-          FROM e
+          FROM e CROSS JOIN bg
         ), agg AS (
           SELECT doc_id,
                  coalesce(string_agg(CASE WHEN keepp THEN para END,

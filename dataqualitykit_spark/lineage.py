@@ -15,15 +15,28 @@ recorded in a JSON manifest. A restart skips completed buckets, so a run
 killed after bucket k reprocesses nothing and converges to the same table
 as an uninterrupted run.
 
-Content-dedup across buckets stays exact: before deciding dup_content, the
-current bucket is LEFT-JOINED (plain shuffled equi-join on content_md5 —
-NOT broadcast: the kept-hash set is the MAJORITY of the corpus at scale,
-billions of md5s; AQE may still choose broadcast when the set is actually
-small) against the hashes already written by COMPLETED buckets. Within a
-bucket the window dedup applies as usual; across buckets the manifest
-state substitutes for a global shuffle.
+Content-dedup across buckets stays exact and runs BEFORE the scorer:
+run_pipeline takes the content hashes that COMPLETED buckets already
+claimed (`prior_hashes`: content_md5 of every written row except dup_url,
+blocked_domain and url_keywords rows, which never enter the content
+window) and left-joins them ahead of its content window — a plain
+shuffled equi-join, NOT a forced broadcast: the hash set is the MAJORITY
+of the corpus at scale, billions of md5s; AQE may still choose broadcast
+when the set is actually small. A cross-bucket copy is then dup_content
+exactly as a later copy inside the bucket is, is never scored, and gets
+the label of one run_pipeline pass over the whole input (up to WHICH copy
+is kept: the earliest bucket's). Across buckets the manifest state
+substitutes for a global shuffle.
 
-NEAR-dup dedup spans buckets the same way (cfg.dedup_near): each bucket
+Per-bucket metrics come from the labeled write itself: one
+DataFrame.observe (an Observation) on the write gathers the row count and
+quality_metrics' per-reason docs, chars and avg_ppl inside the write's
+job. The metrics table is written from those values and the manifest
+records the row count, so the labeled partition is never read back; an
+empty bucket records rows=0 and writes no metrics rows.
+
+NEAR-dup dedup spans buckets through persisted signatures instead
+(cfg.dedup_near), after run_pipeline: each bucket
 persists the MinHash signatures of its near-dedup participants (exact-dedup
 survivors — kept, quality-dropped and near-dropped rows alike, so
 transitive chains propagate) to a `near_sigs` table partitioned by
@@ -42,17 +55,25 @@ bucketed shapes; each shape is internally deterministic.)
 
 from __future__ import annotations
 
+import functools
 import json
 import os
+from dataclasses import replace
 from datetime import datetime, timezone
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
-from .config import DEFAULT_CONFIG, PipelineConfig
+from .config import DEFAULT_CONFIG, DROP_REASON_ORDER, PipelineConfig
 from .functions import text as T
-from .pipeline import quality_metrics, run_pipeline
+from .pipeline import run_pipeline
 from .sources import TableIO
+
+# drop reasons whose rows never enter the content window: their hashes
+# claim nothing for later buckets
+_INELIGIBLE = ("dup_url", "blocked_domain", "url_keywords")
+# every reason a labeled row can carry, as quality_metrics names it
+_REASONS = ("kept", *DROP_REASON_ORDER)
 
 
 class Manifest:
@@ -68,6 +89,11 @@ class Manifest:
     def completed(self) -> set[int]:
         return {int(k) for k in self.state}
 
+    def nonempty(self) -> list[int]:
+        """Completed buckets that wrote rows — the only ones a read of
+        the output tables can see."""
+        return sorted(int(k) for k, v in self.state.items() if v["rows"])
+
     def mark(self, bucket: int, rows: int) -> None:
         self.state[str(bucket)] = {
             "rows": rows,
@@ -77,6 +103,66 @@ class Manifest:
         with open(tmp, "w") as f:
             json.dump(self.state, f, indent=1)
         os.replace(tmp, self.path)
+
+
+@functools.lru_cache(maxsize=4)
+def _bucket_metrics(sc) -> tuple[Column, ...]:
+    """Named aggregates for one DataFrame.observe on a bucket's labeled
+    write: the row count plus quality_metrics' per-reason docs, chars and
+    avg_ppl. Built once per SparkContext (each Column is py4j round
+    trips); the write's own job computes them."""
+    reason = F.coalesce(F.col("drop_reason"), F.lit("kept"))
+    aggs = [F.count(F.lit(1)).alias("rows")]
+    for r in _REASONS:
+        hit = reason == F.lit(r)
+        aggs += [
+            F.count_if(hit).alias(f"docs_{r}"),
+            F.sum(F.when(hit, F.col("n_chars"))).alias(f"chars_{r}"),
+            F.avg(F.when(hit & (F.col("ppl") < 1e8), F.col("ppl"))).alias(
+                f"avg_ppl_{r}"
+            ),
+        ]
+    return tuple(aggs)
+
+
+def _write_metrics(spark: SparkSession, io: TableIO, b: int, got: dict) -> int:
+    """Writes bucket b's rows of the metrics table (quality_metrics'
+    schema plus bucket_id, one row per reason present) from the observed
+    values, and returns the bucket's row count. The rows are a VALUES
+    relation planned on the JVM: no read-back of the labeled partition
+    and no Python worker (createDataFrame). An empty bucket writes
+    nothing."""
+
+    def lit(v, suffix=""):
+        return "NULL" if v is None else f"{v!r}{suffix}"
+
+    values = [
+        f"('{r}', {got[f'docs_{r}']}, {lit(got[f'chars_{r}'])}, "
+        f"{lit(got[f'avg_ppl_{r}'], 'D')})"
+        for r in sorted(_REASONS)
+        if got[f"docs_{r}"]
+    ]
+    docs = sum(got[f"docs_{r}"] for r in _REASONS)
+    if docs != got["rows"]:
+        raise RuntimeError(
+            f"bucket {b}: {got['rows']} labeled rows but {docs} carry a known "
+            "drop_reason"
+        )
+    if values:
+        (
+            spark.sql(
+                "SELECT reason, CAST(docs AS BIGINT) AS docs, "
+                "CAST(chars AS BIGINT) AS chars, "
+                f"CAST(avg_ppl AS DOUBLE) AS avg_ppl, {b} AS bucket_id "
+                f"FROM VALUES {', '.join(values)} AS t(reason, docs, chars, avg_ppl)"
+            )
+            .coalesce(1)
+            .write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
+            .partitionBy("bucket_id")
+            .parquet(io._path("metrics"))
+        )
+    return got["rows"]
 
 
 def run_resumable(
@@ -151,61 +237,41 @@ def run_resumable(
             json.dump(bucketing, f)
     bucketed = spark.read.parquet(bucketed_path)
 
+    # with near-dedup on, carry the post-scrub pre-model text through the
+    # labeled frame so the signature stage reads it directly — re-applying
+    # the c4/paragraph scrubs to the bucket input was measured at 11.6% of
+    # the bucket pass (PLANS.md round 6). The column rides the existing
+    # localCheckpoint and is dropped before any write below.
+    bucket_cfg = replace(cfg, carry_prescrub_text=True) if cfg.dedup_near else cfg
     processed = 0
     for b in range(n_buckets):
         if b in done:
             continue
         part = bucketed.filter(F.col("_bucket") == b).drop("_bucket")
-        # with near-dedup on, carry the post-scrub pre-model text through
-        # the labeled frame so the signature stage reads it directly —
-        # re-applying the c4/paragraph scrubs to the bucket input was
-        # measured at 11.6% of the bucket pass (PLANS.md round 6). The
-        # column rides the existing localCheckpoint and is dropped before
-        # any write below.
-        if cfg.dedup_near:
-            from dataclasses import replace as _cfg_replace
-
-            labeled = run_pipeline(
-                part, _cfg_replace(cfg, carry_prescrub_text=True)
-            )
-        else:
-            labeled = run_pipeline(part, cfg)
-        # cross-bucket exact content dedup against already-written keeps.
-        # Restrict to manifest-COMPLETED buckets: a torn previous run may
-        # have written this bucket's files without marking it, and reading
-        # them here would (a) dedup the bucket against its own stale copy
-        # and (b) race the dynamic overwrite that replaces those files.
-        if cfg.dedup_content and done:
+        # cross-bucket exact content dedup: the content hashes that
+        # manifest-COMPLETED buckets already claimed go into the pipeline
+        # ahead of its content window, so a later copy is dup_content
+        # before the scorer and never scored. Only completed buckets: a
+        # torn previous run may have written this bucket's files without
+        # marking it, and reading them would dedup the bucket against its
+        # own stale copy and race the dynamic overwrite that replaces them.
+        claimed = manifest.nonempty()
+        prior = None
+        if cfg.dedup_content and claimed:
             prior = (
                 io.read("labeled")
                 .filter(
-                    F.col("keep")
-                    & F.col("bucket_id").isin(*[int(x) for x in done])
+                    F.col("bucket_id").isin(*claimed)
+                    & (
+                        F.col("drop_reason").isNull()
+                        | ~F.col("drop_reason").isin(*_INELIGIBLE)
+                    )
                 )
-                .select(F.col("content_md5").alias("_h"))
-                .distinct()
+                .select("content_md5")
             )
-            # plain equi-join on a hash key — sort-merge/shuffled-hash is
-            # fine, and AQE broadcasts on its own when `hit` is small.
-            # Forcing broadcast here would ship the kept-hash set of the
-            # whole processed corpus into every executor.
-            hit = prior.withColumn("_dup_prior", F.lit(True))
-            labeled = (
-                labeled.withColumn("_h", F.col("content_md5"))
-                .join(hit, "_h", "left")
-                .withColumn(
-                    "drop_reason",
-                    F.when(
-                        F.col("keep") & F.col("_dup_prior").isNotNull(),
-                        F.lit("dup_content"),
-                    ).otherwise(F.col("drop_reason")),
-                )
-                .withColumn("keep", F.col("keep") & F.col("_dup_prior").isNull())
-                .drop("_h", "_dup_prior")
-            )
-        # cross-bucket NEAR-dup dedup: mirror of the md5 prior-join above,
-        # but the key is a band-bucket collision over persisted MinHash
-        # signatures instead of an exact hash equality.
+        labeled = run_pipeline(part, bucket_cfg, prior_hashes=prior)
+        # cross-bucket NEAR-dup dedup: the key is a band-bucket collision
+        # over persisted MinHash signatures instead of an exact hash.
         if cfg.dedup_near:
             from .operators import dedup as _dedup
 
@@ -228,8 +294,8 @@ def run_resumable(
             ).isin("missing_text", "dup_url", "dup_content")
             # participant text comes straight off the labeled frame: the
             # carried `_prescrub_text` is the post-c4/post-paragraph text
-            # whose md5 IS content_md5 (pipeline.py captures _orig_text
-            # after both scrubs), so no re-scrub and no (url, md5)
+            # whose md5 IS content_md5 (run_pipeline's text after both
+            # scrubs), so no re-scrub and no (url, md5)
             # recovery join against the bucket input is needed — that
             # path was measured at 11.6% of a 25k-doc bucket pass
             # (1.03 s of 8.86 s; PLANS.md round 6).
@@ -250,10 +316,10 @@ def run_resumable(
                     "buckets have no near_sigs store (prior run had "
                     "dedup_near off?) — restart with a fresh out_root"
                 )
-            if done:
+            if claimed:
                 prior_sigs = (
                     spark.read.parquet(io._path("near_sigs"))
-                    .filter(F.col("bucket_id").isin(*[int(x) for x in done]))
+                    .filter(F.col("bucket_id").isin(*claimed))
                     .select("id", "sig")
                 )
                 near_hits = (
@@ -298,34 +364,17 @@ def run_resumable(
         )
         # idempotent per-bucket commit: dynamic partition overwrite on
         # bucket_id means a crash AFTER the write but BEFORE manifest.mark
-        # replaces (not duplicates) the bucket's rows on resume
+        # replaces (not duplicates) the bucket's rows on resume. The
+        # write's own job gathers the bucket metrics (no read-back).
+        obs = Observation(f"bucket_{b}")
         (
-            labeled.write.mode("overwrite")
+            labeled.observe(obs, *_bucket_metrics(spark.sparkContext))
+            .write.mode("overwrite")
             .option("partitionOverwriteMode", "dynamic")
             .partitionBy("bucket_id")
             .parquet(io._path("labeled"))
         )
-        # the metrics table comes from ONE read of the written partition:
-        # aggregating the lazy `labeled` frame would re-run the whole
-        # pipeline and scorer a second time
-        (
-            quality_metrics(
-                io.read("labeled").filter(F.col("bucket_id") == b).drop("bucket_id")
-            )
-            .withColumn("bucket_id", F.lit(b))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("bucket_id")
-            .parquet(io._path("metrics"))
-        )
-        # the manifest row count is the written metrics' docs total (a
-        # read of a few rows, not of the labeled partition again)
-        rows = (
-            io.read("metrics")
-            .filter(F.col("bucket_id") == b)
-            .agg(F.sum("docs"))
-            .first()[0]
-        )
+        rows = _write_metrics(spark, io, b, obs.get)
         manifest.mark(b, rows)
         done.add(b)
         processed += 1

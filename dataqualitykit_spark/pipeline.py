@@ -1,7 +1,8 @@
 """The web-text quality pipeline, dedup-first (CCNet-style ordering):
 
     ingest (project html away) -> salt repartition by url ->
-    missing flag -> url keep-most-recent -> content keep-one (raw-text md5)
+    missing flag -> url keep-most-recent -> content keep-one (raw-text md5;
+    hashes earlier resumable buckets claimed count as an earlier copy)
     -> [survivors only] fused scrub+score Arrow UDF (every metric +
     langid/ppl) -> quality decide -> labeled frame
 
@@ -28,6 +29,10 @@ bank; CategoricalValidity :1068-1180 -> langid gate).
 """
 
 from __future__ import annotations
+
+import functools
+from collections.abc import Callable
+from dataclasses import dataclass
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
@@ -179,16 +184,49 @@ def _quality_flags(cfg: PipelineConfig) -> list[tuple[str, Column]]:
     ]
 
 
-def with_metrics(df: DataFrame, cfg: PipelineConfig = DEFAULT_CONFIG) -> DataFrame:
-    """scrub + metric + score columns; pure projection (no shuffle).
+def _quality_reasons_array(cfg: PipelineConfig) -> Column:
+    """array of failing quality-rule names, priority-ordered."""
+    flags = _quality_flags(cfg)
+    return F.array_compact(
+        F.array(*[F.when(cond, F.lit(name)) for name, cond in flags])
+    )
 
-    ONE fused Arrow pass (udfs/scoring.fused_scrub_score_udf): scrub +
+
+def _cache_key(df: DataFrame, cfg: PipelineConfig) -> tuple:
+    """(SparkContext, config, model-loader ids) — the key of the per-config
+    Column caches below. Each Column costs py4j round trips to build
+    (~6 more per call for PySpark's call-site capture), so a plan rebuilt
+    per call paid ~3k of them; keyed on the SparkContext, a new context
+    never reuses a UDF registered with another. The loaders are excluded
+    from PipelineConfig equality, so their ids join the key; they stay
+    unique while the cached key holds the config that owns them."""
+    return (
+        df.sparkSession.sparkContext,
+        cfg,
+        (id(cfg.lang_model_loader), id(cfg.ppl_model_loader)),
+    )
+
+
+@dataclass(frozen=True)
+class _Scorer:
+    """The fused scorer and the quality rules over its output."""
+
+    udf: Callable[[Column], Column]
+    raw: Column  # the scorer over unmasked `text` (with_metrics)
+    # metric columns read off the `_score` struct, in output order: the
+    # enabled opt-in gate fields first, then scrubbed_text, `_missing`
+    # (scrub-level missing) and every _METRIC_COLS column
+    metrics: dict[str, Column]
+    gates: tuple[str, ...]
+    quality: Column  # first failing quality rule, NULL when none
+
+
+@functools.lru_cache(maxsize=16)
+def _scorer(sc, cfg: PipelineConfig, loader_ids: tuple) -> _Scorer:
+    """ONE fused Arrow pass (udfs/scoring.fused_scrub_score_udf): scrub +
     every metric + langid/ppl (and the cfg model seam) — the text crosses
     the JVM<->Python boundary once. Interpreted JVM string/array
-    expressions were measured ~5x slower end-to-end on this workload.
-
-    Adds every _METRIC_COLS column, the enabled opt-in gate columns, and
-    `_missing` (scrub-level missing)."""
+    expressions were measured ~5x slower end-to-end on this workload."""
     fused = fused_scrub_score_udf(
         cfg.lang_model_loader,
         cfg.ppl_model_loader,
@@ -200,81 +238,202 @@ def with_metrics(df: DataFrame, cfg: PipelineConfig = DEFAULT_CONFIG) -> DataFra
     # the opt-in gate fields are whatever the scorer appended after the
     # always-on ones — the gate-to-field choice lives in udfs/scoring only
     fixed = {"scrubbed_text", *SCORE_SCHEMA.fieldNames()}
-    gate_cols = [n for n in fused.returnType.fieldNames() if n not in fixed]
+    gates = tuple(n for n in fused.returnType.fieldNames() if n not in fixed)
     m = F.col("_score")
-    df = df.withColumn("_score", fused(F.col("text")))
-    return df.select(
-        "*",
-        *[m[n].alias(n) for n in gate_cols],
-        m["scrubbed_text"].alias("scrubbed_text"),
-        m["missing"].alias("_missing"),
-        m["n_chars"].alias("n_chars"),
-        (
-            m["symbol_count"] / F.greatest(m["n_chars"], F.lit(1))
-        ).alias("symbol_ratio"),
-        m["n_lines"].alias("n_lines"),
-        F.when(m["n_lines"] == 0, F.lit(1.0))
-        .otherwise(m["distinct_lines"] / m["n_lines"].cast("double"))
-        .alias("distinct_line_ratio"),
-        m["boilerplate_hits"].alias("boilerplate_hits"),
-        m["lang"].alias("lang_pred"),
-        m["lang_conf"].alias("lang_conf"),
-        m["ppl"].alias("ppl"),
-        m["n_words"].alias("n_words"),
-        m["mean_word_len"].alias("mean_word_len"),
-        m["stopword_hits"].alias("stopword_hits"),
-        (
-            m["stopword_hits"] / F.greatest(m["n_words"], F.lit(1))
-        ).alias("stopword_density"),
-    ).drop("_score")
-
-
-def _quality_reasons_array(cfg: PipelineConfig) -> Column:
-    """array of failing quality-rule names, priority-ordered."""
-    flags = _quality_flags(cfg)
-    return F.array_compact(
-        F.array(*[F.when(cond, F.lit(name)) for name, cond in flags])
+    metrics = {n: m[n] for n in gates} | {
+        "scrubbed_text": m["scrubbed_text"],
+        "_missing": m["missing"],
+        "n_chars": m["n_chars"],
+        "symbol_ratio": m["symbol_count"] / F.greatest(m["n_chars"], F.lit(1)),
+        "n_lines": m["n_lines"],
+        "distinct_line_ratio": F.when(m["n_lines"] == 0, F.lit(1.0)).otherwise(
+            m["distinct_lines"] / m["n_lines"].cast("double")
+        ),
+        "boilerplate_hits": m["boilerplate_hits"],
+        "lang_pred": m["lang"],
+        "lang_conf": m["lang_conf"],
+        "ppl": m["ppl"],
+        "n_words": m["n_words"],
+        "mean_word_len": m["mean_word_len"],
+        "stopword_hits": m["stopword_hits"],
+        "stopword_density": m["stopword_hits"]
+        / F.greatest(m["n_words"], F.lit(1)),
+    }
+    return _Scorer(
+        udf=fused,
+        raw=fused(F.col("text")),
+        metrics=metrics,
+        gates=gates,
+        quality=F.get(_quality_reasons_array(cfg), 0),
     )
+
+
+def with_metrics(df: DataFrame, cfg: PipelineConfig = DEFAULT_CONFIG) -> DataFrame:
+    """scrub + metric + score columns; pure projection (no shuffle).
+
+    Adds every _METRIC_COLS column, the enabled opt-in gate columns, and
+    `_missing` (scrub-level missing)."""
+    s = _scorer(*_cache_key(df, cfg))
+    return df.withColumn("_score", s.raw).withColumns(s.metrics).drop("_score")
 
 
 def decide_quality(df: DataFrame, cfg: PipelineConfig = DEFAULT_CONFIG) -> DataFrame:
     """Folds quality flags into keep/drop_reason on a metrics frame
     (standalone use: streaming / pre-deduped inputs)."""
-    reasons = _quality_reasons_array(cfg)
     return (
-        df.withColumn("drop_reason", F.get(reasons, 0))
+        df.withColumn("drop_reason", _scorer(*_cache_key(df, cfg)).quality)
         .withColumn("keep", F.col("drop_reason").isNull())
         .drop("_missing")
     )
 
 
-def run_pipeline(df: DataFrame, cfg: PipelineConfig = DEFAULT_CONFIG) -> DataFrame:
-    """Full pipeline: input (url, warc_ts?, html?, text, lang?) ->
-    one labeled row per input row (keep, drop_reason, scrubbed_text +
-    metric columns; metrics are NULL for rows dropped pre-model)."""
-    keep_cols = [c for c in ("url", "warc_ts", "text", "lang") if c in df.columns]
-    base = df.select(*keep_cols)
+@dataclass(frozen=True)
+class _Plan:
+    """run_pipeline's Columns for one (SparkContext, config, input
+    columns, prior-hash flag). Each dict is one withColumns; a stage
+    boundary sits wherever a column reads the previous stage's output."""
+
+    url_key: Column
+    salt: bool
+    gates: dict[str, Column]
+    hashes: dict[str, Column]
+    dup_url: dict[str, Column]
+    prior: dict[str, Column]
+    eligible: dict[str, Column]
+    dup_content: dict[str, Column]
+    survivor: dict[str, Column]
+    near: dict[str, Column]
+    score: dict[str, Column]
+    scorer: _Scorer
+    decide: dict[str, Column]
+    out: tuple[Column, ...]
+
+
+@functools.lru_cache(maxsize=16)
+def _plan(
+    sc,
+    cfg: PipelineConfig,
+    loader_ids: tuple,
+    keep: tuple[str, ...],
+    has_prior: bool,
+) -> _Plan:
+    c = F.col
+    scorer = _scorer(sc, cfg, loader_ids)
     # url-dedup key: the canonical form when cfg.normalize_urls (mirrors
     # of one page differing only in case/fragment/tracking params collapse
     # into one window group); the OUTPUT url column is never rewritten
-    url_key = (
-        T.normalize_url(F.col("url")) if cfg.normalize_urls else F.col("url")
-    )
+    url_key = T.normalize_url(c("url")) if cfg.normalize_urls else c("url")
     # the url keep-most-recent window only runs when a timestamp exists
-    # (computed here because the salt decision below depends on it)
-    url_dedup_active = (
-        cfg.dedup_url and "url" in keep_cols and "warc_ts" in keep_cols
-    )
-    n_salt = cfg.salt_partitions
-    if n_salt < 0:  # AUTO: 2x cores — AQE can still coalesce small stages
-        n_salt = 2 * df.sparkSession.sparkContext.defaultParallelism
-    if n_salt > 0 and (
-        url_dedup_active
-        or cfg.c4_lines
-        or cfg.dedup_paragraphs
-        or cfg.dedup_near
-        or not cfg.dedup_content
-    ):
+    url_dedup = cfg.dedup_url and "url" in keep and "warc_ts" in keep
+
+    # map-side gates FIRST, zero shuffle: the domain blocklist (a
+    # plan-literal suffix check) and the soft URL keyword score flag rows
+    # before any dedup window or model sees them — flagged rows never win
+    # a content window (they are ineligible) and are never scored; C4
+    # line cleaning (extraction-time semantics) rewrites the text that
+    # every later stage sees
+    gates: dict[str, Column] = {}
+    if cfg.blocklist:
+        from .operators.url_filter import blocked_domain_col
+
+        gates["_blocked"] = blocked_domain_col(c("url"), cfg.blocklist)
+    if cfg.url_keyword_weights:
+        from .operators.url_filter import url_keyword_score_col
+
+        gates["_kw_blocked"] = url_keyword_score_col(
+            c("url"), cfg.url_keyword_weights
+        ) >= F.lit(cfg.url_keyword_threshold)
+    if cfg.c4_lines:
+        from .operators import c4_filter as _c4
+
+        gates["text"] = _c4.kept_lines_text(c("text"), cfg.c4_min_words_per_line)
+
+    # the raw-text md5 is computed ONCE: it keys the content window AND
+    # becomes the output's content_md5
+    hashes = {
+        "_missing_raw": T.is_missing(c("text")),
+        "_chash": F.md5(F.encode(F.coalesce(c("text"), F.lit("")), "UTF-8")),
+    }
+    chash = c("_chash")
+    # pre-model drop flags, (reason, column), in DROP_REASON_ORDER
+    flags = [
+        (reason, flag)
+        for reason, flag in (
+            ("blocked_domain", "_blocked"),
+            ("url_keywords", "_kw_blocked"),
+        )
+        if flag in gates
+    ]
+    flags.append(("missing_text", "_missing_raw"))
+
+    # url keep-most-recent (reference W1, QualityControl.py:1967-1981);
+    # total order (warc_ts DESC, md5 ASC, url ASC) -> deterministic under
+    # any input order (the url leg matters only under normalize_urls,
+    # where distinct raw urls share a window group)
+    dup_url: dict[str, Column] = {}
+    if url_dedup:
+        w_url = Window.partitionBy(url_key).orderBy(
+            c("warc_ts").desc(), chash.asc(), c("url").asc()
+        )
+        dup_url["_dup_url"] = F.row_number().over(w_url) > 1
+        flags.append(("dup_url", "_dup_url"))
+
+    # content keep-one among eligible rows, keyed by raw-text md5
+    # (blocked rows are ineligible: a blocked mirror must not win the
+    # window and shadow a keepable copy of the same content); a hash that
+    # `prior_hashes` holds marks every eligible copy
+    eligible = ~c("_missing_raw")
+    for flag in ("_dup_url", "_blocked", "_kw_blocked"):
+        if flag in dup_url or flag in gates:
+            eligible = eligible & ~c(flag)
+    dup_content: dict[str, Column] = {}
+    survivor = c("_eligible")
+    if cfg.dedup_content:
+        order = [c("_eligible").desc(), c("url").asc()]
+        if "warc_ts" in keep:
+            order.append(c("warc_ts").asc())
+        later = F.row_number().over(Window.partitionBy(chash).orderBy(*order)) > 1
+        if has_prior:
+            later = c("_prior").isNotNull() | later
+        dup_content["_dup_content"] = c("_eligible") & later
+        survivor = survivor & ~c("_dup_content")
+        flags.append(("dup_content", "_dup_content"))
+
+    near: dict[str, Column] = {}
+    if cfg.dedup_near:
+        near = {
+            "_dup_near": c("_nd").isNotNull(),
+            "_survivor": c("_survivor") & c("_nd").isNull(),
+        }
+        flags.append(("dup_near", "_dup_near"))
+
+    decide = F.when(c(flags[0][1]), F.lit(flags[0][0]))
+    for reason, flag in flags[1:]:
+        decide = decide.when(c(flag), F.lit(reason))
+
+    # metric columns are NULL (not garbage zeros) for pre-model drops.
+    # The labeled output does NOT duplicate the raw text (it lives in the
+    # input table; at 100 TB rewriting it doubles the write) — it carries
+    # the md5 fingerprint instead, which dedup/lineage key on
+    out = [c(k) for k in keep if k != "text"] + [c(g) for g in scorer.gates]
+    out += [
+        F.when(c("_survivor"), c(n)).cast(_METRIC_COLS[n]).alias(n)
+        for n in scorer.metrics
+        if n in _METRIC_COLS
+    ]
+    out += [c("drop_reason"), c("drop_reason").isNull().alias("keep")]
+    out.append(chash.alias("content_md5"))
+    if cfg.carry_prescrub_text:
+        # opt-in column for run_resumable's near-sig stage: the
+        # post-c4/post-paragraph pre-model text whose md5 IS content_md5,
+        # so lineage can sign it directly instead of re-scrubbing the
+        # bucket input (measured 11.6% of a 25k-doc near-dedup bucket
+        # pass, 1.03 s of 8.86 s; PLANS.md round 6). Callers MUST drop it
+        # before persisting labeled output.
+        out.append(c("text").alias("_prescrub_text"))
+
+    return _Plan(
+        url_key=url_key,
         # one explicit url repartition: balances hot domains ahead of the
         # pre-window map work (C4/paragraph scrubs), satisfies the url
         # window's distribution, and — when no content window will run —
@@ -290,48 +449,142 @@ def run_pipeline(df: DataFrame, cfg: PipelineConfig = DEFAULT_CONFIG) -> DataFra
         # skipping it cost ~12% on the leg while saving nothing.
         # Results are partitioning-independent either way (total window
         # orders).
-        base = base.repartition(n_salt, url_key)
+        salt=url_dedup
+        or cfg.c4_lines
+        or cfg.dedup_paragraphs
+        or cfg.dedup_near
+        or not cfg.dedup_content,
+        gates=gates,
+        hashes=hashes,
+        dup_url=dup_url,
+        prior={"_prior": F.lit(True)},
+        eligible={"_eligible": eligible},
+        dup_content=dup_content,
+        survivor={"_survivor": survivor},
+        near=near,
+        # model + rules stage: ONE frame (a filter+union here would
+        # duplicate the whole dedup subtree). Dropped rows cross the Arrow
+        # boundary as NULL text, which the batch functions short-circuit,
+        # so the models still only score survivors.
+        score={"_score": scorer.udf(F.when(c("_survivor"), c("text")))},
+        scorer=scorer,
+        decide={"drop_reason": decide.otherwise(scorer.quality)},
+        out=tuple(out),
+    )
 
-    # domain blocklist FIRST (opt-in): known-bad hosts are flagged before
-    # any dedup window or model sees them — blocked rows never win a
-    # content-dedup window (they are ineligible) and are never scored.
-    # Zero-shuffle: the blocklist is a plan-literal suffix check.
-    if cfg.blocklist:
-        from .operators.url_filter import blocked_domain_col
 
-        base = base.withColumn(
-            "_blocked", blocked_domain_col(F.col("url"), cfg.blocklist)
+def _near_dup_urls(base: DataFrame, cfg: PipelineConfig) -> DataFrame:
+    """Non-canonical members of near-dup clusters among exact-dedup
+    survivors, as (url, _nd=True): MinHash-LSH pairs -> connected
+    components -> every url but the component's canonical (min url) one.
+    The pair/CC frames hold only near-dup PARTICIPANTS — tiny relative to
+    the corpus — so the left join back is broadcastable by AQE; the
+    corpus itself is never re-shuffled. Nothing is pinned: the pairs
+    branch and the join-back each evaluate the base subtree (one extra
+    source scan beats caching the corpus in executor storage; run
+    near-dedup per lineage bucket to bound the working set)."""
+    from .operators import dedup as _dedup
+
+    surv = base.filter(F.col("_survivor")).select("url", "text")
+    if cfg.near_dup_hash == "md5":
+        pairs = _dedup.minhash_jaccard_portable(
+            surv, "text", "url", num_hashes=cfg.near_dup_hashes
         )
     else:
-        base = base.withColumn("_blocked", F.lit(False))
-
-    # soft URL keyword gate right after the hard blocklist (opt-in):
-    # weighted banned-word score over the url, plan-literal contains
-    # fold — zero shuffle; flagged rows share the blocklist's fate
-    # (ineligible for the content window, never scored)
-    if cfg.url_keyword_weights:
-        from .operators.url_filter import url_keyword_score_col
-
-        base = base.withColumn(
-            "_kw_blocked",
-            url_keyword_score_col(F.col("url"), cfg.url_keyword_weights)
-            >= F.lit(cfg.url_keyword_threshold),
+        pairs = _dedup.minhash_jaccard(
+            surv, "text", "url", num_hashes=cfg.near_dup_hashes
         )
-    else:
-        base = base.withColumn("_kw_blocked", F.lit(False))
+    pairs = pairs.filter(F.col("est_jaccard") >= cfg.near_dup_threshold)
+    comp = _dedup.connected_components(pairs)
+    return (
+        comp.filter(F.col("id") != F.col("component"))
+        .select(F.col("id").alias("url"))
+        .withColumn("_nd", F.lit(True))
+    )
 
-    # C4-style line cleaning FIRST (opt-in, extraction-time semantics):
-    # only terminal-punctuation lines with enough words and no ban phrase
-    # survive; every later stage (missing check, hashes, models, the
-    # paragraph scrub) sees the cleaned text. Zero-shuffle projection.
-    if cfg.c4_lines:
-        from .operators import c4_filter as _c4
 
-        base = base.withColumn(
-            "text",
-            _c4.kept_lines_text(F.col("text"), cfg.c4_min_words_per_line),
+def _token_budget(labeled: DataFrame, cfg: PipelineConfig) -> DataFrame:
+    """Token-budget cut LAST (opt-in): among kept rows, each budget_by
+    group keeps the deterministic (md5(url), url)-ordered prefix whose
+    token total stays <= token_budget; rows past the line flip to
+    drop_reason='token_budget'. Reuses the scorer's n_words (no second
+    tokenize); the picked-url set joins back small (AQE broadcast).
+    COST NOTE: under a fully lazy plan the sampler's bucket-sums action
+    evaluates the pipeline subtree once more than a budget-less run —
+    measured 3.5x at sf0.1 — so labeled is localCheckpointed first
+    (PLANS.md "Token-budget stage"); the stage is already eager (the
+    sampler's bucket-sum prefix is an action), so pinning adds none."""
+    from .operators.sampling import sample_to_token_budget
+
+    labeled = labeled.localCheckpoint()
+    kept = labeled.filter(F.col("keep"))
+    by = cfg.budget_by
+    if by is None:
+        kept = kept.withColumn("_budget_g", F.lit("all"))
+        by = "_budget_g"
+    # url is the sampler's row id: unique among kept rows whenever
+    # dedup_url is on (the default). distinct() guards the join-back
+    # against row multiplication if a caller disables url dedup and feeds
+    # duplicate kept urls — same-url rows then share one budget verdict
+    # (tiny frame, cheap exchange).
+    picked = (
+        sample_to_token_budget(
+            kept,
+            cfg.token_budget,
+            text_col="scrubbed_text",
+            id_col="url",
+            by=by,
+            token_expr=F.col("n_words"),
         )
+        .select("url")
+        .distinct()
+        .withColumn("_in_budget", F.lit(True))
+    )
+    return (
+        labeled.join(picked, "url", "left")
+        .withColumn(
+            "drop_reason",
+            F.when(
+                F.col("keep") & F.col("_in_budget").isNull(),
+                F.lit("token_budget"),
+            ).otherwise(F.col("drop_reason")),
+        )
+        .withColumn("keep", F.col("drop_reason").isNull())
+        .drop("_in_budget", "_budget_g")
+    )
 
+
+def run_pipeline(
+    df: DataFrame,
+    cfg: PipelineConfig = DEFAULT_CONFIG,
+    *,
+    prior_hashes: DataFrame | None = None,
+) -> DataFrame:
+    """Full pipeline: input (url, warc_ts?, html?, text, lang?) ->
+    one labeled row per input row (keep, drop_reason, scrubbed_text +
+    metric columns; metrics are NULL for rows dropped pre-model).
+
+    The plan is one select/withColumns per stage over Columns cached per
+    config (see _cache_key), so a warm build is a few hundred py4j round
+    trips instead of ~3k.
+
+    `prior_hashes` (run_resumable's cross-bucket dedup): a one-column
+    frame of content hashes already claimed by earlier output. Every
+    eligible row whose content_md5 it holds drops as dup_content ahead of
+    the scorer, exactly like a later copy inside the content window."""
+    if prior_hashes is not None and not cfg.dedup_content:
+        raise ValueError("prior_hashes needs cfg.dedup_content")
+    sc = df.sparkSession.sparkContext
+    keep = tuple(c for c in ("url", "warc_ts", "text", "lang") if c in df.columns)
+    p = _plan(*_cache_key(df, cfg), keep, prior_hashes is not None)
+    base = df.select(*keep)
+    n_salt = cfg.salt_partitions
+    if n_salt < 0:  # AUTO: 2x cores — AQE can still coalesce small stages
+        n_salt = 2 * sc.defaultParallelism
+    if n_salt > 0 and p.salt:
+        base = base.repartition(n_salt, p.url_key)
+    if p.gates:
+        base = base.withColumns(p.gates)
     # CCNet-style repeated-paragraph scrub FIRST (opt-in): boilerplate
     # lines shared across >= paragraph_min_repeats urls vanish before the
     # missing check, the content-md5 windows and the models — two mirrors
@@ -342,189 +595,32 @@ def run_pipeline(df: DataFrame, cfg: PipelineConfig = DEFAULT_CONFIG) -> DataFra
         base = _dedup.paragraph_scrub(
             base, "text", doc_key="url", min_repeats=cfg.paragraph_min_repeats
         )
-
-    base = base.withColumn("_missing_raw", T.is_missing(F.col("text")))
-    # the raw-text md5 is computed ONCE as a column: it keys the content
-    # window below AND becomes the output's content_md5 (previously two
-    # separate md5 passes over the full text)
-    base = base.withColumn(
-        "_chash", F.md5(F.encode(F.coalesce(F.col("text"), F.lit("")), "UTF-8"))
-    )
-    chash = F.col("_chash")
-
-    # url keep-most-recent (reference W1, QualityControl.py:1967-1981);
-    # total order (warc_ts DESC, md5 ASC, url ASC) -> deterministic under
-    # any input order (the url leg matters only under normalize_urls,
-    # where distinct raw urls share a window group)
-    if url_dedup_active:
-        w_url = Window.partitionBy(url_key).orderBy(
-            F.col("warc_ts").desc(), chash.asc(), F.col("url").asc()
-        )
-        base = base.withColumn("_dup_url", F.row_number().over(w_url) > 1)
-    else:
-        base = base.withColumn("_dup_url", F.lit(False))
-
-    # content keep-one among eligible rows, keyed by raw-text md5
-    # (blocked rows are ineligible: a blocked mirror must not win the
-    # window and shadow a keepable copy of the same content)
-    eligible = (
-        ~F.col("_missing_raw")
-        & ~F.col("_dup_url")
-        & ~F.col("_blocked")
-        & ~F.col("_kw_blocked")
-    )
-    if cfg.dedup_content:
-        base = base.withColumn("_eligible", eligible)
-        order = [F.col("_eligible").desc(), F.col("url").asc()]
-        if "warc_ts" in keep_cols:
-            order.append(F.col("warc_ts").asc())
-        w_content = Window.partitionBy(chash).orderBy(*order)
-        base = base.withColumn(
-            "_dup_content", F.col("_eligible") & (F.row_number().over(w_content) > 1)
-        )
-    else:
-        base = base.withColumn("_eligible", eligible).withColumn(
-            "_dup_content", F.lit(False)
-        )
-
-    base = base.withColumn(
-        "_survivor", F.col("_eligible") & ~F.col("_dup_content")
-    )
-
-    # near-dup dedup among exact-dedup survivors: MinHash-LSH pairs ->
-    # connected components -> keep the canonical (min url) row per
-    # cluster. The pair/CC frames hold only near-dup PARTICIPANTS — tiny
-    # relative to the corpus — so the left join back is broadcastable by
-    # AQE; the corpus itself is never re-shuffled. Nothing is pinned: the
-    # pairs branch and the join-back each evaluate the base subtree (one
-    # extra source scan beats caching the corpus in executor storage; run
-    # near-dedup per lineage bucket to bound the working set).
+    base = base.withColumns(p.hashes)
+    if p.dup_url:
+        base = base.withColumns(p.dup_url)
+    if prior_hashes is not None:
+        # plain equi-join on the hash key: AQE broadcasts a small prior
+        # set on its own, and a shuffled join on _chash already satisfies
+        # the content window's distribution
+        prior = prior_hashes.toDF("_chash").distinct().withColumns(p.prior)
+        base = base.join(prior, "_chash", "left")
+    base = base.withColumns(p.eligible)
+    if p.dup_content:
+        base = base.withColumns(p.dup_content)
+    base = base.withColumns(p.survivor)
     if cfg.dedup_near:
-        from .operators import dedup as _dedup
-
-        surv = base.filter(F.col("_survivor")).select("url", "text")
-        if cfg.near_dup_hash == "md5":
-            pairs = _dedup.minhash_jaccard_portable(
-                surv, "text", "url", num_hashes=cfg.near_dup_hashes
-            )
-        else:
-            pairs = _dedup.minhash_jaccard(
-                surv, "text", "url", num_hashes=cfg.near_dup_hashes
-            )
-        pairs = pairs.filter(F.col("est_jaccard") >= cfg.near_dup_threshold)
-        comp = _dedup.connected_components(pairs)
-        noncanon = (
-            comp.filter(F.col("id") != F.col("component"))
-            .select(F.col("id").alias("url"))
-            .withColumn("_nd", F.lit(True))
+        base = base.join(_near_dup_urls(base, cfg), "url", "left").withColumns(
+            p.near
         )
-        base = (
-            base.join(noncanon, "url", "left")
-            .withColumn("_dup_near", F.coalesce(F.col("_nd"), F.lit(False)))
-            .drop("_nd")
-            .withColumn("_survivor", F.col("_survivor") & ~F.col("_dup_near"))
-        )
-    else:
-        base = base.withColumn("_dup_near", F.lit(False))
-
-    base = base.withColumn("_orig_text", F.col("text"))
-
-    # model + rules stage: ONE frame (a filter+union here would duplicate
-    # the whole dedup subtree — observed as doubled Exchanges in the plan).
-    # Dropped rows cross the Arrow boundary as NULL text, which the batch
-    # functions short-circuit, so the models still only score survivors.
-    masked = base.withColumn("text", F.when(F.col("_survivor"), F.col("text")))
-    scored = with_metrics(masked, cfg).withColumn("text", F.col("_orig_text"))
-
-    quality = _quality_reasons_array(cfg)
     labeled = (
-        scored.withColumn(
-            "drop_reason",
-            F.when(F.col("_blocked"), F.lit("blocked_domain"))
-            .when(F.col("_kw_blocked"), F.lit("url_keywords"))
-            .when(F.col("_missing_raw"), F.lit("missing_text"))
-            .when(F.col("_dup_url"), F.lit("dup_url"))
-            .when(F.col("_dup_content"), F.lit("dup_content"))
-            .when(F.col("_dup_near"), F.lit("dup_near"))
-            .otherwise(F.get(quality, 0)),
-        )
-        .withColumn("keep", F.col("drop_reason").isNull())
+        base.withColumns(p.score)
+        .withColumns(p.scorer.metrics)
+        .withColumns(p.decide)
+        .select(*p.out)
     )
-    # metric columns are NULL (not garbage zeros) for pre-model drops
-    for col, typ in _METRIC_COLS.items():
-        labeled = labeled.withColumn(
-            col, F.when(F.col("_survivor"), F.col(col)).cast(typ)
-        )
-    # the labeled output does NOT duplicate the raw text (it lives in the
-    # input table; at 100 TB rewriting it doubles the write) — it carries
-    # the md5 fingerprint instead, which dedup/lineage key on
-    # _chash IS md5(coalesce(_orig_text,'')) — text is untouched between
-    # the hash projection and here (only masked into a separate column)
-    labeled = labeled.withColumn("content_md5", F.col("_chash"))
-
-    # token-budget cut LAST (opt-in): among kept rows, each budget_by
-    # group keeps the deterministic (md5(url), url)-ordered prefix whose
-    # token total stays <= token_budget; rows past the line flip to
-    # drop_reason='token_budget'. Reuses the scorer's n_words (no second
-    # tokenize); the picked-url set joins back small (AQE broadcast).
-    # COST NOTE: under a fully lazy plan the sampler's bucket-sums action
-    # evaluates the pipeline subtree once more than a budget-less run —
-    # measured 3.5x at sf0.1 — so labeled is localCheckpointed first
-    # (PLANS.md "Token-budget stage"); the stage is already eager (the
-    # sampler's bucket-sum prefix is an action), so pinning adds none.
     if cfg.token_budget is not None:
-        from .operators.sampling import sample_to_token_budget
-
-        labeled = labeled.localCheckpoint()
-        kept = labeled.filter(F.col("keep"))
-        by = cfg.budget_by
-        if by is None:
-            kept = kept.withColumn("_budget_g", F.lit("all"))
-            by = "_budget_g"
-        # url is the sampler's row id: unique among kept rows whenever
-        # dedup_url is on (the default). distinct() guards the join-back
-        # against row multiplication if a caller disables url dedup and
-        # feeds duplicate kept urls — same-url rows then share one
-        # budget verdict (tiny frame, cheap exchange).
-        picked = (
-            sample_to_token_budget(
-                kept,
-                cfg.token_budget,
-                text_col="scrubbed_text",
-                id_col="url",
-                by=by,
-                token_expr=F.col("n_words"),
-            )
-            .select("url")
-            .distinct()
-            .withColumn("_in_budget", F.lit(True))
-        )
-        labeled = (
-            labeled.join(picked, "url", "left")
-            .withColumn(
-                "drop_reason",
-                F.when(
-                    F.col("keep") & F.col("_in_budget").isNull(),
-                    F.lit("token_budget"),
-                ).otherwise(F.col("drop_reason")),
-            )
-            .withColumn("keep", F.col("drop_reason").isNull())
-            .drop("_in_budget", "_budget_g")
-        )
-
-    if cfg.carry_prescrub_text:
-        # opt-in column for run_resumable's near-sig stage: the
-        # post-c4/post-paragraph pre-model text whose md5 IS content_md5,
-        # so lineage can sign it directly instead of re-scrubbing the
-        # bucket input (measured 11.6% of a 25k-doc near-dedup bucket
-        # pass, 1.03 s of 8.86 s; PLANS.md round 6). Callers MUST drop it
-        # before persisting labeled output.
-        labeled = labeled.withColumn("_prescrub_text", F.col("_orig_text"))
-    return labeled.drop(
-        "_missing_raw", "_dup_url", "_dup_content", "_dup_near", "_eligible",
-        "_survivor", "_missing", "_orig_text", "text", "_blocked",
-        "_kw_blocked", "_chash",
-    )
+        labeled = _token_budget(labeled, cfg)
+    return labeled
 
 
 def quality_metrics(labeled: DataFrame, by: list | None = None) -> DataFrame:

@@ -81,42 +81,138 @@ def test_bucketed_input_written_once_and_pruned(spark, four_bucket_root):
     )
     assert "PartitionFilters" in plan and "_bucket" in plan.split("PartitionFilters")[1][:120]
 
-    # the dedup join in lineage.py must not force a broadcast hint — grep
-    # the source, not the plan (AQE may legitimately pick broadcast at
-    # runtime for small sets)
+    # the cross-bucket dedup join (run_pipeline's prior_hashes, fed by
+    # run_resumable) must not force a broadcast hint — grep the source,
+    # not the plan (AQE may legitimately pick broadcast at runtime for
+    # small sets)
     import inspect
 
     import dataqualitykit_spark.lineage as L
+    import dataqualitykit_spark.pipeline as P
 
     assert "F.broadcast" not in inspect.getsource(L.run_resumable)
+    assert "F.broadcast" not in inspect.getsource(P.run_pipeline)
 
 
 def test_metrics_table_matches_labeled_and_manifest(spark, four_bucket_root):
-    """Per bucket, the metrics table's docs sum to the manifest row count
-    and each reason's docs equal that reason's row count in labeled."""
-    from pyspark.sql import functions as F
+    """Per bucket, the metrics table's docs sum to the manifest row count,
+    and each reason's docs, chars and avg_ppl equal quality_metrics over
+    that reason's rows in labeled."""
+    import math
+
+    from dataqualitykit_spark.pipeline import quality_metrics
 
     root = four_bucket_root
     manifest = json.load(open(os.path.join(root, "manifest.json")))
     got = {
-        (r["bucket_id"], r["reason"]): r["docs"]
+        (r["bucket_id"], r["reason"]): (r["docs"], r["chars"], r["avg_ppl"])
         for r in spark.read.parquet(f"{root}/metrics").collect()
     }
+    labeled = spark.read.parquet(f"{root}/labeled")
     want = {
-        (r["bucket_id"], r["reason"]): r["count"]
-        for r in spark.read.parquet(f"{root}/labeled")
-        .groupBy(
-            "bucket_id",
-            F.coalesce(F.col("drop_reason"), F.lit("kept")).alias("reason"),
-        )
-        .count()
-        .collect()
+        (r["bucket_id"], r["reason"]): (r["docs"], r["chars"], r["avg_ppl"])
+        for r in quality_metrics(labeled, by=["bucket_id"]).collect()
     }
-    assert got == want
+    assert got.keys() == want.keys()
+    for key, (docs, chars, ppl) in want.items():
+        assert got[key][:2] == (docs, chars), key
+        if ppl is None:
+            assert got[key][2] is None, key
+        else:
+            assert math.isclose(got[key][2], ppl, rel_tol=1e-9), key
     assert len({reason for _, reason in got}) > 2
     for b in range(4):
-        rows = sum(docs for (bucket, _), docs in got.items() if bucket == b)
+        rows = sum(docs for (bucket, _), (docs, _, _) in got.items() if bucket == b)
         assert rows == manifest[str(b)]["rows"] > 0, b
+
+
+def test_empty_bucket_records_zero_rows(spark, tmp_path):
+    """A bucket that holds no rows writes no labeled files; it must still
+    complete, record rows=0 in the manifest and add no metrics rows."""
+    from pyspark.sql import functions as F
+
+    src = pages_dataframe(spark, 3)
+    n = src.count()
+    held = {
+        r["b"]
+        for r in src.select(
+            F.pmod(F.xxhash64("url"), F.lit(8)).cast("int").alias("b")
+        ).collect()
+    }
+    assert 0 not in held, held  # precondition: bucket 0 is empty
+    root = str(tmp_path / "sparse")
+    run_resumable(spark, src, root, n_buckets=8)
+
+    manifest = json.load(open(os.path.join(root, "manifest.json")))
+    assert sorted(manifest, key=int) == [str(b) for b in range(8)]
+    for b in range(8):
+        assert (manifest[str(b)]["rows"] > 0) == (b in held), (b, manifest)
+    assert sum(m["rows"] for m in manifest.values()) == n
+    metric_buckets = {
+        r["bucket_id"]
+        for r in spark.read.parquet(f"{root}/metrics").select("bucket_id").collect()
+    }
+    assert metric_buckets == held
+    assert spark.read.parquet(f"{root}/labeled").count() == n
+
+
+def test_cross_bucket_copies_get_the_oracle_labels(spark, tmp_path):
+    """A text that a rule drops, with copies in two buckets: the later
+    copy is dup_content before the scorer (NULL metric columns, never
+    scored), and every content hash carries the same reason counts as
+    one oracle pass over the whole input — no per-bucket allowance."""
+    from collections import Counter
+    from datetime import datetime, timezone
+
+    from pyspark.sql import functions as F
+
+    from dataqualitykit_spark.fixtures import PAGES_SCHEMA, generate_pages
+    from dataqualitykit_spark.oracle import run_oracle
+    from dataqualitykit_spark.semantics import content_hash
+
+    ts = datetime(2024, 5, 1, tzinfo=timezone.utc)
+    short = "too short to keep, copied across buckets"
+    copies = [
+        {"url": f"https://copy-{i}.example/a", "warc_ts": ts, "html": None,
+         "text": short, "lang": "en"}
+        for i in range(4)
+    ]
+    rows = generate_pages(160, seed=5) + copies
+    src = spark.createDataFrame(rows, schema=PAGES_SCHEMA)
+    bucket_of = {
+        r["url"]: r["b"]
+        for r in spark.createDataFrame(copies, schema=PAGES_SCHEMA)
+        .select("url", F.pmod(F.xxhash64("url"), F.lit(4)).cast("int").alias("b"))
+        .collect()
+    }
+    assert len(set(bucket_of.values())) >= 2, bucket_of  # precondition
+
+    root = str(tmp_path / "xb_content")
+    run_resumable(spark, src, root, n_buckets=4)
+    out = spark.read.parquet(f"{root}/labeled")
+
+    first = min(bucket_of.values())
+    got = {
+        r["url"]: r
+        for r in out.filter(F.col("url").startswith("https://copy-")).collect()
+    }
+    assert Counter(r["drop_reason"] for r in got.values()) == Counter(
+        {"too_short": 1, "dup_content": 3}
+    ), {u: r["drop_reason"] for u, r in got.items()}
+    for url, r in got.items():
+        if bucket_of[url] > first:
+            assert r["drop_reason"] == "dup_content", (url, r["drop_reason"])
+            assert r["scrubbed_text"] is None and r["n_chars"] is None, url
+
+    want = Counter(
+        (content_hash(r["text"] or ""), o.drop_reason)
+        for r, o in zip(rows, run_oracle(rows))
+    )
+    labeled = Counter(
+        (r["content_md5"], r["drop_reason"])
+        for r in out.select("content_md5", "drop_reason").collect()
+    )
+    assert labeled == want
 
 
 def _reason_counts(df):

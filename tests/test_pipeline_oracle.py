@@ -86,3 +86,32 @@ def test_metrics_table(spark):
     reasons = {r["reason"]: r["docs"] for r in m}
     assert reasons.get("kept", 0) > 0
     assert sum(reasons.values()) > 500  # includes snapshot extras
+
+
+def test_warm_plan_build_round_trips(spark):
+    """The plan is built from Columns cached per config: a warm
+    default-config build stays within a few hundred py4j round trips
+    (rebuilding every Column per call made ~3k)."""
+    import gc
+
+    import py4j.clientserver as cs
+
+    df = pages_dataframe(spark, 200)
+    run_pipeline(df)  # warm: fills the per-config Column cache
+    send = cs.ClientServerConnection.send_command
+    trips = 0
+
+    def counting(self, command):
+        nonlocal trips
+        trips += 1
+        return send(self, command)
+
+    gc.collect()
+    gc.disable()
+    cs.ClientServerConnection.send_command = counting
+    try:
+        run_pipeline(df)
+    finally:
+        cs.ClientServerConnection.send_command = send
+        gc.enable()
+    assert 0 < trips <= 300, trips
