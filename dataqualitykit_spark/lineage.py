@@ -37,7 +37,8 @@ empty bucket records rows=0 and writes no metrics rows.
 
 NEAR-dup dedup spans buckets through persisted signatures instead
 (cfg.dedup_near), after run_pipeline: each bucket
-persists the MinHash signatures of its near-dedup participants (exact-dedup
+persists the MinHash signatures (with their band keys on the default
+xxhash64 path) of its near-dedup participants (exact-dedup
 survivors — kept, quality-dropped and near-dropped rows alike, so
 transitive chains propagate) to a `near_sigs` table partitioned by
 bucket_id; before finalizing bucket b, its participants' signatures
@@ -283,7 +284,10 @@ def run_resumable(
             )
             # the near stage reuses `labeled` three times (participants,
             # relabel join, write) — cut the UDF-scoring lineage once; the
-            # working set is one BUCKET, bounded by construction
+            # working set is one BUCKET, bounded by construction. Not
+            # lazy: under AQE the checkpoint call runs the bucket plan's
+            # shuffle stages here; only its last stage (the scorer) waits
+            # for the first consumer's job.
             labeled = labeled.localCheckpoint(eager=False)
             # near-dedup participants = exact-dedup survivors (the same
             # set run_pipeline bands within the bucket): kept rows AND
@@ -304,6 +308,8 @@ def run_resumable(
                 .select("url", F.col("_prescrub_text").alias("text"))
                 .dropDuplicates(["url"])
             )
+            # (this checkpoint call runs the dropDuplicates shuffle, and
+            # with it the scorer stage of `labeled`)
             sigs_b = sig_fn(
                 texts, "text", "url", cfg.near_dup_hashes
             ).localCheckpoint(eager=False)
@@ -320,7 +326,7 @@ def run_resumable(
                 prior_sigs = (
                     spark.read.parquet(io._path("near_sigs"))
                     .filter(F.col("bucket_id").isin(*claimed))
-                    .select("id", "sig")
+                    .drop("bucket_id")
                 )
                 near_hits = (
                     _dedup.minhash_jaccard_cross(
@@ -345,13 +351,14 @@ def run_resumable(
                     .withColumn("keep", F.col("keep") & F.col("_nd_prior").isNull())
                     .drop("_nd_prior")
                 )
-            # persist this bucket's participant signatures (idempotent
-            # dynamic overwrite, same contract as the labeled write). The
-            # sig type is hash-family-specific — do not switch
-            # cfg.near_dup_hash mid-run.
+            # persist this bucket's participant signatures, with their
+            # band keys on the xxhash64 path, so later buckets band
+            # against the same keys (idempotent dynamic overwrite, same
+            # contract as the labeled write). The sig type is
+            # hash-family-specific — do not switch cfg.near_dup_hash
+            # mid-run.
             (
-                sigs_b.select(F.col("id"), F.col("sig"))
-                .withColumn("bucket_id", F.lit(b))
+                sigs_b.withColumn("bucket_id", F.lit(b))
                 .write.mode("overwrite")
                 .option("partitionOverwriteMode", "dynamic")
                 .partitionBy("bucket_id")

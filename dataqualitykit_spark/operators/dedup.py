@@ -288,12 +288,28 @@ def _gram_pieces(batch, k: int):
     return ids, valid, fb_rows, fb_vals, grams, gram_lens, gram_starts
 
 
+def _band_keys_vec(sig_mat, rows_per_band: int):
+    """LSH band keys of an (n, num_hashes) int64 signature matrix:
+    XXH64.hashLong chained over band b's slots b*r .. b*r+r-1 from seed 42,
+    bit-exact with F.xxhash64(sig[b*r], ..., sig[b*r+r-1]) (pinned in
+    tests/test_minhash_accuracy.py). Returns (n, bands) int64."""
+    import numpy as np
+
+    n, m = sig_mat.shape
+    slots = sig_mat.view(np.uint64).reshape(n, m // rows_per_band, rows_per_band)
+    h = _xxh64_long_vec(slots[:, :, 0], 42)
+    for j in range(1, rows_per_band):
+        h = _xxh64_long_vec(slots[:, :, j], h)
+    return h.view(np.int64)
+
+
 def minhash_signatures(
     df: DataFrame,
     text_col: str,
     id_col: str,
     num_hashes: int = 32,
     shingle_k: int = 3,
+    rows_per_band: int = 4,
 ) -> DataFrame:
     """MinHash signature per doc over word-hash-combined shingle hashes
     (with_shingle_hashes — no shingle strings built); the i-th permutation
@@ -310,10 +326,19 @@ def minhash_signatures(
     dedup signature stage shrinks the same way. Only (id, hashes) crosses
     the Arrow boundary; still a zero-shuffle projection. NULL-text docs
     keep the projection form's contract: a VALID array of 32 NULL slots.
-    Returns (id, sig array<bigint>)."""
+
+    The same pass emits the LSH band keys (`bands`, num_hashes //
+    rows_per_band of them, see _band_keys_vec): the kernel already holds
+    every slot in numpy, so banding needs no second engine pass. An
+    all-NULL signature gets 42 in every band, as Spark's null-skipping
+    xxhash64 fold does.
+    Returns (id, sig array<bigint>, bands array<bigint>)."""
     import numpy as np
     import pyarrow as pa
 
+    if num_hashes % rows_per_band != 0:
+        raise ValueError("num_hashes must be divisible by rows_per_band")
+    n_bands = num_hashes // rows_per_band
     src = _word_hash_source(df, text_col, id_col, shingle_k)
     id_ddl = src.schema["id"].dataType.simpleString()
     seeds = [_xxh64_int_scalar(i) for i in range(num_hashes)]
@@ -338,18 +363,32 @@ def minhash_signatures(
                     sig_mat[gram_rows, i] = np.minimum.reduceat(hv, starts)
                 if fbu.shape[0]:
                     sig_mat[fb_rows, i] = _xxh64_long_vec(fbu, s).view(np.int64)
+            band_mat = _band_keys_vec(sig_mat, rows_per_band)
+            band_mat[~valid] = 42
             elem_valid = np.repeat(valid, num_hashes)
-            values = pa.array(sig_mat.reshape(-1), mask=~elem_valid)
-            offsets = pa.array(
-                np.arange(n_rows + 1, dtype=np.int32) * num_hashes,
-                type=pa.int32(),
-            )
             yield pa.RecordBatch.from_arrays(
-                [ids, pa.ListArray.from_arrays(offsets, values)],
-                names=["id", "sig"],
+                [
+                    ids,
+                    _list_array(sig_mat, num_hashes, mask=~elem_valid),
+                    _list_array(band_mat, n_bands),
+                ],
+                names=["id", "sig", "bands"],
             )
 
-    return src.mapInArrow(sigs, schema=f"id {id_ddl}, sig array<bigint>")
+    return src.mapInArrow(
+        sigs, schema=f"id {id_ddl}, sig array<bigint>, bands array<bigint>"
+    )
+
+
+def _list_array(mat, width: int, mask=None):
+    """Fixed-width (n, width) int64 matrix -> Arrow list<int64> column."""
+    import numpy as np
+    import pyarrow as pa
+
+    offsets = pa.array(
+        np.arange(mat.shape[0] + 1, dtype=np.int32) * width, type=pa.int32()
+    )
+    return pa.ListArray.from_arrays(offsets, pa.array(mat.reshape(-1), mask=mask))
 
 
 def minhash_signatures_agg(
@@ -380,28 +419,11 @@ def minhash_signatures_agg(
     return agged.select("id", sig.alias("sig"))
 
 
-def _band_keys_fast(sigs: DataFrame, bands: int, rows_per_band: int) -> DataFrame:
-    """(id, band, bucket:long) band keys over xxhash64 signatures — the
-    sig array is projected away before any exchange."""
-    return sigs.select(
-        "id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        F.xxhash64(
-                            *[
-                                F.col("sig").getItem(b * rows_per_band + r)
-                                for r in range(rows_per_band)
-                            ]
-                        ).alias("bucket"),
-                    )
-                    for b in range(bands)
-                ]
-            )
-        ).alias("bk"),
-    ).select("id", "bk.band", "bk.bucket")
+def _band_keys_fast(sigs: DataFrame) -> DataFrame:
+    """(id, band, bucket:long) band keys over xxhash64 signatures: the
+    `bands` column minhash_signatures computed, one row per band; the sig
+    array is projected away before any exchange."""
+    return sigs.selectExpr("id", "posexplode(bands) AS (band, bucket)")
 
 
 def _band_keys_portable(
@@ -435,26 +457,6 @@ def _band_keys_portable(
     ).select("id", "bk.band", "bk.bucket")
 
 
-def lsh_candidate_pairs(
-    sigs: DataFrame, bands: int = 8, rows_per_band: int = 4
-) -> DataFrame:
-    """Band the signatures and self-join on (band, band_hash) — the classic
-    LSH bucket join. Shuffles only (band_key, id), never the text. Returns
-    distinct candidate (id_a, id_b) with id_a < id_b."""
-    banded = _band_keys_fast(sigs, bands, rows_per_band)
-    # join on=[names] so Catalyst plans a shuffled hash/sort-merge EQUI-join;
-    # a raw self-join condition on aliased frames risks ambiguous-attribute
-    # resolution degrading to BroadcastNestedLoopJoin (O(n^2) — observed)
-    a = banded.withColumnRenamed("id", "id_a")
-    b = banded.withColumnRenamed("id", "id_b")
-    return (
-        a.join(b, on=["band", "bucket"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .distinct()
-    )
-
-
 def minhash_jaccard(
     df: DataFrame,
     text_col: str,
@@ -467,19 +469,16 @@ def minhash_jaccard(
     num_hashes // rows_per_band) so any signature width is consistent.
     Returns (id_a, id_b, est_jaccard).
 
-    Signatures are materialized once via LAZY localCheckpoint for the
-    triple reuse (banding + two joins): lineage is cut identically to the
-    eager form, but materialization happens inside the first consumer's
-    job instead of a separate blocking job up front (the eager barrier
-    cost a fixed extra job round-trip per call — round-2 bench regression).
-    The blocks are freed when the returned frame is garbage-collected — no
-    cache leaking across calls (a .cache() here would pin executor storage
-    until someone remembers spark.catalog.clearCache())."""
-    if num_hashes % rows_per_band != 0:
-        raise ValueError("num_hashes must be divisible by rows_per_band")
-    sigs = minhash_signatures(df, text_col, id_col, num_hashes).localCheckpoint(
-        eager=False
-    )
+    The signatures are local-checkpointed once for their three uses
+    (banding + two estimate joins), so the signature kernel runs once.
+    The checkpoint is not free: under AQE, `localCheckpoint(eager=False)`
+    runs the shuffle stages below the signatures when it is called; only
+    the signature pass itself waits for the first consumer's job. The
+    blocks are freed when the returned frame is garbage-collected — no
+    cache leaking across calls."""
+    sigs = minhash_signatures(
+        df, text_col, id_col, num_hashes, rows_per_band=rows_per_band
+    ).localCheckpoint(eager=False)
     return minhash_jaccard_from_sigs(sigs, num_hashes, rows_per_band)
 
 
@@ -490,37 +489,98 @@ def minhash_jaccard_from_sigs(
     portable: bool = False,
 ) -> DataFrame:
     """LSH self-join candidates + slot-match estimate over an EXISTING
-    (id, sig) frame — the shared core of minhash_jaccard and its portable
-    twin, reusable when signatures are already materialized (streaming
+    signature frame — (id, sig, bands) from minhash_signatures, or
+    (id, sig) from minhash_signatures_portable with portable=True —
+    reusable when signatures are already materialized (streaming
     micro-batches, lineage buckets, a persisted signature table)."""
+    return _lsh_estimate(sigs, sigs, num_hashes, rows_per_band, portable, True)
+
+
+def _lsh_estimate(
+    sigs_a: DataFrame,
+    sigs_b: DataFrame,
+    num_hashes: int,
+    rows_per_band: int,
+    portable: bool,
+    self_join: bool,
+) -> DataFrame:
+    """The one band-join + slot-match core: (id_a, id_b, est_jaccard) for
+    every pair sharing a band bucket, est = matching slots / num_hashes.
+    The band join carries (id, band, bucket) only; signatures join back
+    per candidate pair. A self join keeps id_a < id_b. (SQL strings, not
+    Column chains: with dataFrameDebugging on, every F.* call is ~20 py4j
+    round trips, and this runs on the driver once per near-dedup call.)"""
     if num_hashes % rows_per_band != 0:
         raise ValueError("num_hashes must be divisible by rows_per_band")
-    bands = num_hashes // rows_per_band
-    band_fn = _band_keys_portable if portable else _band_keys_fast
-    banded = band_fn(sigs, bands, rows_per_band)
-    a = banded.withColumnRenamed("id", "id_a")
-    b = banded.withColumnRenamed("id", "id_b")
-    pairs = (
-        a.join(b, on=["band", "bucket"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .distinct()
+
+    def banded(sigs: DataFrame) -> DataFrame:
+        if portable:
+            return _band_keys_portable(sigs, num_hashes // rows_per_band, rows_per_band)
+        return _band_keys_fast(sigs)
+
+    # join on=[names] so Catalyst plans a shuffled hash/sort-merge EQUI-join;
+    # a raw self-join condition on aliased frames risks ambiguous-attribute
+    # resolution degrading to BroadcastNestedLoopJoin (O(n^2) — observed)
+    a = banded(sigs_a).withColumnsRenamed({"id": "id_a"})
+    b = banded(sigs_b).withColumnsRenamed({"id": "id_b"})
+    pairs = a.join(b, on=["band", "bucket"])
+    if self_join:
+        pairs = pairs.filter("id_a < id_b")
+    pairs = pairs.select("id_a", "id_b").distinct()
+    sa = sigs_a.selectExpr("id AS id_a", "sig AS sig_a")
+    sb = sigs_b.selectExpr("id AS id_b", "sig AS sig_b")
+    return pairs.join(sa, "id_a").join(sb, "id_b").selectExpr(
+        "id_a",
+        "id_b",
+        "size(filter(zip_with(sig_a, sig_b, (x, y) -> x = y), m -> m))"
+        f" / {num_hashes} AS est_jaccard",
     )
-    sa = sigs.select(F.col("id").alias("id_a"), F.col("sig").alias("sig_a"))
-    sb = sigs.select(F.col("id").alias("id_b"), F.col("sig").alias("sig_b"))
-    est = (
-        F.size(
-            F.filter(
-                F.zip_with("sig_a", "sig_b", lambda x, y: x == y), lambda m: m
-            )
+
+
+def _min_labels(a, b, n: int):
+    """Component labels of nodes 0..n-1 joined by the edges (a[i], b[i]),
+    as an int64 array: label[v] is the smallest node index in v's
+    component. Min-label hooking (every edge pulls the root of its larger
+    endpoint label down to the smaller label) alternates with pointer
+    jumping until every edge joins equal labels. Labels only fall and
+    each round removes at least one root, so it terminates; pointer
+    jumping keeps the rounds near log(diameter)."""
+    import numpy as np
+
+    lab = np.arange(n, dtype=np.int64)
+    while True:
+        la, lb = lab[a], lab[b]
+        diff = la != lb
+        if not diff.any():
+            return lab
+        np.minimum.at(
+            lab, np.maximum(la[diff], lb[diff]), np.minimum(la[diff], lb[diff])
         )
-        / F.lit(num_hashes)
+        while True:
+            nxt = lab[lab]
+            if np.array_equal(nxt, lab):
+                break
+            lab = nxt
+
+
+def _arrow_components(edges):
+    """(ids, components) Arrow arrays over a two-column Arrow edge table:
+    every node that appears in an edge, and the minimum id of its
+    component. Ids map to indices in a SORTED dictionary, so the minimum
+    index is the minimum id in Spark's order (Arrow sorts strings by their
+    UTF-8 bytes, as Spark compares them). No Python object per edge."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    n = edges.num_rows
+    ends = pa.chunked_array(
+        edges.column(0).chunks + edges.column(1).chunks, type=edges.schema[0].type
     )
-    return (
-        pairs.join(sa, "id_a").join(sb, "id_b").select(
-            "id_a", "id_b", est.alias("est_jaccard")
-        )
-    )
+    ids = pc.unique(ends)
+    ids = ids.take(pc.sort_indices(ids))
+    idx = pc.index_in(ends, value_set=ids).to_numpy(zero_copy_only=False)
+    lab = _min_labels(idx[:n], idx[n:], len(ids))
+    return ids, ids.take(pa.array(lab))
 
 
 def connected_components(
@@ -530,37 +590,66 @@ def connected_components(
     max_iter: int = 25,
     contract_cap: int = 1_000_000,
 ) -> DataFrame:
-    """Connected components over an undirected edge list via iterative
-    min-label propagation — pairs -> clusters with NO graph library, the
-    step the reference's aspirational merge_similar_records
-    (QualityControl.py:2062-2073, blocking_columns undefined) never built.
+    """Connected components over an undirected edge list — pairs ->
+    clusters with NO graph library, the step the reference's aspirational
+    merge_similar_records (QualityControl.py:2062-2073, blocking_columns
+    undefined) never built.
 
     Returns (id, component) for every node APPEARING IN PAIRS; component
     is the minimum id (natural ordering) of the node's component. Nodes
     with no pairs are singletons by definition and are deliberately not
-    materialized — at 10^12 docs the pair-participant set is tiny relative
-    to the corpus, so the loop frames stay small.
+    materialized. `contract_cap` is the most rows ever collected to the
+    driver. Which path runs:
 
-    Shape (r7): one groupBy folds the round-1 propagation into the
-    initial labels (cliques collapse immediately), then the graph is
-    CONTRACTED to its label graph — tiny once cliques are gone — which
-    a single bounded driver collect finishes exactly with min-root
-    union-find (components of a contraction by a within-component
-    vertex map are the original components). Only when the label graph
-    exceeds `contract_cap` rows does the iterative loop below run.
+    1. Driver (the pair list has <= contract_cap rows — per-bucket
+       near-dedup lands here): ONE action, `pairs.limit(cap + 1)
+       .toArrow()`; _arrow_components labels the graph in numpy and the
+       result comes back through createDataFrame(<arrow table>). No
+       checkpoint, no join, no pyspark Row.
+    2. Contract (more pairs than the cap): one groupBy folds the round-1
+       propagation into the initial labels (cliques collapse at once),
+       then the graph is CONTRACTED to its label graph — tiny once
+       cliques are gone — which one bounded Arrow collect finishes
+       exactly with the same numpy labeling (components of a contraction
+       by a within-component vertex map are the original components);
+       the remap joins back as a broadcast.
+    3. Loop (the label graph too exceeds contract_cap; contract_cap=0
+       forces it): iterative min-label propagation, below. It is the
+       only path that handles graphs of any size.
 
     Each loop iteration is ONE driver action running a propagation round
     (an equi-join + one groupBy, shuffling (id,label) pairs only) composed
     with a POINTER-DOUBLING shortcut (label := label-node's own label) —
     labels' hop-distance to the component min roughly halves per action,
     so deep chains converge in O(log diameter) actions; shallow clusters
-    (near-dup cliques, the overwhelmingly common case) exit on the first
-    action because the initial labels already carry the round-1 result.
-    Convergence is detected from the SAME frame: the propagate step
-    tracks each node's pre-round label, so zero `label < _old` rows is
-    the fixed-point proof (the shortcut is the identity on a fixed
-    point). Labels are monotone non-increasing per node. localCheckpoint
-    cuts the lineage so plans do not grow across iterations."""
+    exit on the first action because the initial labels already carry
+    the round-1 result. Convergence is detected from the SAME frame: the
+    propagate step tracks each node's pre-round label, so zero
+    `label < _old` rows is the fixed-point proof (the shortcut is the
+    identity on a fixed point). Labels are monotone non-increasing per
+    node. localCheckpoint cuts the lineage so plans do not grow across
+    iterations; under AQE each checkpoint call runs its plan's shuffle
+    stages when it is called."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    id_t = pairs.schema[id_a].dataType
+    if pairs.schema[id_b].dataType != id_t:
+        id_t = pairs.select(id_a).union(pairs.select(id_b)).schema[0].dataType
+    spark = pairs.sparkSession
+    t = id_t.simpleString()
+    ends = pairs.selectExpr(
+        f"CAST(`{id_a}` AS {t}) AS src", f"CAST(`{id_b}` AS {t}) AS dst"
+    )
+    edge_t = ends.limit(contract_cap + 1).toArrow()
+    if edge_t.num_rows <= contract_cap:
+        ids, comp = _arrow_components(edge_t)
+        return spark.createDataFrame(
+            pa.table({"id": ids, "component": comp}),
+            T.StructType(
+                [T.StructField("id", id_t), T.StructField("component", id_t)]
+            ),
+        )
 
     def propagate(lbls: DataFrame) -> DataFrame:
         nbr = edges.join(
@@ -599,22 +688,14 @@ def connected_components(
     # no edge-dedup pass: duplicate input pairs only add rows to the
     # propagate union, which the min() aggregate absorbs — a .distinct()
     # here cost one full exchange of the edge list per CC run for zero
-    # semantic effect (callers with heavy duplication, e.g. multi-probe
-    # semantic_dedup, pay a slightly fatter join instead of a shuffle)
-    edges = (
-        pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
-        .union(pairs.select(F.col(id_b).alias("src"), F.col(id_a).alias("dst")))
-        .localCheckpoint(eager=False)
+    # semantic effect
+    edges = ends.union(ends.selectExpr("dst AS src", "src AS dst")).localCheckpoint(
+        eager=False
     )
     # initial labels = the ROUND-1 propagation result, folded into one
     # groupBy over the (symmetric) edge list: label(v) = min(v, min of
     # v's neighbors) — identical to propagate(id->id) but with no join,
-    # no separate distinct-ids job, and one fewer loop round. Shallow
-    # clusters (near-dup cliques, the overwhelmingly common case) then
-    # converge in a SINGLE loop iteration: one propagate action that
-    # verifies the fixed point. Checkpoints are LAZY — the first count
-    # action materializes edges and labels inside its own job instead of
-    # two blocking driver round-trips up front.
+    # no separate distinct-ids job, and one fewer loop round.
     labels = (
         edges.groupBy("src")
         .agg(F.min("dst").alias("_mn"))
@@ -625,67 +706,40 @@ def connected_components(
         .localCheckpoint(eager=False)
     )
 
-    # contract-and-finish (r7): the round-1 labels collapse cliques — the
+    # contract-and-finish: the round-1 labels collapse cliques — the
     # overwhelmingly common near-dup cluster shape — so the LABEL GRAPH
     # (each edge mapped to its endpoints' labels, self-loops dropped,
-    # distinct) is tiny: only chain-shaped clusters that round 1 left
-    # unfinished contribute edges. Contraction by a within-component
-    # vertex map preserves components exactly (every label value is a
-    # component-member id), so union-find over the collected label graph
-    # with min-roots yields each label's true component minimum, and
-    # final(id) = root(label(id)) via one broadcast join. Measured at
-    # 400k docs / 1.5M pairs: the loop needed 6 driver actions, the last
-    # 5 rounds (~1.3 s each, full-edge-list joins) moving <30 straggler
-    # labels; the contract path replaces them with ONE bounded action.
-    # The collect is capped (contract_cap rows, counted via limit) — a
-    # label graph that big means round 1 barely contracted anything, and
-    # the iterative loop below handles it at any scale.
+    # one direction, distinct) is tiny: only chain-shaped clusters that
+    # round 1 left unfinished contribute edges. Every label value is a
+    # component-member id, so labeling the label graph gives each
+    # label's true component minimum, and final(id) = root(label(id))
+    # via one broadcast join. Measured at 400k docs / 1.5M pairs: the
+    # loop needed 6 driver actions, the last 5 rounds (~1.3 s each,
+    # full-edge-list joins) moving <30 straggler labels; this replaces
+    # them with ONE bounded Arrow collect.
     la = labels.select(F.col("id").alias("src"), F.col("label").alias("_la"))
     lb = labels.select(F.col("id").alias("dst"), F.col("label").alias("_lb"))
     label_edges = (
         edges.join(la, "src")
         .join(lb, "dst")
-        .filter(F.col("_la") != F.col("_lb"))
+        .filter(F.col("_la") < F.col("_lb"))
         .select("_la", "_lb")
         .distinct()
     )
-    le_rows = label_edges.limit(contract_cap + 1).collect()
-    if len(le_rows) <= contract_cap:
-        if not le_rows:
+    le_t = label_edges.limit(contract_cap + 1).toArrow()
+    if le_t.num_rows <= contract_cap:
+        if le_t.num_rows == 0:
             return labels.withColumnRenamed("label", "component")
-        parent: dict = {}
-
-        def find(x):
-            r = x
-            while parent.get(r, r) != r:
-                r = parent[r]
-            while parent.get(x, x) != x:
-                parent[x], x = r, parent[x]
-            return r
-
-        for row in le_rows:
-            ra, rb = find(row["_la"]), find(row["_lb"])
-            if ra != rb:
-                # min-root: the union-find root IS the component minimum
-                lo, hi = (ra, rb) if ra < rb else (rb, ra)
-                parent[hi] = lo
-        remap = [(x, find(x)) for x in list(parent)]
-        label_t = labels.schema["label"].dataType
-        m = pairs.sparkSession.createDataFrame(
-            remap,
+        lbl, root = _arrow_components(le_t)
+        moved = pc.not_equal(lbl, root)
+        m = spark.createDataFrame(
+            pa.table({"label": lbl.filter(moved), "_root": root.filter(moved)}),
             T.StructType(
-                [
-                    T.StructField("label", label_t),
-                    T.StructField("_root", label_t),
-                ]
+                [T.StructField("label", id_t), T.StructField("_root", id_t)]
             ),
         )
-        return (
-            labels.join(F.broadcast(m), "label", "left")
-            .select(
-                "id",
-                F.coalesce(F.col("_root"), F.col("label")).alias("component"),
-            )
+        return labels.join(F.broadcast(m), "label", "left").select(
+            "id", F.coalesce(F.col("_root"), F.col("label")).alias("component")
         )
 
     for _it in range(max_iter):
@@ -784,34 +838,14 @@ def minhash_jaccard_portable(
 ) -> DataFrame:
     """LSH candidate pairs + estimated Jaccard over the md5-portable
     signatures: band buckets are md5 of the '|'-joined band slots; the
-    band self-join and slot-match estimate mirror minhash_jaccard exactly.
-    Returns (id_a, id_b, est_jaccard)."""
-    if num_hashes % rows_per_band != 0:
-        raise ValueError("num_hashes must be divisible by rows_per_band")
-    bands = num_hashes // rows_per_band
+    band self-join and slot-match estimate are minhash_jaccard's
+    (_lsh_estimate), and so is the checkpoint, with the same cost (its
+    shuffle stages run when it is called). Returns (id_a, id_b,
+    est_jaccard)."""
     sigs = minhash_signatures_portable(
         df, text_col, id_col, num_hashes, shingle_k
-    ).localCheckpoint(eager=False)  # lazy: same lineage cut, no extra job
-    banded = _band_keys_portable(sigs, bands, rows_per_band)
-    a = banded.withColumnRenamed("id", "id_a")
-    b = banded.withColumnRenamed("id", "id_b")
-    pairs = (
-        a.join(b, on=["band", "bucket"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .distinct()
-    )
-    sa = sigs.select(F.col("id").alias("id_a"), F.col("sig").alias("sig_a"))
-    sb = sigs.select(F.col("id").alias("id_b"), F.col("sig").alias("sig_b"))
-    est = (
-        F.size(
-            F.filter(F.zip_with("sig_a", "sig_b", lambda x, y: x == y), lambda m: m)
-        )
-        / F.lit(num_hashes)
-    )
-    return pairs.join(sa, "id_a").join(sb, "id_b").select(
-        "id_a", "id_b", est.alias("est_jaccard")
-    )
+    ).localCheckpoint(eager=False)
+    return minhash_jaccard_from_sigs(sigs, num_hashes, rows_per_band, portable=True)
 
 
 def minhash_jaccard_cross(
@@ -823,35 +857,16 @@ def minhash_jaccard_cross(
 ) -> DataFrame:
     """LSH candidates BETWEEN two signature sets (cross join, not self):
     (id_a from sigs_a, id_b from sigs_b, est_jaccard) for every band-bucket
-    collision. Both inputs are (id, sig) frames from minhash_signatures
-    (portable=False, array<bigint>) or minhash_signatures_portable
-    (portable=True, array<string>) — the band derivation matches the
-    within-set functions bit-for-bit so within-set and cross-set candidacy
-    use identical collision geometry.
+    collision. Both inputs are (id, sig, bands) frames from
+    minhash_signatures (portable=False) or (id, sig) frames from
+    minhash_signatures_portable (portable=True) — the same band keys and
+    estimate as the within-set functions (_lsh_estimate), so within-set
+    and cross-set candidacy use identical collision geometry.
 
     This is the cross-BUCKET near-dedup primitive: lineage.run_resumable
     bands the current bucket's signatures against the persisted signatures
-    of completed buckets, mirroring the content_md5 prior-join. The band
-    join carries (id, band, bucket) only; signatures join back per
-    candidate pair for the slot-match estimate."""
-    if num_hashes % rows_per_band != 0:
-        raise ValueError("num_hashes must be divisible by rows_per_band")
-    bands = num_hashes // rows_per_band
-    band_fn = _band_keys_portable if portable else _band_keys_fast
-    a = band_fn(sigs_a, bands, rows_per_band).withColumnRenamed("id", "id_a")
-    b = band_fn(sigs_b, bands, rows_per_band).withColumnRenamed("id", "id_b")
-    pairs = a.join(b, on=["band", "bucket"]).select("id_a", "id_b").distinct()
-    sa = sigs_a.select(F.col("id").alias("id_a"), F.col("sig").alias("sig_a"))
-    sb = sigs_b.select(F.col("id").alias("id_b"), F.col("sig").alias("sig_b"))
-    est = (
-        F.size(
-            F.filter(F.zip_with("sig_a", "sig_b", lambda x, y: x == y), lambda m: m)
-        )
-        / F.lit(num_hashes)
-    )
-    return pairs.join(sa, "id_a").join(sb, "id_b").select(
-        "id_a", "id_b", est.alias("est_jaccard")
-    )
+    of completed buckets, mirroring the content_md5 prior-join."""
+    return _lsh_estimate(sigs_a, sigs_b, num_hashes, rows_per_band, portable, False)
 
 
 def simhash_portable(

@@ -477,12 +477,20 @@ def _near_dup_urls(base: DataFrame, cfg: PipelineConfig) -> DataFrame:
     """Non-canonical members of near-dup clusters among exact-dedup
     survivors, as (url, _nd=True): MinHash-LSH pairs -> connected
     components -> every url but the component's canonical (min url) one.
-    The pair/CC frames hold only near-dup PARTICIPANTS — tiny relative to
-    the corpus — so the left join back is broadcastable by AQE; the
-    corpus itself is never re-shuffled. Nothing is pinned: the pairs
-    branch and the join-back each evaluate the base subtree (one extra
-    source scan beats caching the corpus in executor storage; run
-    near-dedup per lineage bucket to bound the working set)."""
+
+    This stage is eager; building the plan runs Spark jobs:
+    - the signature checkpoint runs the base subtree's shuffle stages
+      when it is called (AQE);
+    - connected_components collects the pair list as Arrow in ONE action
+      and labels it on the driver when it has at most contract_cap rows
+      (per-bucket near-dedup lands there); a bigger pair list takes its
+      distributed contract/loop path instead.
+    The (url, component) frame holds only near-dup PARTICIPANTS — tiny
+    relative to the corpus — so the left join back is broadcastable by
+    AQE; the corpus itself is never re-shuffled. The join-back evaluates
+    the base subtree once more (one extra source scan beats caching the
+    corpus in executor storage; run near-dedup per lineage bucket to
+    bound the working set)."""
     from .operators import dedup as _dedup
 
     surv = base.filter(F.col("_survivor")).select("url", "text")
@@ -496,11 +504,7 @@ def _near_dup_urls(base: DataFrame, cfg: PipelineConfig) -> DataFrame:
         )
     pairs = pairs.filter(F.col("est_jaccard") >= cfg.near_dup_threshold)
     comp = _dedup.connected_components(pairs)
-    return (
-        comp.filter(F.col("id") != F.col("component"))
-        .select(F.col("id").alias("url"))
-        .withColumn("_nd", F.lit(True))
-    )
+    return comp.filter("id != component").selectExpr("id AS url", "true AS _nd")
 
 
 def _token_budget(labeled: DataFrame, cfg: PipelineConfig) -> DataFrame:

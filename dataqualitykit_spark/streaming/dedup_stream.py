@@ -83,30 +83,12 @@ def near_dup_pairs_stream(
     state_ttl_ms exactly like dedup_stream."""
     from ..operators.dedup import minhash_signatures
 
-    if num_hashes % rows_per_band != 0:
-        raise ValueError("num_hashes must be divisible by rows_per_band")
-    bands = num_hashes // rows_per_band
-    sigs = minhash_signatures(stream, text_col, id_col, num_hashes)
+    sigs = minhash_signatures(
+        stream, text_col, id_col, num_hashes, rows_per_band=rows_per_band
+    )
     banded = sigs.select(
-        "id",
-        "sig",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        F.xxhash64(
-                            *[
-                                F.col("sig").getItem(b * rows_per_band + r)
-                                for r in range(rows_per_band)
-                            ]
-                        ).alias("bucket"),
-                    )
-                    for b in range(bands)
-                ]
-            )
-        ).alias("bk"),
-    ).select("id", "sig", "bk.band", "bk.bucket")
+        "id", "sig", F.posexplode("bands").alias("band", "bucket")
+    )
 
     def collide(
         key: Any, pdfs: Iterator[pd.DataFrame], state: GroupState
@@ -205,7 +187,9 @@ def near_dedup_labeler(
 
     def label_batch(batch: DataFrame, batch_id: int) -> None:
         spark = batch.sparkSession
-        sigs = minhash_signatures(batch, text_col, id_col, num_hashes).localCheckpoint()
+        sigs = minhash_signatures(
+            batch, text_col, id_col, num_hashes, rows_per_band=rows_per_band
+        ).localCheckpoint()
         within = minhash_jaccard_from_sigs(sigs, num_hashes, rows_per_band).filter(
             F.col("est_jaccard") >= threshold
         )
@@ -221,7 +205,7 @@ def near_dedup_labeler(
             prior = (
                 spark.read.parquet(sig_store_path)
                 .filter(F.col("_batch_id") < F.lit(batch_id))
-                .select("id", "sig")
+                .select("id", "sig", "bands")
             )
             hits = (
                 minhash_jaccard_cross(sigs, prior, num_hashes, rows_per_band)

@@ -333,6 +333,36 @@ def test_numpy_xxh64_matches_spark(spark):
         assert [int(x) for x in mine] == got, f"seed {i}"
 
 
+def test_band_keys_match_spark(spark):
+    """The `bands` column the signature kernel emits must be bit-exact
+    with the JVM band key F.xxhash64(sig[b*r], ..., sig[b*r+r-1]) —
+    including the NULL-text all-NULL signature (42 in every band, Spark's
+    null-skipping fold), empty and under-3-word texts, and a second band
+    shape. The JVM expression lives only here, as the reference."""
+    from dataqualitykit_spark.fixtures import generate_pages
+
+    texts = [p["text"] for p in generate_pages(120)]
+    texts += [None, "", "two words", "x", "  ", "one two three"]
+    assert None in texts
+    df = spark.createDataFrame(list(enumerate(texts)), "doc_id long, text string")
+    for num_hashes, r in ((32, 4), (12, 3)):
+        sigs = dedup.minhash_signatures(
+            df, "text", "doc_id", num_hashes, rows_per_band=r
+        )
+        jvm = F.array(
+            *[
+                F.xxhash64(*[F.col("sig")[b * r + j] for j in range(r)])
+                for b in range(num_hashes // r)
+            ]
+        )
+        rows = sigs.select("id", "sig", "bands", jvm.alias("jvm")).collect()
+        assert len(rows) == len(texts)
+        for row in rows:
+            assert row["bands"] == row["jvm"], (num_hashes, row["id"])
+        null_row = next(row for row in rows if texts[row["id"]] is None)
+        assert null_row["bands"] == [42] * (num_hashes // r)
+
+
 def test_minhash_signatures_null_and_parity(spark):
     """The Arrow signature pass keeps the projection form's contract:
     NULL text -> a VALID 32-slot all-NULL array; values equal the

@@ -87,8 +87,9 @@ def test_near_dedup_off_by_default(near_golden):
 def test_connected_components_raises_on_max_iter_exhaustion(spark):
     # a 12-edge path needs ~11 propagation rounds; max_iter=2 double-rounds
     # (4 propagation rounds) must fail loudly, never return split labels.
-    # contract_cap=0 forces the iterative fallback — the r7 contract path
-    # would otherwise finish this chain exactly in one bounded collect.
+    # contract_cap=0 forces the iterative fallback — the driver and
+    # contract paths would otherwise finish this chain exactly in one
+    # bounded collect.
     pairs = spark.createDataFrame(
         [(i, i + 1) for i in range(12)], "id_a int, id_b int"
     )
@@ -96,46 +97,86 @@ def test_connected_components_raises_on_max_iter_exhaustion(spark):
         dedup.connected_components(pairs, max_iter=2, contract_cap=0)
 
 
-def test_connected_components_contract_matches_loop(spark):
-    """The r7 contract-and-finish path (label-graph union-find) must give
-    byte-identical components to the iterative loop on shapes the round-1
-    fold does NOT finish: deep chains, a chain-of-cliques, and string ids
-    (Spark's binary string ordering == python's — both code-point order)."""
-    cases = [
-        # 30-node path: worst case for label propagation
-        [(i, i + 1) for i in range(30)],
-        # two cliques bridged by a chain + an isolated pair
-        [(a, b) for a in range(5) for b in range(a + 1, 5)]
-        + [(ii, ii + 1) for ii in range(4, 9)]
-        + [(a, b) for a in range(8, 13) for b in range(a + 1, 13)]
-        + [(100, 101)],
-    ]
-    for edges in cases:
-        pairs = spark.createDataFrame(edges, "id_a long, id_b long")
-        fast = {
-            (r["id"], r["component"])
-            for r in dedup.connected_components(pairs).collect()
-        }
-        loop = {
-            (r["id"], r["component"])
-            for r in dedup.connected_components(pairs, contract_cap=0).collect()
-        }
-        assert fast == loop and fast
+def _components_and_path(monkeypatch, pairs, **kw):
+    """(components as a set, path taken). The path shows in how many
+    localCheckpoints the call makes: the driver path none, the contract
+    path two (edges, round-1 labels), the loop more."""
+    cls = type(pairs)  # the classic DataFrame that implements it
+    real = cls.localCheckpoint
+    calls = []
 
-    # string ids through both paths
-    s_edges = [(f"u{i:03d}", f"u{i + 1:03d}") for i in range(20)] + [
-        ("zzz", "aaa")
+    def counting(self, *a, **k):
+        calls.append(1)
+        return real(self, *a, **k)
+
+    with monkeypatch.context() as m:
+        m.setattr(cls, "localCheckpoint", counting)
+        comp = dedup.connected_components(pairs, **kw).collect()
+    comp = {(r["id"], r["component"]) for r in comp}
+    path = {0: "driver", 2: "contract"}.get(len(calls), "loop")
+    return comp, path
+
+
+def test_connected_components_contract_matches_loop(spark, monkeypatch):
+    """The three paths — driver (numpy over the collected pair list), the
+    contract path (label-graph collect) and the iterative loop — give
+    identical components on shapes the round-1 fold does NOT finish:
+    a deep chain, a chain-of-cliques, and string ids (Spark's binary
+    string ordering == Arrow's byte order == python's code-point order).
+    Each contract cap sits below the pair count and at or above the
+    label-graph size (one direction per label edge)."""
+    cases = [
+        # 30-node path: worst case for label propagation; 30 pairs, 29
+        # label edges
+        ([(i, i + 1) for i in range(30)], "id_a long, id_b long", 29),
+        # two cliques bridged by a chain + an isolated pair: 26 pairs
+        # (one repeated), 5 label edges
+        (
+            [(a, b) for a in range(5) for b in range(a + 1, 5)]
+            + [(ii, ii + 1) for ii in range(4, 9)]
+            + [(a, b) for a in range(8, 13) for b in range(a + 1, 13)]
+            + [(100, 101)],
+            "id_a long, id_b long",
+            5,
+        ),
+        # string ids: 21 pairs, 19 label edges
+        (
+            [(f"u{i:03d}", f"u{i + 1:03d}") for i in range(20)] + [("zzz", "aaa")],
+            "id_a string, id_b string",
+            20,
+        ),
     ]
-    pairs = spark.createDataFrame(s_edges, "id_a string, id_b string")
-    fast = {
-        (r["id"], r["component"])
-        for r in dedup.connected_components(pairs).collect()
-    }
-    loop = {
-        (r["id"], r["component"])
-        for r in dedup.connected_components(pairs, contract_cap=0).collect()
-    }
-    assert fast == loop and fast
+    for edges, ddl, cap in cases:
+        pairs = spark.createDataFrame(edges, ddl)
+        assert cap < len(edges)
+        driver, p1 = _components_and_path(monkeypatch, pairs)
+        contract, p2 = _components_and_path(monkeypatch, pairs, contract_cap=cap)
+        loop, p3 = _components_and_path(monkeypatch, pairs, contract_cap=0)
+        assert (p1, p2, p3) == ("driver", "contract", "loop"), ddl
+        assert driver == contract == loop and driver, ddl
+        parent = {}  # python min-root union-find reference
+
+        def root(x):
+            while parent.setdefault(x, x) != x:
+                x = parent[x]
+            return x
+
+        for a, b in edges:
+            ra, rb = root(a), root(b)
+            parent[max(ra, rb)] = min(ra, rb)
+        assert driver == {(x, root(x)) for x in list(parent)}, ddl
+
+
+def test_connected_components_cap_boundary(spark, monkeypatch):
+    """Exactly `contract_cap` pairs stay on the driver path; one more
+    pair takes the distributed path, with the same components."""
+    edges = [(i, i + 1) for i in range(10)]
+    pairs = spark.createDataFrame(edges, "id_a int, id_b int")
+    at_cap, path = _components_and_path(monkeypatch, pairs, contract_cap=10)
+    assert path == "driver"
+    over, path = _components_and_path(monkeypatch, pairs, contract_cap=9)
+    assert path != "driver"
+    assert at_cap == over == {(i, 0) for i in range(11)}
 
 
 def test_paragraph_scrub_pipeline_matches_oracle(spark):
