@@ -1917,8 +1917,8 @@ def q_unicode_nfc(spark, sf):
 
 
 def q_simhash_dup_pairs(spark, sf):
-    """FULL value-hash oracle for the banded hamming join (upgrading the
-    machinery past phash_dedup's invariant form): every 6th doc gets a
+    """FULL value-hash oracle for the banded hamming join
+    (dedup.hamming_dup_pairs): every 6th doc gets a
     near-copy planted at doc_id+100000 (its text plus one tail shingle —
     a handful of flipped simhash bits), codes come from the md5-portable
     60-bit simhash BOTH engines compute bit-identically (the green
@@ -1938,54 +1938,6 @@ def q_simhash_dup_pairs(spark, sf):
     pairs = dedup.hamming_dup_pairs(codes, "simhash", "id", max_hamming=12)
     return pairs.select(
         "id_a", "id_b", F.col("hamming").cast("long").alias("hamming")
-    )
-
-
-def q_phash_dedup(spark, sf):
-    """A/B invariant certification of perceptual-hash media dedup (the
-    dHash pipeline over the stubbed decoder has no SQL mirror — same
-    scheme as the minhash/simhash fast twins): every 4th fixture payload
-    is planted again under media_id+200000, and the INDEPENDENT twin is
-    byte equality (a one-line md5(payload) self-join — different code
-    path from dHash + banded hamming join). With the stub decoder,
-    identical bytes are the ONLY perceptual duplicates, so the two pair
-    sets must agree EXACTLY: 121 pairs both sides (the fixture's natural
-    WAV/PNG/MP4 payload collisions — group sizes 15/3/3/3 + seven 2s —
-    plus the planted copies), zero symmetric difference, zero pairs at
-    nonzero hamming. Oracle = those fixture constants."""
-    from dataqualitykit_spark.operators import multimodal
-
-    fx = multimodal.media_fixture(spark, 60).select("media_id", "payload")
-    planted = fx.filter(F.col("media_id") % 4 == 0).select(
-        (F.col("media_id") + 200000).alias("media_id"), "payload"
-    )
-    corpus = fx.unionByName(planted)
-    pairs = multimodal.phash_dup_pairs(corpus, max_hamming=8).select(
-        "id_a", "id_b", "hamming"
-    )
-    keyed = corpus.select(
-        F.col("media_id").alias("id"), F.md5(F.col("payload")).alias("_k")
-    )
-    eq_pairs = (
-        keyed.alias("a")
-        .join(keyed.alias("b"), "_k")
-        .filter(F.col("a.id") < F.col("b.id"))
-        .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-    )
-    n_media = corpus.agg(F.count(F.lit(1)).cast("long").alias("n_media"))
-    n_eq = eq_pairs.agg(F.count(F.lit(1)).cast("long").alias("n_equal_pairs"))
-    n_ph = pairs.agg(F.count(F.lit(1)).cast("long").alias("n_phash_pairs"))
-    miss = eq_pairs.join(
-        pairs.select("id_a", "id_b"), ["id_a", "id_b"], "left_anti"
-    ).agg(F.count(F.lit(1)).cast("long").alias("n_missing"))
-    extra_or_nonzero = pairs.filter(F.col("hamming") != 0).agg(
-        F.count(F.lit(1)).cast("long").alias("n_nonzero_hamming")
-    )
-    return (
-        n_media.crossJoin(F.broadcast(n_eq))
-        .crossJoin(F.broadcast(n_ph))
-        .crossJoin(F.broadcast(miss))
-        .crossJoin(F.broadcast(extra_or_nonzero))
     )
 
 
@@ -2142,193 +2094,6 @@ def q_decontamination(spark, sf):
     )
 
 
-def q_media_metadata(spark, sf):
-    """Invariant certification of binary container parsing (VERDICT r4
-    item #1 — byte parsing has no SQL mirror, so the value-level check is
-    construction-time ground truth): media_fixture_expected emits, next
-    to each payload, the metadata the parser MUST recover — derived from
-    the generator's construction parameters, never by running the parser.
-    The mapInPandas parse output joined against those columns must show
-    ZERO field mismatches; n_rows=60 and n_parse_ok=30 (odd rows are
-    garbage) are fixture constants the oracle mirrors."""
-    from dataqualitykit_spark.operators import multimodal
-
-    fx = multimodal.media_fixture_expected(spark, 60)
-    parsed = multimodal.media_metadata(
-        fx.select(
-            "media_id", "kind", "payload", "mime", "width", "height",
-            "duration_ms",
-        )
-    )
-    exp = fx.select(
-        "media_id", "exp_format", "exp_width", "exp_height", "exp_channels",
-        "exp_sample_rate_hz", "exp_duration_ms", "exp_parse_ok",
-    )
-    j = parsed.join(exp, "media_id")
-    mismatch = (
-        ~F.col("detected_format").eqNullSafe(F.col("exp_format"))
-        | ~F.col("parsed_width").eqNullSafe(F.col("exp_width"))
-        | ~F.col("parsed_height").eqNullSafe(F.col("exp_height"))
-        | ~F.col("channels").eqNullSafe(F.col("exp_channels"))
-        | ~F.col("sample_rate_hz").eqNullSafe(F.col("exp_sample_rate_hz"))
-        | ~F.col("parsed_duration_ms").eqNullSafe(F.col("exp_duration_ms"))
-        | ~F.col("parse_ok").eqNullSafe(F.col("exp_parse_ok"))
-    )
-    return j.agg(
-        F.count(F.lit(1)).cast("long").alias("n_rows"),
-        F.sum(F.col("parse_ok").cast("int")).cast("long").alias("n_parse_ok"),
-        F.sum(mismatch.cast("int")).cast("long").alias("n_mismatch"),
-    )
-
-
-def q_image_resize(spark, sf):
-    """Invariant certification of the REAL PNG pixel path (round 6: the
-    resize stub is gone — stdlib-zlib decode, exact integer nearest
-    center-sampling, re-encode). Ground truth is construction-time like
-    media_metadata: the fixture's exp_sha256 comes from the closed-form
-    pattern pixel(y,x,c) = (x*(7+2c) + y*(13+3c) + 31i) % 251 plus the
-    resampling SPEC src = floor(((2t+1)*in)/(2*out)) — never by calling
-    resize_nearest — and decode_png itself is pinned against hand-built
-    byte streams in tests/test_png_codec.py, so encode/decode can't
-    self-consistently hide a channel/orientation swap. 48 rows: every
-    third is garbage (quarantine passthrough), 32 resize; zero flag /
-    dimension / pixel mismatches."""
-    from dataqualitykit_spark.operators import multimodal
-
-    fx = multimodal.image_resize_fixture_expected(spark, 48, out_w=16, out_h=12)
-    resized = multimodal.resize_images(
-        fx.select(
-            "media_id", "kind", "payload", "mime", "width", "height",
-            "duration_ms",
-        ),
-        16,
-        12,
-    )
-
-    def pixel_sha(it):
-        import hashlib as _h
-
-        import pandas as _pd
-
-        from dataqualitykit_spark.operators import png_codec as _pc
-
-        for pdf in it:
-            shas = []
-            for p, ok in zip(pdf["payload"], pdf["resized"]):
-                if not ok:
-                    shas.append(None)
-                    continue
-                try:
-                    arr = _pc.decode_png(bytes(p))
-                    shas.append(_h.sha256(arr.tobytes()).hexdigest())
-                except _pc.PngError:
-                    shas.append("DECODE_FAIL")
-            yield _pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "resized": pdf["resized"],
-                    "out_w": pdf["width"],
-                    "out_h": pdf["height"],
-                    "pixel_sha": shas,
-                }
-            )
-
-    hashed = resized.mapInPandas(
-        pixel_sha,
-        "media_id bigint, resized boolean, out_w int, out_h int, "
-        "pixel_sha string",
-    )
-    j = hashed.join(fx.select("media_id", "exp_resized", "exp_sha256"), "media_id")
-    return j.agg(
-        F.count(F.lit(1)).cast("long").alias("n_rows"),
-        F.sum(F.col("resized").cast("int")).cast("long").alias("n_resized"),
-        F.sum(
-            (~F.col("resized").eqNullSafe(F.col("exp_resized"))).cast("int")
-        ).cast("long").alias("n_flag_mismatch"),
-        F.sum(
-            (
-                F.col("resized")
-                & ((F.col("out_w") != 16) | (F.col("out_h") != 12))
-            ).cast("int")
-        ).cast("long").alias("n_dim_mismatch"),
-        F.sum(
-            (~F.col("pixel_sha").eqNullSafe(F.col("exp_sha256"))).cast("int")
-        ).cast("long").alias("n_pixel_mismatch"),
-    )
-
-
-def q_jpeg_resize(spark, sf):
-    """Invariant certification of the REAL baseline-JPEG pixel path
-    (round 6 session 5: huffman + numpy IDCT decoder, no stub): gray
-    block-constant JPEGs at quality 75 round-trip EXACTLY (lum q00 = 8
-    cancels the DC gain — see multimodal.jpeg_resize_fixture_expected),
-    so exp_sha256 is closed-form construction-time ground truth. 48
-    rows: every third garbage (quarantine passthrough), 32 resized,
-    zero flag / dimension / pixel mismatches."""
-    from dataqualitykit_spark.operators import multimodal
-
-    fx = multimodal.jpeg_resize_fixture_expected(spark, 48, out_w=16, out_h=12)
-    resized = multimodal.resize_images(
-        fx.select(
-            "media_id", "kind", "payload", "mime", "width", "height",
-            "duration_ms",
-        ),
-        16,
-        12,
-    )
-
-    def pixel_sha(it):
-        import hashlib as _h
-
-        import pandas as _pd
-
-        from dataqualitykit_spark.operators import png_codec as _pc
-
-        for pdf in it:
-            shas = []
-            for p, ok in zip(pdf["payload"], pdf["resized"]):
-                if not ok:
-                    shas.append(None)
-                    continue
-                try:
-                    arr = _pc.decode_png(bytes(p))
-                    shas.append(_h.sha256(arr.tobytes()).hexdigest())
-                except _pc.PngError:
-                    shas.append("DECODE_FAIL")
-            yield _pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "resized": pdf["resized"],
-                    "out_w": pdf["width"],
-                    "out_h": pdf["height"],
-                    "pixel_sha": shas,
-                }
-            )
-
-    hashed = resized.mapInPandas(
-        pixel_sha,
-        "media_id bigint, resized boolean, out_w int, out_h int, "
-        "pixel_sha string",
-    )
-    j = hashed.join(fx.select("media_id", "exp_resized", "exp_sha256"), "media_id")
-    return j.agg(
-        F.count(F.lit(1)).cast("long").alias("n_rows"),
-        F.sum(F.col("resized").cast("int")).cast("long").alias("n_resized"),
-        F.sum(
-            (~F.col("resized").eqNullSafe(F.col("exp_resized"))).cast("int")
-        ).cast("long").alias("n_flag_mismatch"),
-        F.sum(
-            (
-                F.col("resized")
-                & ((F.col("out_w") != 16) | (F.col("out_h") != 12))
-            ).cast("int")
-        ).cast("long").alias("n_dim_mismatch"),
-        F.sum(
-            (~F.col("pixel_sha").eqNullSafe(F.col("exp_sha256"))).cast("int")
-        ).cast("long").alias("n_pixel_mismatch"),
-    )
-
-
 def q_bpe_tokenize(spark, sf):
     """Invariant certification of the corpus-trained BPE tokenizer
     (round 6: train merges ON the documents table — bounded driver
@@ -2356,217 +2121,6 @@ def q_bpe_tokenize(spark, sf):
         F.sum((~F.col("compress_ok")).cast("int")).cast("long").alias(
             "n_compress_viol"
         ),
-    )
-
-
-def q_audio_spectral(spark, sf):
-    """Invariant certification of FFT dominant-frequency extraction over
-    real PCM decode: the fixture's square waves have period | n_samples
-    (zero leakage), so the dominant bin is EXACTLY the cycle count and
-    its frequency mirrors the same integer expression — the float FFT
-    itself never crosses engines (the compared values are the integer
-    bin and a bit-identical division). 32 rows, 8 garbage, zero
-    mismatches."""
-    from dataqualitykit_spark.operators import multimodal
-
-    fx = multimodal.audio_spectral_fixture_expected(spark, 32)
-    feats = multimodal.audio_spectral(fx.select("media_id", "kind", "payload"))
-    j = feats.join(
-        fx.select(
-            "media_id", "exp_parse_ok", "exp_n_samples", "exp_bin", "exp_freq"
-        ),
-        "media_id",
-    )
-    mismatch = (
-        ~F.col("parse_ok").eqNullSafe(F.col("exp_parse_ok"))
-        | ~F.col("n_samples").eqNullSafe(F.col("exp_n_samples"))
-        | ~F.col("dominant_bin").eqNullSafe(F.col("exp_bin"))
-        | ~F.col("dominant_freq_hz").eqNullSafe(F.col("exp_freq"))
-    )
-    return j.agg(
-        F.count(F.lit(1)).cast("long").alias("n_rows"),
-        F.sum(F.col("parse_ok").cast("int")).cast("long").alias("n_parse_ok"),
-        F.sum(mismatch.cast("int")).cast("long").alias("n_mismatch"),
-    )
-
-
-def q_gif_frames(spark, sf):
-    """Invariant certification of REAL animated-GIF frame extraction
-    (round 6: sample_frames decodes GIF animations — pure-python LZW +
-    canvas compositing — and re-encodes sampled canvases as PNG; the
-    stub fan-out remains only for formats needing a real codec, MP4).
-    Ground truth is construction-time: animation_frames_expected emits
-    one (media_id, ts, sha256) row per frame the sampler MUST produce,
-    from the fixture's closed-form frame values — never by running the
-    codec. 24 fixture rows (8 garbage) at every_ms=250 must yield
-    exactly 96 real PNG frames + 8 stub rows, every real frame matching
-    its expected pixel sha, none unmatched."""
-    from dataqualitykit_spark.operators import multimodal
-
-    fx = multimodal.animation_fixture(spark, 24)
-    sampled = multimodal.sample_frames(fx, every_ms=250)
-
-    def pixel_sha(it):
-        import hashlib as _h
-
-        import pandas as _pd
-
-        from dataqualitykit_spark.operators import png_codec as _pc
-
-        for pdf in it:
-            shas = []
-            for p, mime in zip(pdf["payload"], pdf["mime"]):
-                if mime != "image/png":
-                    shas.append(None)
-                    continue
-                try:
-                    arr = _pc.decode_png(bytes(p))
-                    shas.append(_h.sha256(arr.tobytes()).hexdigest())
-                except _pc.PngError:
-                    shas.append("DECODE_FAIL")
-            yield _pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "mime": pdf["mime"],
-                    "ts": pdf["duration_ms"],
-                    "pixel_sha": shas,
-                }
-            )
-
-    hashed = sampled.mapInPandas(
-        pixel_sha, "media_id bigint, mime string, ts int, pixel_sha string"
-    )
-    exp = multimodal.animation_frames_expected(spark, 24, every_ms=250)
-    j = hashed.join(exp, ["media_id", "ts"], "left")
-    return j.agg(
-        F.count(F.lit(1)).cast("long").alias("n_rows"),
-        F.sum((F.col("mime") == "image/png").cast("int")).cast("long").alias(
-            "n_real_frames"
-        ),
-        F.sum((F.col("mime") == "image/x-stub").cast("int")).cast("long").alias(
-            "n_stub_rows"
-        ),
-        F.sum(
-            (
-                (F.col("mime") == "image/png")
-                & F.col("exp_sha256").isNull()
-            ).cast("int")
-        ).cast("long").alias("n_unmatched"),
-        F.sum(
-            (
-                (F.col("mime") == "image/png")
-                & ~F.col("pixel_sha").eqNullSafe(F.col("exp_sha256"))
-            ).cast("int")
-        ).cast("long").alias("n_sha_mismatch"),
-    )
-
-
-def q_mjpeg_frames(spark, sf):
-    """Invariant certification of REAL MJPEG-MP4 frame extraction (round
-    6: mp4_codec.demux_mjpeg walks the ISO-BMFF stbl sample tables —
-    stts/stsz/stsc/stco — and jpeg_codec decodes each sample; the stub
-    fan-out remains only for entropy-coded video, AVC/HEVC). Ground
-    truth is construction-time: mjpeg_frames_expected emits one
-    (media_id, ts, sha256) row per frame the sampler MUST produce from
-    the fixture's closed-form per-8x8-block tile values — flat blocks at
-    quality 75 round-trip EXACTLY through the JPEG codec (pinned in
-    tests/test_jpeg_codec.py), so the sha never comes from running the
-    demux/decode pipeline. 24 fixture rows (8 garbage) at every_ms=250
-    must yield exactly 96 real PNG frames + 8 stub rows, every real
-    frame matching its expected pixel sha, none unmatched."""
-    from dataqualitykit_spark.operators import multimodal
-
-    fx = multimodal.mjpeg_fixture(spark, 24)
-    sampled = multimodal.sample_frames(fx, every_ms=250)
-
-    def pixel_sha(it):
-        import hashlib as _h
-
-        import pandas as _pd
-
-        from dataqualitykit_spark.operators import png_codec as _pc
-
-        for pdf in it:
-            shas = []
-            for p, mime in zip(pdf["payload"], pdf["mime"]):
-                if mime != "image/png":
-                    shas.append(None)
-                    continue
-                try:
-                    arr = _pc.decode_png(bytes(p))
-                    shas.append(_h.sha256(arr.tobytes()).hexdigest())
-                except _pc.PngError:
-                    shas.append("DECODE_FAIL")
-            yield _pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "mime": pdf["mime"],
-                    "ts": pdf["duration_ms"],
-                    "pixel_sha": shas,
-                }
-            )
-
-    hashed = sampled.mapInPandas(
-        pixel_sha, "media_id bigint, mime string, ts int, pixel_sha string"
-    )
-    exp = multimodal.mjpeg_frames_expected(spark, 24, every_ms=250)
-    j = hashed.join(exp, ["media_id", "ts"], "left")
-    return j.agg(
-        F.count(F.lit(1)).cast("long").alias("n_rows"),
-        F.sum((F.col("mime") == "image/png").cast("int")).cast("long").alias(
-            "n_real_frames"
-        ),
-        F.sum((F.col("mime") == "image/x-stub").cast("int")).cast("long").alias(
-            "n_stub_rows"
-        ),
-        F.sum(
-            (
-                (F.col("mime") == "image/png")
-                & F.col("exp_sha256").isNull()
-            ).cast("int")
-        ).cast("long").alias("n_unmatched"),
-        F.sum(
-            (
-                (F.col("mime") == "image/png")
-                & ~F.col("pixel_sha").eqNullSafe(F.col("exp_sha256"))
-            ).cast("int")
-        ).cast("long").alias("n_sha_mismatch"),
-    )
-
-
-def q_audio_features(spark, sf):
-    """Invariant certification of REAL PCM sample decode + signal
-    features (round 6). Fixture WAVs are mono square waves, so every
-    expected value is a CLOSED FORM of (amp, period, n): RMS = amp
-    exactly (|x| constant; int64 energy sum, n*amp^2 < 2^53 so the
-    final division and sqrt are exact), zero crossings =
-    floor((n-1)/(period/2)), clip only on the planted full-scale rows.
-    48 rows: every fourth garbage (parse_ok=false, NULL features), 36
-    parsed, zero field mismatches — doubles compare EXACTLY equal by
-    construction."""
-    from dataqualitykit_spark.operators import multimodal
-
-    fx = multimodal.audio_fixture_expected(spark, 48)
-    feats = multimodal.audio_features(fx.select("media_id", "kind", "payload"))
-    j = feats.join(
-        fx.select(
-            "media_id", "exp_parse_ok", "exp_n_samples", "exp_rms",
-            "exp_zcr", "exp_peak", "exp_clip",
-        ),
-        "media_id",
-    )
-    mismatch = (
-        ~F.col("parse_ok").eqNullSafe(F.col("exp_parse_ok"))
-        | ~F.col("n_samples").eqNullSafe(F.col("exp_n_samples"))
-        | ~F.col("rms").eqNullSafe(F.col("exp_rms"))
-        | ~F.col("zero_cross_rate").eqNullSafe(F.col("exp_zcr"))
-        | ~F.col("peak").eqNullSafe(F.col("exp_peak"))
-        | ~F.col("clip_ratio").eqNullSafe(F.col("exp_clip"))
-    )
-    return j.agg(
-        F.count(F.lit(1)).cast("long").alias("n_rows"),
-        F.sum(F.col("parse_ok").cast("int")).cast("long").alias("n_parse_ok"),
-        F.sum(mismatch.cast("int")).cast("long").alias("n_mismatch"),
     )
 
 
@@ -3033,52 +2587,6 @@ def q_compress_ratio(spark, sf):
         ).cast("long").alias("n_order_viol"),
     )
     return natural.crossJoin(planted_check)
-
-
-def q_audio_dedup(spark, sf):
-    """Audio near-dup (multimodal.audio_fingerprint64 + the generic
-    banded hamming join): 64-bit energy-delta fingerprints — integer
-    math only, provably VOLUME-INVARIANT (scaling amplitude scales every
-    frame energy by c^2, preserving each strict comparison). Fixture: 24
-    base clips with sha-derived 65-frame amplitude profiles + 24
-    double-volume twins at id+1000. Ground truth is CONSTRUCTION-TIME:
-    afp_expected_fingerprint derives each clip's bits from the amplitude
-    profile alone (energy ordering == amplitude ordering), never by
-    decoding; cross-clip distances for this fixed fixture measure >= 20
-    bits (pinned in tests), so at max_hamming=6 the dup-pair set is
-    EXACTLY the 24 planted (i, i+1000) pairs at hamming 0."""
-    from dataqualitykit_spark.operators import multimodal
-
-    fx = multimodal.audio_dedup_fixture(spark, 24)
-    fps = multimodal.audio_fingerprints(fx)
-    exp = spark.createDataFrame(
-        [
-            (i + off, multimodal.afp_expected_fingerprint(i))
-            for i in range(24)
-            for off in (0, 1000)
-        ],
-        "id bigint, exp_afp long",
-    )
-    fp_check = fps.join(exp, "id", "left").agg(
-        F.count(F.lit(1)).cast("long").alias("n_clips"),
-        F.sum(F.col("afp").isNull().cast("int")).cast("long").alias(
-            "n_fp_null"
-        ),
-        F.sum(
-            (~F.col("afp").eqNullSafe(F.col("exp_afp"))).cast("int")
-        ).cast("long").alias("n_fp_mismatch"),
-    )
-    pairs = multimodal.audio_dup_pairs(fx, max_hamming=6)
-    pair_check = pairs.agg(
-        F.count(F.lit(1)).cast("long").alias("n_pairs"),
-        F.sum((F.col("hamming") != 0).cast("int")).cast("long").alias(
-            "n_nonzero_ham"
-        ),
-        F.sum(
-            (F.col("id_b") != F.col("id_a") + 1000).cast("int")
-        ).cast("long").alias("n_unplanted"),
-    )
-    return fp_check.crossJoin(pair_check)
 
 
 def q_readability(spark, sf):
@@ -3590,21 +3098,14 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "hll_profile": q_hll_profile,
         "domain_split": q_domain_split,
         "bloom_decontamination": q_bloom_decontamination,
-        "image_resize": q_image_resize,
-        "audio_features": q_audio_features,
         "bpe_tokenize": q_bpe_tokenize,
-        "gif_frames": q_gif_frames,
-        "audio_spectral": q_audio_spectral,
         "ngram_lm_score": q_ngram_lm,
         "justext_extract": q_justext,
         "pii_luhn": q_pii_luhn,
-        "jpeg_resize": q_jpeg_resize,
         "ccnet_ppl_buckets": q_ccnet_ppl_buckets,
-        "mjpeg_frames": q_mjpeg_frames,
         "html_meta": q_html_meta,
         "robots_disallow": q_robots_disallow,
         "readability": q_readability,
-        "audio_dedup": q_audio_dedup,
         "compress_ratio": q_compress_ratio,
         "publish_dates": q_publish_dates,
         "homoglyph_fold": q_homoglyph_fold,
@@ -3618,13 +3119,11 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "simhash_fast": q_simhash_fast,
         "ivf_cosine_topk": q_ivf_cosine_topk,
         "semantic_dedup": q_semantic_dedup,
-        "media_metadata": q_media_metadata,
         "ivfpq_cosine_topk": q_ivfpq_cosine_topk,
         "chunk_documents": q_chunk_documents,
         "pack_offsets": q_pack_offsets,
         "semantic_decontamination": q_semantic_decontamination,
         "mixture_sample": q_mixture_sample,
-        "phash_dedup": q_phash_dedup,
         "simhash_dup_pairs": q_simhash_dup_pairs,
         "unicode_nfc": q_unicode_nfc,
         "domain_cap": q_domain_cap,
@@ -5197,10 +4696,6 @@ def oracle_sql() -> dict[str, str]:
                CAST((SELECT count(*) FROM embeddings) AS BIGINT) AS n_keep,
                CAST(0 AS BIGINT) AS n_planted_viol,
                CAST(0 AS BIGINT) AS n_dangling"""
-    d["media_metadata"] = """
-        SELECT CAST(60 AS BIGINT) AS n_rows,
-               CAST(30 AS BIGINT) AS n_parse_ok,
-               CAST(0 AS BIGINT) AS n_mismatch"""
 
     # -- round-5 second-session webtext ops --------------------------------
     from dataqualitykit_spark.operators.mojibake import MOJIBAKE_PAIRS
@@ -5573,12 +5068,6 @@ def oracle_sql() -> dict[str, str]:
                CAST(bit_count(xor(a.sh, b.sh)) AS BIGINT) AS hamming
         FROM codes a JOIN codes b ON a.id < b.id
         WHERE bit_count(xor(a.sh, b.sh)) <= 12"""
-    d["phash_dedup"] = """
-        SELECT CAST(75 AS BIGINT) AS n_media,
-               CAST(121 AS BIGINT) AS n_equal_pairs,
-               CAST(121 AS BIGINT) AS n_phash_pairs,
-               CAST(0 AS BIGINT) AS n_missing,
-               CAST(0 AS BIGINT) AS n_nonzero_hamming"""
     d["mixture_sample"] = f"""
         WITH t AS (
           SELECT doc_id, lang,
@@ -5961,42 +5450,6 @@ def oracle_sql() -> dict[str, str]:
         SELECT d.doc_id, CAST(coalesce(a.n, 0) AS INT) AS n_bloom_hits,
                coalesce(a.n, 0) >= 1 AS flagged
         FROM documents d LEFT JOIN agg a USING (doc_id)"""
-    # real-pixel / real-sample invariants: construction-time ground truth
-    # (the media_metadata recipe) — fixture constants ARE the oracle
-    d["image_resize"] = """
-        SELECT CAST(48 AS BIGINT) AS n_rows,
-               CAST(32 AS BIGINT) AS n_resized,
-               CAST(0 AS BIGINT) AS n_flag_mismatch,
-               CAST(0 AS BIGINT) AS n_dim_mismatch,
-               CAST(0 AS BIGINT) AS n_pixel_mismatch"""
-    d["jpeg_resize"] = """
-        SELECT CAST(48 AS BIGINT) AS n_rows,
-               CAST(32 AS BIGINT) AS n_resized,
-               CAST(0 AS BIGINT) AS n_flag_mismatch,
-               CAST(0 AS BIGINT) AS n_dim_mismatch,
-               CAST(0 AS BIGINT) AS n_pixel_mismatch"""
-    d["audio_features"] = """
-        SELECT CAST(48 AS BIGINT) AS n_rows,
-               CAST(36 AS BIGINT) AS n_parse_ok,
-               CAST(0 AS BIGINT) AS n_mismatch"""
-    d["audio_spectral"] = """
-        SELECT CAST(32 AS BIGINT) AS n_rows,
-               CAST(24 AS BIGINT) AS n_parse_ok,
-               CAST(0 AS BIGINT) AS n_mismatch"""
-    d["gif_frames"] = """
-        SELECT CAST(104 AS BIGINT) AS n_rows,
-               CAST(96 AS BIGINT) AS n_real_frames,
-               CAST(8 AS BIGINT) AS n_stub_rows,
-               CAST(0 AS BIGINT) AS n_unmatched,
-               CAST(0 AS BIGINT) AS n_sha_mismatch"""
-    # mjpeg_frames: same fan-out arithmetic as gif_frames (16 real rows,
-    # F = 2 + i%4 frames each sampled at 2F-1 instants -> 96; 8 stubs)
-    d["mjpeg_frames"] = """
-        SELECT CAST(104 AS BIGINT) AS n_rows,
-               CAST(96 AS BIGINT) AS n_real_frames,
-               CAST(8 AS BIGINT) AS n_stub_rows,
-               CAST(0 AS BIGINT) AS n_unmatched,
-               CAST(0 AS BIGINT) AS n_sha_mismatch"""
     d["html_meta"] = _html_meta_oracle()
     d["robots_disallow"] = _ROBOTS_ORACLE
     d["readability"] = _readability_oracle()
@@ -6017,13 +5470,6 @@ def oracle_sql() -> dict[str, str]:
                 / CAST(count(*) AS DOUBLE), 6) AS keep_rate
         FROM decided GROUP BY lang_pred"""
     )
-    d["audio_dedup"] = """
-        SELECT CAST(48 AS BIGINT) AS n_clips,
-               CAST(0 AS BIGINT) AS n_fp_null,
-               CAST(0 AS BIGINT) AS n_fp_mismatch,
-               CAST(24 AS BIGINT) AS n_pairs,
-               CAST(0 AS BIGINT) AS n_nonzero_ham,
-               CAST(0 AS BIGINT) AS n_unplanted"""
     d["compress_ratio"] = """
         SELECT CAST(count(text) AS BIGINT) AS n_docs_scored,
                CAST(sum(strlen(text)) AS BIGINT) AS total_bytes,

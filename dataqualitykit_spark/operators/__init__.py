@@ -1,75 +1,1 @@
-from . import (
-    anomaly,
-    c4_filter,
-    categorical,
-    compression,
-    corpus_stats,
-    crawl,
-    dedup,
-    dsir,
-    dtype,
-    encoding,
-    entropy,
-    formats,
-    gif_codec,
-    html_meta,
-    jpeg_codec,
-    justext,
-    linkgraph,
-    missing,
-    mojibake,
-    mp4_codec,
-    multimodal,
-    ngram_lm,
-    packing,
-    paragraph_quality,
-    pii,
-    png_codec,
-    range_validity,
-    readability,
-    repetition,
-    robots,
-    sampling,
-    similarity,
-    sketches,
-    tokenizer,
-    url_filter,
-)
-
-__all__ = [
-    "anomaly",
-    "c4_filter",
-    "categorical",
-    "compression",
-    "corpus_stats",
-    "crawl",
-    "dedup",
-    "dsir",
-    "dtype",
-    "encoding",
-    "entropy",
-    "formats",
-    "gif_codec",
-    "html_meta",
-    "jpeg_codec",
-    "justext",
-    "linkgraph",
-    "missing",
-    "mojibake",
-    "mp4_codec",
-    "multimodal",
-    "ngram_lm",
-    "packing",
-    "paragraph_quality",
-    "pii",
-    "png_codec",
-    "range_validity",
-    "readability",
-    "repetition",
-    "robots",
-    "sampling",
-    "similarity",
-    "sketches",
-    "tokenizer",
-    "url_filter",
-]
+"""Operator modules; import each by name (`from .operators import dedup`)."""

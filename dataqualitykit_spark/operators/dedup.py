@@ -116,10 +116,13 @@ def with_shingles(
     df: DataFrame, text_col: str, id_col: str, k: int = 3
 ) -> DataFrame:
     """(id, shingles array<string>) in two projections: words materialized
-    first, then shingled — O(words) per row, not O(words^2)."""
+    first, then shingled — O(words) per row, not O(words^2). NULL text has
+    NULL shingles, as in with_shingle_hashes (not the empty text's one
+    shingle, which every two NULL-text docs would share)."""
     words = F.filter(F.split(F.lower(F.col(text_col)), WS_REGEX), lambda w: w != F.lit(""))
     w = df.select(F.col(id_col).alias("id"), words.alias("_w"))
-    return w.select("id", _shingles_of(F.col("_w"), k).alias("shingles"))
+    sh = F.when(F.col("_w").isNotNull(), _shingles_of(F.col("_w"), k))
+    return w.select("id", sh.alias("shingles"))
 
 
 def with_shingle_hashes(
@@ -223,16 +226,17 @@ def _word_hash_source(
     happens in numpy downstream (guide §4.2); only string hashing stays
     in the JVM. Matches with_shingle_hashes' word/fallback definitions
     exactly — the *_agg twins still consume the full-JVM combine, so the
-    declared parity queries certify the numpy chain end to end."""
-    words = F.filter(
-        F.split(F.lower(F.col(text_col)), WS_REGEX), lambda w: w != F.lit("")
-    )
-    w = df.select(F.col(id_col).alias("id"), words.alias("_w"))
-    n = F.size(F.col("_w"))
-    return w.select(
+    declared parity queries certify the numpy chain end to end. (SQL
+    strings, not Column chains, like _lsh_estimate: the lambdas cost
+    py4j round trips on every near-dedup plan build.)"""
+    ws = "'" + WS_REGEX.replace("\\", "\\\\").replace("'", "\\'") + "'"
+    return df.selectExpr(
+        f"`{id_col}` AS id",
+        f"filter(split(lower(`{text_col}`), {ws}), w -> w != '') AS _w",
+    ).selectExpr(
         "id",
-        F.transform(F.col("_w"), lambda x: F.xxhash64(x)).alias("wh"),
-        F.when(n < k, F.xxhash64(F.concat_ws(" ", F.col("_w")))).alias("fb"),
+        "transform(_w, x -> xxhash64(x)) AS wh",
+        f"CASE WHEN size(_w) < {k} THEN xxhash64(concat_ws(' ', _w)) END AS fb",
     )
 
 
@@ -331,7 +335,7 @@ def minhash_signatures(
     rows_per_band of them, see _band_keys_vec): the kernel already holds
     every slot in numpy, so banding needs no second engine pass. An
     all-NULL signature gets 42 in every band, as Spark's null-skipping
-    xxhash64 fold does.
+    xxhash64 fold does (_lsh_estimate drops such rows before banding).
     Returns (id, sig array<bigint>, bands array<bigint>)."""
     import numpy as np
     import pyarrow as pa
@@ -491,8 +495,8 @@ def minhash_jaccard_from_sigs(
     """LSH self-join candidates + slot-match estimate over an EXISTING
     signature frame — (id, sig, bands) from minhash_signatures, or
     (id, sig) from minhash_signatures_portable with portable=True —
-    reusable when signatures are already materialized (streaming
-    micro-batches, lineage buckets, a persisted signature table)."""
+    reusable when signatures are already materialized (lineage buckets,
+    a persisted signature table)."""
     return _lsh_estimate(sigs, sigs, num_hashes, rows_per_band, portable, True)
 
 
@@ -514,6 +518,9 @@ def _lsh_estimate(
         raise ValueError("num_hashes must be divisible by rows_per_band")
 
     def banded(sigs: DataFrame) -> DataFrame:
+        # an all-NULL signature (NULL text) bands to the same key in every
+        # band, which would pair every two NULL-text docs
+        sigs = sigs.filter("exists(sig, x -> x IS NOT NULL)")
         if portable:
             return _band_keys_portable(sigs, num_hashes // rows_per_band, rows_per_band)
         return _band_keys_fast(sigs)

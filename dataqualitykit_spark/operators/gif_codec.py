@@ -14,10 +14,8 @@ compression (dictionary growth, code-width stepping, 4095-entry cap with
 clear-code reset) — so decode round-trips exercise the multi-char
 dictionary paths, not just literal codes.
 
-Scale shape: used inside Arrow-batched mapInPandas like png_codec —
-payload bytes stay executor-local. LZW is an inherently sequential
-bit-stream (no vectorizing it); per-payload cost is linear in pixels,
-and batches bound memory.
+LZW is an inherently sequential bit-stream (no vectorizing it);
+per-payload cost is linear in pixels.
 """
 
 from __future__ import annotations

@@ -1,7 +1,6 @@
 """Pure-python/numpy baseline JPEG codec (no PIL/libjpeg in this
 environment — the png_codec/gif_codec precedent: real byte-level
-parsing, dependency-free, so multimodal pixel ops work on the third
-major web image format).
+parsing, dependency-free, for the third major web image format).
 
 Scope (documented, enforced with JpegError — callers route undecodable
 payloads to quarantine/fallback):
@@ -29,8 +28,8 @@ quantizer's). tests/test_jpeg_codec.py pins the decoder against a
 HAND-ASSEMBLED byte stream (the png/gif recipe: encode/decode pairs
 cannot hide a joint bug) plus the closed form above.
 
-Reference parity: the reference has no media handling; this feeds
-multimodal.decode_image_pixels (resize, dHash perceptual dedup).
+Reference parity: the reference has no media handling; this module is
+standalone and nothing in the keep/drop pipeline calls it.
 """
 
 from __future__ import annotations

@@ -2,24 +2,22 @@
 
 Real crawls carry video as opaque ``binary``; the operators only need the
 container math — which bytes are sample k and when does it start — and a
-frame codec. AVC/HEVC entropy decoding is out of scope (sample_frames
-keeps its documented stub for those), but Motion-JPEG stores each frame
-as a plain baseline JPEG, which ``operators/jpeg_codec.py`` already
-decodes. This module supplies the missing container layer:
+frame codec. AVC/HEVC entropy decoding is out of scope, but Motion-JPEG
+stores each frame as a plain baseline JPEG, which
+``operators/jpeg_codec.py`` already decodes. This module supplies the missing container layer:
 
 - ``demux_mjpeg``: walk ``moov`` -> video ``trak`` -> ``stbl``, expand the
   four sample tables (stts durations, stsz sizes, stsc chunk runs,
   stco/co64 chunk offsets) into per-sample (bytes, start_ms) slices.
   Pure byte math over the buffer — samples are never copied until sliced.
 - ``mux_mjpeg``: the fixture-side inverse (one video track, sample entry
-  ``jpeg``, timescale 1000, single chunk) so tests and oracles are
-  self-contained, mirroring png_codec/gif_codec's encoder-for-fixtures
-  pattern.
+  ``jpeg``, timescale 1000, single chunk) so tests are self-contained,
+  mirroring png_codec/gif_codec's encoder-for-fixtures pattern.
 
 Box layout follows ISO/IEC 14496-12 (public spec); 64-bit ``largesize``
 and version-1 full boxes are handled on the read side. The reference has
-no media handling at all (SURVEY.md §2) — this extends the multimodal
-family's "plumbing real, codecs dependency-free" contract.
+no media handling at all (SURVEY.md §2); this module is standalone and
+nothing in the keep/drop pipeline calls it.
 """
 
 from __future__ import annotations

@@ -4,12 +4,11 @@ The task brief allowed stubbing pixel decode "because the image/audio libs
 aren't in this container", but PNG needs no library: DEFLATE is stdlib
 `zlib` and the rest of the format (chunk walk, CRC-32, scanline
 unfiltering, bit unpacking, palette expansion) is byte math. This module
-supplies that decode so `multimodal.resize_images` / the dHash perceptual
-near-dup run on REAL pixels for PNG payloads (reference parity target:
-DataQualityKit has no media ops at all — this is task-brief surface).
+is standalone: nothing in the keep/drop pipeline calls it (reference
+parity: DataQualityKit has no media ops at all).
 
 Scope (documented, enforced with PngError — callers route undecodable
-payloads to quarantine exactly like `media_metadata` does for garbage):
+payloads to quarantine):
   - bit depths 1/2/4/8/16; color types 0 (gray), 2 (RGB), 3 (palette),
     4 (gray+alpha), 6 (RGBA); all five scanline filters.
   - palette rows expand to RGB (RGBA when a tRNS chunk is present).

@@ -61,7 +61,7 @@ _METRIC_COLS: dict[str, str] = {
 
 def _repetition_flag(cfg: PipelineConfig) -> list[tuple[str, Column]]:
     """Opt-in Gopher repetition gate — reads the dup_line_char_frac /
-    dup_5gram_frac columns with_metrics guarantees when either threshold
+    dup_5gram_frac columns the fused scorer emits when either threshold
     is set (computed inside the fused Arrow scorer: the interpreted JVM
     HOF forms were measured at ~0.16 ms/doc, 9x the whole fused stage,
     so the python mirrors ride the existing tokenize pass instead)."""
@@ -103,7 +103,7 @@ def _entropy_flag(cfg: PipelineConfig) -> list[tuple[str, Column]]:
 
 def _line_shape_flag(cfg: PipelineConfig) -> list[tuple[str, Column]]:
     """Opt-in Gopher line-shape gate (Rae 2021 A1.1.1) — reads the
-    bullet/ellipsis/alpha fraction columns with_metrics guarantees when
+    bullet/ellipsis/alpha fraction columns the fused scorer emits when
     any threshold is set (fused into the Arrow scorer, like the
     repetition gates)."""
     if not _line_shape_on(cfg):
@@ -212,7 +212,6 @@ class _Scorer:
     """The fused scorer and the quality rules over its output."""
 
     udf: Callable[[Column], Column]
-    raw: Column  # the scorer over unmasked `text` (with_metrics)
     # metric columns read off the `_score` struct, in output order: the
     # enabled opt-in gate fields first, then scrubbed_text, `_missing`
     # (scrub-level missing) and every _METRIC_COLS column
@@ -261,29 +260,9 @@ def _scorer(sc, cfg: PipelineConfig, loader_ids: tuple) -> _Scorer:
     }
     return _Scorer(
         udf=fused,
-        raw=fused(F.col("text")),
         metrics=metrics,
         gates=gates,
         quality=F.get(_quality_reasons_array(cfg), 0),
-    )
-
-
-def with_metrics(df: DataFrame, cfg: PipelineConfig = DEFAULT_CONFIG) -> DataFrame:
-    """scrub + metric + score columns; pure projection (no shuffle).
-
-    Adds every _METRIC_COLS column, the enabled opt-in gate columns, and
-    `_missing` (scrub-level missing)."""
-    s = _scorer(*_cache_key(df, cfg))
-    return df.withColumn("_score", s.raw).withColumns(s.metrics).drop("_score")
-
-
-def decide_quality(df: DataFrame, cfg: PipelineConfig = DEFAULT_CONFIG) -> DataFrame:
-    """Folds quality flags into keep/drop_reason on a metrics frame
-    (standalone use: streaming / pre-deduped inputs)."""
-    return (
-        df.withColumn("drop_reason", _scorer(*_cache_key(df, cfg)).quality)
-        .withColumn("keep", F.col("drop_reason").isNull())
-        .drop("_missing")
     )
 
 

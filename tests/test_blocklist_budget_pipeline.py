@@ -128,48 +128,6 @@ def test_blocklist_adds_no_exchanges(spark):
     assert with_bl == base, (base, with_bl)
 
 
-def test_blocked_domain_col_streaming_composes(spark, tmp_path):
-    """blocked_domain_col is a stateless projection — it composes with
-    readStream for free (same contract as the c4/repetition columns)."""
-    import json as _json
-
-    from pyspark.sql import functions as F
-
-    from dataqualitykit_spark.operators.url_filter import blocked_domain_col
-
-    src = tmp_path / "in"
-    src.mkdir()
-    rows = [
-        {"url": "https://ads.bad.example/x"},
-        {"url": "https://ok.example/y"},
-        {"url": "https://bad.example/z"},
-    ]
-    (src / "a.json").write_text("\n".join(_json.dumps(r) for r in rows))
-    stream = (
-        spark.readStream.schema("url string").json(str(src))
-        .withColumn("blocked", blocked_domain_col(F.col("url"), ["bad.example"]))
-    )
-    q = (
-        stream.writeStream.format("memory")
-        .queryName("bl_stream")
-        .outputMode("append")
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-        got = {
-            r["url"]: r["blocked"]
-            for r in spark.sql("SELECT * FROM bl_stream").collect()
-        }
-    finally:
-        q.stop()
-    assert got == {
-        "https://ads.bad.example/x": True,
-        "https://ok.example/y": False,
-        "https://bad.example/z": True,
-    }
-
-
 def test_flag_low_reputation_domains(spark):
     """Domain-prior flag: a planted spam domain (0% keep over >= min_docs
     pages) flags every one of its rows; small domains carry no evidence

@@ -268,17 +268,3 @@ def test_hand_assembled_420_subsampled():
         y - 0.344136 * (cb - 128) - 0.714136 * (cr - 128) + 0.5), 0, 255))
     exp_b = int(np.clip(np.floor(y + 1.772 * (cb - 128) + 0.5), 0, 255))
     assert img[0, 0].tolist() == [exp_r, exp_g, exp_b]
-
-
-def test_decode_image_pixels_jpeg_branch():
-    from dataqualitykit_spark.operators.multimodal import decode_image_pixels
-
-    img = np.full((8, 8), 100, dtype=np.uint8)
-    arr = decode_image_pixels(encode_jpeg(img, quality=75))
-    assert arr.shape == (8, 8, 1) and (arr == 100).all()  # q00=8 exact
-    assert decode_image_pixels(b"\xff\xd8garbage") is None
-    rgb = np.zeros((8, 8, 3), dtype=np.uint8)
-    rgb[...] = (30, 60, 90)
-    arr = decode_image_pixels(encode_jpeg(rgb, quality=95))
-    assert arr.shape == (8, 8, 3)
-    assert np.abs(arr[0, 0].astype(int) - [30, 60, 90]).max() <= 4

@@ -1,7 +1,7 @@
 """MP4/MJPEG container math pinned against HAND-BUILT byte streams (the
 png/gif/jpeg codec discipline: the demuxer is verified on boxes assembled
 inline, so mux/demux can't self-consistently hide a layout bug), plus
-mux->demux round-trips and parse_mp4_header interop."""
+mux->demux round-trips and the header a generic MP4 reader sees."""
 
 from __future__ import annotations
 
@@ -16,7 +16,6 @@ from dataqualitykit_spark.operators.mp4_codec import (
     demux_mjpeg,
     mux_mjpeg,
 )
-from dataqualitykit_spark.operators.multimodal import parse_mp4_header
 
 
 def _b(name: bytes, body: bytes) -> bytes:
@@ -125,8 +124,14 @@ def test_mux_demux_round_trip_real_jpegs():
 def test_parse_mp4_header_interop():
     jpegs = [jpeg_codec.encode_jpeg(np.full((8, 8), 90, np.uint8), 75)] * 4
     blob = mux_mjpeg(jpegs, [500] * 4, 8, 8)
-    fmt, brand, dur = parse_mp4_header(blob)
-    assert (fmt, brand, dur) == ("mp4", "isom", 2000)
+    # what any ISO-BMFF header reader takes: ftyp major brand, then the
+    # moov/mvhd v0 timescale and duration (after version/flags + 2 times)
+    assert blob[4:8] == b"ftyp" and blob[8:12] == b"isom"
+    moov = mp4_codec._need(blob, (0, len(blob)), b"moov")
+    mvhd = mp4_codec._need(blob, moov, b"mvhd")
+    assert blob[mvhd[0]] == 0
+    timescale, dur = struct.unpack(">II", blob[mvhd[0] + 12 : mvhd[0] + 20])
+    assert (timescale, dur) == (1000, 2000)
 
 
 def test_mux_validates():

@@ -15,6 +15,7 @@ from pyspark.sql import functions as F
 from dataqualitykit_spark.config import PipelineConfig
 from dataqualitykit_spark.fixtures import generate_pages, pages_dataframe
 from dataqualitykit_spark.operators import dedup
+from dataqualitykit_spark.operators.dedup import hamming_dup_pairs
 from dataqualitykit_spark.oracle import run_oracle
 from dataqualitykit_spark.pipeline import run_pipeline
 
@@ -272,3 +273,44 @@ def test_connected_components_deep_chain_log_rounds(spark):
     }
     assert set(comp.values()) == {0}
     assert len(comp) == 101
+
+
+def test_hamming_dup_pairs_pigeonhole(spark):
+    # planted codes at known hamming distances from a base code: the
+    # banded join must find every pair within max_hamming and verify
+    # the exact distance, and must NOT return pairs past the bound
+    ubase = 0x8123456789ABCDEF  # bit 63 set -> exercises the sign bit
+
+    def signed(u: int) -> int:
+        return u - (1 << 64) if u >= (1 << 63) else u
+
+    rows = [(0, signed(ubase))]
+    # flip the k LOWEST bits -> hamming k from base (flips on the
+    # UNSIGNED value; python XOR on the negative signed form widens)
+    for k in (1, 4, 8, 9, 20):
+        rows.append((k, signed(ubase ^ ((1 << k) - 1))))
+    df = spark.createDataFrame(rows, "id long, code long")
+    pairs = {
+        (r["id_a"], r["id_b"]): r["hamming"]
+        for r in hamming_dup_pairs(df, "code", "id", max_hamming=8).collect()
+    }
+    # base vs k-flip pairs within the bound
+    assert pairs[(0, 1)] == 1
+    assert pairs[(0, 4)] == 4
+    assert pairs[(0, 8)] == 8
+    assert (0, 9) not in pairs and (0, 20) not in pairs
+    # flip-vs-flip: (1,4) differ in bits 1..3 -> hamming 3, etc.
+    assert pairs[(1, 4)] == 3
+    assert pairs[(4, 8)] == 4
+
+
+def test_null_text_docs_never_pair(spark):
+    """An all-NULL signature bands to one key in every band: 40 NULL-text
+    docs must not become 780 candidate pairs, on either hash family."""
+    base = " ".join(f"word{i}" for i in range(60))
+    rows = [(i, None) for i in range(40)]
+    rows += [(100, base + " alpha"), (101, base + " beta")]
+    df = spark.createDataFrame(rows, "id int, text string")
+    for fn in (dedup.minhash_jaccard, dedup.minhash_jaccard_portable):
+        pairs = sorted((r["id_a"], r["id_b"]) for r in fn(df, "text", "id").collect())
+        assert pairs == [(100, 101)], (fn.__name__, len(pairs))

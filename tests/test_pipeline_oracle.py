@@ -12,7 +12,7 @@ import pytest
 
 from dataqualitykit_spark.fixtures import generate_pages, pages_dataframe
 from dataqualitykit_spark.oracle import run_oracle
-from dataqualitykit_spark.pipeline import quality_metrics, run_pipeline
+from dataqualitykit_spark.pipeline import dataset_card, quality_metrics, run_pipeline
 
 N_PAGES = 2000
 
@@ -126,3 +126,22 @@ def test_warm_plan_build_round_trips(spark):
             cs.ClientServerConnection.send_command = send
             gc.enable()
         assert 0 < trips <= bound, (cfg, trips)
+
+
+def test_dataset_card(spark):
+    """dataset_card unit golden: per-language docs, kept, kept/total words
+    and keep rate."""
+    rows = [
+        # lang_pred, keep, n_words
+        ("en", True, 10),
+        ("en", True, 5),
+        ("en", False, 7),
+        ("de", False, 3),
+        ("de", True, None),  # kept row with NULL n_words counts 0 words
+    ]
+    df = spark.createDataFrame(rows, "lang_pred string, keep boolean, n_words int")
+    got = {r["lang_pred"]: r for r in dataset_card(df).collect()}
+    assert (got["en"]["docs"], got["en"]["kept"], got["en"]["kept_words"],
+            got["en"]["total_words"]) == (3, 2, 15, 22)
+    assert got["en"]["keep_rate"] == round(2 / 3, 6)
+    assert (got["de"]["docs"], got["de"]["kept"], got["de"]["kept_words"]) == (2, 1, 0)

@@ -2,8 +2,7 @@
 
 The decode side is pinned against byte streams built HERE, by hand, from
 the PNG spec — independent of encode_png — so an encode/decode pair
-cannot self-consistently hide a channel swap or orientation bug (the
-driver oracle `image_resize` leans on this independence)."""
+cannot self-consistently hide a channel swap or orientation bug."""
 
 import struct
 import zlib
@@ -148,12 +147,14 @@ class TestDecodeErrors:
             pc.decode_png(bad)
 
     def test_fixture_header_only_png_is_rejected(self):
-        # media_fixture even image rows: IHDR with no CRC / IDAT — must
-        # stay on the quarantine path (phash_dedup oracle depends on it)
-        from dataqualitykit_spark.operators.multimodal import _fixture_payload
-
+        # signature + a 64x48 RGBA IHDR with no CRC and no IDAT: a header
+        # that sniffs as PNG but must take the quarantine path
+        header_only = (
+            b"\x89PNG\r\n\x1a\n" + b"\x00\x00\x00\rIHDR"
+            + (64).to_bytes(4, "big") + (48).to_bytes(4, "big") + b"\x08\x06" + b"\x00" * 8
+        )
         with pytest.raises(pc.PngError):
-            pc.decode_png(_fixture_payload(0, "image", 64, 48, 0))
+            pc.decode_png(header_only)
 
 
 class TestRoundTrip:

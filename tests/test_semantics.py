@@ -109,3 +109,37 @@ def test_script_langid():
     for t in ("これはテキストです ひらがな", "это русский текст для проверки"):
         assert S.score_document(t)[0] == S.langid(t)[0]
         assert S.score_document(t)[1] == S.langid(t)[1]
+
+
+def test_operator_import_loads_only_that_module():
+    """`from .operators import c4_filter` (semantics' lazy C4 mirrors, in
+    every Python worker) must not load the other operator modules."""
+    import subprocess
+    import sys
+    from pathlib import Path
+
+    out = subprocess.run(
+        [
+            sys.executable,
+            "-X",
+            "importtime",
+            "-c",
+            "import dataqualitykit_spark.semantics; "
+            "import dataqualitykit_spark.operators.c4_filter",
+        ],
+        capture_output=True,
+        text=True,
+        check=True,
+        cwd=Path(__file__).resolve().parents[1],
+    )
+    loaded = {
+        line.rsplit("|", 1)[1].strip()
+        for line in out.stderr.splitlines()
+        if line.startswith("import time:")
+    }
+    ops = {m for m in loaded if m.startswith("dataqualitykit_spark.operators.")}
+    assert "dataqualitykit_spark.operators.c4_filter" in ops
+    assert ops <= {
+        "dataqualitykit_spark.operators.c4_filter",
+        "dataqualitykit_spark.operators.repetition",
+    }, sorted(ops)
