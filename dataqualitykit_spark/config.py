@@ -172,9 +172,6 @@ class PipelineConfig:
     # Off by default: it adds two shuffled joins + an iterative CC stage.
     dedup_near: bool = False
     near_dup_threshold: float = 0.8
-    # 'xxhash64' = production fast path; 'md5' = engine-portable twin the
-    # DuckDB/python oracles can reproduce bit-for-bit
-    near_dup_hash: str = "xxhash64"
     near_dup_hashes: int = 32
 
     # scale mechanics.

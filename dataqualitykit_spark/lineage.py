@@ -36,11 +36,11 @@ records the row count, so the labeled partition is never read back; an
 empty bucket records rows=0 and writes no metrics rows.
 
 NEAR-dup dedup spans buckets through persisted signatures instead
-(cfg.dedup_near), after run_pipeline: each bucket
-persists the MinHash signatures (with their band keys on the default
-xxhash64 path) of its near-dedup participants (exact-dedup
-survivors — kept, quality-dropped and near-dropped rows alike, so
-transitive chains propagate) to a `near_sigs` table partitioned by
+(cfg.dedup_near), after run_pipeline: each bucket persists the xxhash64
+MinHash signatures and band keys of its near-dedup participants (the
+rows run_pipeline bands: exact-dedup survivors outside the blocklist and
+url-keyword gates — kept, quality-dropped and near-dropped rows alike,
+so transitive chains propagate) to a `near_sigs` table partitioned by
 bucket_id; before finalizing bucket b, its participants' signatures
 band-join (dedup.minhash_jaccard_cross) against completed buckets'
 signatures, and any row whose estimated Jaccard against a prior doc clears
@@ -57,9 +57,10 @@ bucketed shapes; each shape is internally deterministic.)
 from __future__ import annotations
 
 import functools
+import hashlib
 import json
 import os
-from dataclasses import replace
+from dataclasses import fields, replace
 from datetime import datetime, timezone
 
 from pyspark.sql import Column, DataFrame, Observation, SparkSession
@@ -75,6 +76,21 @@ from .sources import TableIO
 _INELIGIBLE = ("dup_url", "blocked_domain", "url_keywords")
 # every reason a labeled row can carry, as quality_metrics names it
 _REASONS = ("kept", *DROP_REASON_ORDER)
+# the near_sigs table: dedup.minhash_signatures of the url-keyed
+# participants, partitioned by bucket_id (read with this schema, so a
+# store whose buckets had no participants reads as empty)
+_NEAR_SIGS_SCHEMA = (
+    "id string, sig array<bigint>, bands array<bigint>, bucket_id int"
+)
+
+
+def _config_digest(cfg: PipelineConfig) -> str:
+    """Stable digest of every compare=True field of `cfg` (field names
+    and values, in declaration order). Model loaders are compare=False,
+    so they are not covered: a resume that swaps the language or
+    perplexity model is not detected."""
+    items = [(f.name, getattr(cfg, f.name)) for f in fields(cfg) if f.compare]
+    return hashlib.sha256(repr(items).encode("utf-8")).hexdigest()[:16]
 
 
 class Manifest:
@@ -178,7 +194,9 @@ def run_resumable(
     metrics per bucket; resume skips completed buckets.
 
     fail_after=k raises after k buckets (test hook for the kill/resume
-    contract).
+    contract). A resume must pass the original n_buckets and a config
+    equal in every compare=True field (see _config_digest; model loaders
+    are not covered); otherwise it raises before writing anything.
     """
     if cfg.token_budget is not None:
         # the budget is a GLOBAL per-group quota; applied inside each
@@ -200,14 +218,17 @@ def run_resumable(
     # directory (PartitionFilters on _bucket). The marker file makes the
     # stage idempotent across restarts — a resume never re-scans the
     # source, matching the north rule's "resumable mid-table". It records
-    # how the rows were bucketed: a resume that would bucket differently
-    # would loop over buckets the stored input does not have, so it is
-    # refused before anything is written.
+    # how the rows were bucketed and the config digest: a resume that
+    # would bucket differently would loop over buckets the stored input
+    # does not have, and one under another config would mix two label
+    # semantics in one table, so either is refused before anything is
+    # written.
     bucketed_path = io._path("bucketed")
     marker = os.path.join(out_root, "_bucketed_done")
     bucketing = {
         "n_buckets": n_buckets,
         "bucket_key": "normalize_url" if cfg.normalize_urls else "url",
+        "config": _config_digest(cfg),
     }
     if os.path.exists(marker):
         with open(marker) as f:
@@ -216,7 +237,7 @@ def run_resumable(
             raise ValueError(
                 f"run_resumable: {out_root} was bucketed as {stored}, this "
                 f"call asks for {bucketing} — resume with the original "
-                "n_buckets/normalize_urls or restart with a fresh out_root"
+                "n_buckets and config or restart with a fresh out_root"
             )
     else:
         # bucket on the url window's key, so every row one url window
@@ -276,12 +297,6 @@ def run_resumable(
         if cfg.dedup_near:
             from .operators import dedup as _dedup
 
-            portable = cfg.near_dup_hash == "md5"
-            sig_fn = (
-                _dedup.minhash_signatures_portable
-                if portable
-                else _dedup.minhash_signatures
-            )
             # the near stage reuses `labeled` three times (participants,
             # relabel join, write) — cut the UDF-scoring lineage once; the
             # working set is one BUCKET, bounded by construction. Not
@@ -289,13 +304,13 @@ def run_resumable(
             # shuffle stages here; only its last stage (the scorer) waits
             # for the first consumer's job.
             labeled = labeled.localCheckpoint(eager=False)
-            # near-dedup participants = exact-dedup survivors (the same
-            # set run_pipeline bands within the bucket): kept rows AND
-            # quality/near-dropped rows, so chains propagate via dropped
-            # members; never missing/dup_url/dup_content rows
+            # near-dedup participants = the set run_pipeline bands within
+            # the bucket: kept rows AND quality/near-dropped rows, so
+            # chains propagate via dropped members; never missing_text,
+            # dup_content or _INELIGIBLE rows
             participant = F.col("drop_reason").isNull() | ~F.col(
                 "drop_reason"
-            ).isin("missing_text", "dup_url", "dup_content")
+            ).isin("missing_text", "dup_content", *_INELIGIBLE)
             # participant text comes straight off the labeled frame: the
             # carried `_prescrub_text` is the post-c4/post-paragraph text
             # whose md5 IS content_md5 (run_pipeline's text after both
@@ -310,21 +325,13 @@ def run_resumable(
             )
             # (this checkpoint call runs the dropDuplicates shuffle, and
             # with it the scorer stage of `labeled`)
-            sigs_b = sig_fn(
+            sigs_b = _dedup.minhash_signatures(
                 texts, "text", "url", cfg.near_dup_hashes
             ).localCheckpoint(eager=False)
-            if done and not os.path.exists(io._path("near_sigs")):
-                # completed buckets exist but no signature store: the
-                # manifest came from a run with dedup_near OFF — silently
-                # skipping cross-bucket near-dedup would mislabel, so fail
-                raise RuntimeError(
-                    "cfg.dedup_near=True on a resume whose completed "
-                    "buckets have no near_sigs store (prior run had "
-                    "dedup_near off?) — restart with a fresh out_root"
-                )
             if claimed:
                 prior_sigs = (
-                    spark.read.parquet(io._path("near_sigs"))
+                    spark.read.schema(_NEAR_SIGS_SCHEMA)
+                    .parquet(io._path("near_sigs"))
                     .filter(F.col("bucket_id").isin(*claimed))
                     .drop("bucket_id")
                 )
@@ -333,7 +340,6 @@ def run_resumable(
                         sigs_b,
                         prior_sigs,
                         num_hashes=cfg.near_dup_hashes,
-                        portable=portable,
                     )
                     .filter(F.col("est_jaccard") >= cfg.near_dup_threshold)
                     .select(F.col("id_a").alias("url"))
@@ -351,12 +357,10 @@ def run_resumable(
                     .withColumn("keep", F.col("keep") & F.col("_nd_prior").isNull())
                     .drop("_nd_prior")
                 )
-            # persist this bucket's participant signatures, with their
-            # band keys on the xxhash64 path, so later buckets band
-            # against the same keys (idempotent dynamic overwrite, same
-            # contract as the labeled write). The sig type is
-            # hash-family-specific — do not switch cfg.near_dup_hash
-            # mid-run.
+            # persist this bucket's participant signatures with their
+            # band keys, so later buckets band against the same keys
+            # (idempotent dynamic overwrite, same contract as the
+            # labeled write)
             (
                 sigs_b.withColumn("bucket_id", F.lit(b))
                 .write.mode("overwrite")

@@ -189,6 +189,56 @@ def _xxh64_int_scalar(i: int, seed: int = 42) -> int:
     return h
 
 
+def _xxh64_str_scalar(s: str, seed: int = 42) -> int:
+    """XXH64.hashUnsafeBytes over the UTF-8 bytes of `s` in plain python
+    ints (returns uint64): F.xxhash64(string) is its signed view. Little-
+    endian 32-byte stripes, then 8-byte words, one 4-byte word, bytes."""
+
+    def rotl(x, r):
+        return ((x << r) | (x >> (64 - r))) & _U64
+
+    def rnd(acc, lane):
+        return (rotl((acc + lane * _XXH_P2) & _U64, 31) * _XXH_P1) & _U64
+
+    b = s.encode("utf-8")
+    n = len(b)
+    pos = 0
+    if n >= 32:
+        v = [
+            (seed + _XXH_P1 + _XXH_P2) & _U64,
+            (seed + _XXH_P2) & _U64,
+            seed & _U64,
+            (seed - _XXH_P1) & _U64,
+        ]
+        while pos <= n - 32:
+            for j in range(4):
+                v[j] = rnd(v[j], int.from_bytes(b[pos : pos + 8], "little"))
+                pos += 8
+        h = (rotl(v[0], 1) + rotl(v[1], 7) + rotl(v[2], 12) + rotl(v[3], 18)) & _U64
+        for x in v:
+            h = ((h ^ rnd(0, x)) * _XXH_P1 + _XXH_P4) & _U64
+    else:
+        h = (seed + _XXH_P5) & _U64
+    h = (h + n) & _U64
+    while pos <= n - 8:
+        h ^= rnd(0, int.from_bytes(b[pos : pos + 8], "little"))
+        h = (rotl(h, 27) * _XXH_P1 + _XXH_P4) & _U64
+        pos += 8
+    if pos <= n - 4:
+        h ^= (int.from_bytes(b[pos : pos + 4], "little") * _XXH_P1) & _U64
+        h = (rotl(h, 23) * _XXH_P2 + _XXH_P3) & _U64
+        pos += 4
+    for byte in b[pos:]:
+        h ^= (byte * _XXH_P5) & _U64
+        h = (rotl(h, 11) * _XXH_P1) & _U64
+    h ^= h >> 33
+    h = (h * _XXH_P2) & _U64
+    h ^= h >> 29
+    h = (h * _XXH_P3) & _U64
+    h ^= h >> 32
+    return h
+
+
 def _xxh64_long_vec(vals, seed):
     """XXH64.hashLong over a uint64 numpy array; `seed` is a python int
     or a uint64 array (element-wise seeds — the shingle-combine chain)."""
@@ -483,21 +533,9 @@ def minhash_jaccard(
     sigs = minhash_signatures(
         df, text_col, id_col, num_hashes, rows_per_band=rows_per_band
     ).localCheckpoint(eager=False)
-    return minhash_jaccard_from_sigs(sigs, num_hashes, rows_per_band)
-
-
-def minhash_jaccard_from_sigs(
-    sigs: DataFrame,
-    num_hashes: int = 32,
-    rows_per_band: int = 4,
-    portable: bool = False,
-) -> DataFrame:
-    """LSH self-join candidates + slot-match estimate over an EXISTING
-    signature frame — (id, sig, bands) from minhash_signatures, or
-    (id, sig) from minhash_signatures_portable with portable=True —
-    reusable when signatures are already materialized (lineage buckets,
-    a persisted signature table)."""
-    return _lsh_estimate(sigs, sigs, num_hashes, rows_per_band, portable, True)
+    return _lsh_estimate(
+        sigs, sigs, num_hashes, rows_per_band, portable=False, self_join=True
+    )
 
 
 def _lsh_estimate(
@@ -801,9 +839,10 @@ def connected_components(
 # ---------------------------------------------------------------------------
 # md5-portable twins — identical algorithms with engine-portable hashing
 # (md5 exists in Spark, DuckDB and hashlib; xxhash64 only in Spark). These
-# back the ORACLE-CHECKED driver queries and the pure-python pipeline
-# oracle; the xxhash64 versions above are the production fast path (longs
-# hash ~10x cheaper than 32 md5 string passes).
+# back the DuckDB-checked driver queries; the xxhash64 versions above are
+# the pipeline's path (longs hash ~10x cheaper than 32 md5 string passes),
+# which the pure-python pipeline oracle mirrors
+# (semantics.minhash_candidate_pairs_xxh64).
 # ---------------------------------------------------------------------------
 
 
@@ -852,7 +891,9 @@ def minhash_jaccard_portable(
     sigs = minhash_signatures_portable(
         df, text_col, id_col, num_hashes, shingle_k
     ).localCheckpoint(eager=False)
-    return minhash_jaccard_from_sigs(sigs, num_hashes, rows_per_band, portable=True)
+    return _lsh_estimate(
+        sigs, sigs, num_hashes, rows_per_band, portable=True, self_join=True
+    )
 
 
 def minhash_jaccard_cross(
@@ -860,20 +901,20 @@ def minhash_jaccard_cross(
     sigs_b: DataFrame,
     num_hashes: int = 32,
     rows_per_band: int = 4,
-    portable: bool = False,
 ) -> DataFrame:
     """LSH candidates BETWEEN two signature sets (cross join, not self):
     (id_a from sigs_a, id_b from sigs_b, est_jaccard) for every band-bucket
     collision. Both inputs are (id, sig, bands) frames from
-    minhash_signatures (portable=False) or (id, sig) frames from
-    minhash_signatures_portable (portable=True) — the same band keys and
-    estimate as the within-set functions (_lsh_estimate), so within-set
-    and cross-set candidacy use identical collision geometry.
+    minhash_signatures — the same band keys and estimate as
+    minhash_jaccard (_lsh_estimate), so within-set and cross-set
+    candidacy use identical collision geometry.
 
     This is the cross-BUCKET near-dedup primitive: lineage.run_resumable
     bands the current bucket's signatures against the persisted signatures
     of completed buckets, mirroring the content_md5 prior-join."""
-    return _lsh_estimate(sigs_a, sigs_b, num_hashes, rows_per_band, portable, False)
+    return _lsh_estimate(
+        sigs_a, sigs_b, num_hashes, rows_per_band, portable=False, self_join=False
+    )
 
 
 def simhash_portable(

@@ -28,7 +28,7 @@ from .semantics import (
     content_hash,
     doc_reasons,
     is_missing,
-    minhash_candidate_pairs,
+    minhash_candidate_pairs_xxh64,
     normalize_url,
 )
 
@@ -160,11 +160,9 @@ def run_oracle(
             else:
                 seen.add(chash[i])
 
-    # near-dup dedup among survivors: md5-portable MinHash-LSH pairs ->
-    # union-find -> drop all but the min-url row per cluster. The python
-    # mirror models the 'md5' hash family only (semantics.minhash_*);
-    # pipelines running near_dup_hash='xxhash64' are the production twin
-    # and are compared rows-only.
+    # near-dup dedup among survivors: MinHash-LSH pairs over the same
+    # xxhash64 family the pipeline runs (semantics.minhash_*_xxh64) ->
+    # union-find -> drop all but the min-url row per cluster
     dup_near = [False] * len(out)
     if cfg.dedup_near:
         surv = [
@@ -179,7 +177,7 @@ def run_oracle(
         by_url = {out[i].url: i for i in surv}
         pairs = [
             (a, b)
-            for a, b, est in minhash_candidate_pairs(
+            for a, b, est in minhash_candidate_pairs_xxh64(
                 {out[i].url: out[i].text for i in surv},
                 num_hashes=cfg.near_dup_hashes,
             )

@@ -473,15 +473,9 @@ def _near_dup_urls(base: DataFrame, cfg: PipelineConfig) -> DataFrame:
     from .operators import dedup as _dedup
 
     surv = base.filter(F.col("_survivor")).select("url", "text")
-    if cfg.near_dup_hash == "md5":
-        pairs = _dedup.minhash_jaccard_portable(
-            surv, "text", "url", num_hashes=cfg.near_dup_hashes
-        )
-    else:
-        pairs = _dedup.minhash_jaccard(
-            surv, "text", "url", num_hashes=cfg.near_dup_hashes
-        )
-    pairs = pairs.filter(F.col("est_jaccard") >= cfg.near_dup_threshold)
+    pairs = _dedup.minhash_jaccard(
+        surv, "text", "url", num_hashes=cfg.near_dup_hashes
+    ).filter(F.col("est_jaccard") >= cfg.near_dup_threshold)
     comp = _dedup.connected_components(pairs)
     return comp.filter("id != component").selectExpr("id AS url", "true AS _nd")
 

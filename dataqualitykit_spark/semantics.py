@@ -914,10 +914,13 @@ def jaro_winkler(s1: str, s2: str, prefix_weight: float = 0.1) -> float:
 
 
 # ---------------------------------------------------------------------------
-# md5-portable near-dup primitives — python mirrors of
-# operators/dedup.py::{minhash_signatures_portable, minhash_jaccard_portable,
-# simhash_portable}. Same algorithm, same hash, so the pure-python pipeline
-# oracle and the Spark engine produce identical signatures/pairs/clusters.
+# near-dup primitives — python mirrors of operators/dedup.py. The default
+# (xxhash64) family mirrors minhash_signatures/minhash_jaccard, the family
+# run_pipeline runs; the md5-portable family mirrors
+# {minhash_signatures_portable, minhash_jaccard_portable, simhash_portable},
+# which the DuckDB entry queries reproduce. Same algorithm, same hash, so
+# the pure-python pipeline oracle and the Spark engine produce identical
+# signatures/pairs/clusters.
 # ---------------------------------------------------------------------------
 
 
@@ -940,20 +943,15 @@ def minhash_signature(text: str, num_hashes: int = 32, shingle_k: int = 3) -> li
     ]
 
 
-def minhash_candidate_pairs(
-    docs: dict, num_hashes: int = 32, rows_per_band: int = 4, shingle_k: int = 3
-) -> list[tuple]:
-    """LSH banding over md5-portable signatures: (id_a, id_b, est_jaccard)
-    for every banded-bucket collision, id_a < id_b (ids compared on their
-    natural ordering). `docs` maps id -> text."""
-    sigs = {i: minhash_signature(t, num_hashes, shingle_k) for i, t in docs.items()}
+def _banded_pairs(sigs: dict, keys: dict, num_hashes: int) -> list[tuple]:
+    """(id_a, id_b, est_jaccard) for every two ids that share a key in
+    some band, id_a < id_b (ids compared on their natural ordering); est
+    = matching signature slots / num_hashes. `keys` maps id -> its band
+    keys in band order."""
     buckets: dict[tuple, list] = {}
-    bands = num_hashes // rows_per_band
-    for i, sig in sigs.items():
-        for b in range(bands):
-            key_src = "|".join(sig[b * rows_per_band : (b + 1) * rows_per_band])
-            key = (b, hashlib.md5(key_src.encode()).hexdigest())
-            buckets.setdefault(key, []).append(i)
+    for i, ks in keys.items():
+        for b, key in enumerate(ks):
+            buckets.setdefault((b, key), []).append(i)
     pairs = set()
     for members in buckets.values():
         members = sorted(members)
@@ -965,6 +963,81 @@ def minhash_candidate_pairs(
         est = sum(1 for x, y in zip(sigs[a], sigs[b]) if x == y) / num_hashes
         out.append((a, b, est))
     return out
+
+
+def minhash_candidate_pairs(
+    docs: dict, num_hashes: int = 32, rows_per_band: int = 4, shingle_k: int = 3
+) -> list[tuple]:
+    """LSH banding over md5-portable signatures: (id_a, id_b, est_jaccard)
+    for every banded-bucket collision, id_a < id_b. A band key is the md5
+    hex of the band's slots joined by '|'. `docs` maps id -> text."""
+    sigs = {i: minhash_signature(t, num_hashes, shingle_k) for i, t in docs.items()}
+    r = rows_per_band
+    keys = {
+        i: [
+            hashlib.md5("|".join(sig[b * r : (b + 1) * r]).encode()).hexdigest()
+            for b in range(num_hashes // r)
+        ]
+        for i, sig in sigs.items()
+    }
+    return _banded_pairs(sigs, keys, num_hashes)
+
+
+def minhash_signature_xxh64(
+    text: str, num_hashes: int = 32, shingle_k: int = 3
+) -> list[int]:
+    """dedup.minhash_signatures' signed int64 slots, from the definitions
+    (xxhash64 = Spark's XXH64, seed 42; hashLong(v, s) = F.xxhash64 of a
+    long v seeded with s):
+    - each word of the lowercased text hashes as xxhash64(word);
+    - a k-gram of word hashes w0..w(k-1) chains c = w0, then
+      c = hashLong(w_j, hashLong(c, 42)) — F.xxhash64(c, w_j);
+    - under k words, the one gram is xxhash64 of the words joined by ' ';
+    - slot i is the signed minimum of hashLong(gram, hashInt(i, 42)) over
+      the grams — F.xxhash64(F.lit(i), gram)."""
+    from .operators.dedup import _xxh64_int_scalar, _xxh64_long_vec, _xxh64_str_scalar
+
+    words = tokenize(text.lower())
+    k = shingle_k
+    if len(words) < k:
+        grams = _np.array([_xxh64_str_scalar(" ".join(words))], dtype=_np.uint64)
+    else:
+        wh = _np.array([_xxh64_str_scalar(w) for w in words], dtype=_np.uint64)
+        n = len(words) - (k - 1)
+        grams = wh[:n]
+        for j in range(1, k):
+            grams = _xxh64_long_vec(wh[j : n + j], _xxh64_long_vec(grams, 42))
+    seeds = _np.array(
+        [_xxh64_int_scalar(i) for i in range(num_hashes)], dtype=_np.uint64
+    )
+    per_seed = _xxh64_long_vec(grams[None, :], seeds[:, None]).view(_np.int64)
+    return per_seed.min(axis=1).tolist()
+
+
+def minhash_candidate_pairs_xxh64(
+    docs: dict, num_hashes: int = 32, rows_per_band: int = 4, shingle_k: int = 3
+) -> list[tuple]:
+    """LSH banding over the default-family signatures, mirroring
+    dedup.minhash_jaccard: (id_a, id_b, est_jaccard) for every
+    banded-bucket collision, id_a < id_b. Band b's key chains hashLong
+    over its slots from seed 42 — F.xxhash64(sig[b*r], .., sig[b*r+r-1]).
+    NULL texts have no signature and never pair. `docs` maps id -> text."""
+    from .operators.dedup import _xxh64_long_vec
+
+    sigs = {
+        i: minhash_signature_xxh64(t, num_hashes, shingle_k)
+        for i, t in docs.items()
+        if t is not None
+    }
+    keys = {}
+    for i, sig in sigs.items():
+        slots = _np.array(sig, dtype=_np.int64).view(_np.uint64)
+        slots = slots.reshape(num_hashes // rows_per_band, rows_per_band)
+        h = _xxh64_long_vec(slots[:, 0], 42)
+        for j in range(1, rows_per_band):
+            h = _xxh64_long_vec(slots[:, j], h)
+        keys[i] = h.view(_np.int64).tolist()
+    return _banded_pairs(sigs, keys, num_hashes)
 
 
 def simhash_portable_py(text: str, shingle_k: int = 2) -> int:

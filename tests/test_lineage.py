@@ -246,28 +246,35 @@ def test_normalized_url_mirrors_share_a_bucket(spark, tmp_path):
     assert _reason_counts(spark.read.parquet(f"{root}/labeled")) == want
 
 
+def _snapshot(root):
+    """(size, mtime) of every file under root."""
+    files = {}
+    for d, _, names in os.walk(root):
+        for n in names:
+            p = os.path.join(d, n)
+            files[os.path.relpath(p, root)] = (os.path.getsize(p), os.path.getmtime(p))
+    return files
+
+
 def test_resume_with_changed_bucketing_is_refused(spark, tmp_path):
     """A run killed after 1 of 4 buckets and resumed with another bucket
     count (or url key) would read the stored buckets under the new range
     and silently lose rows; it must raise before writing anything."""
     from dataqualitykit_spark.config import PipelineConfig
+    from dataqualitykit_spark.lineage import _config_digest
 
     src = pages_dataframe(spark, 120)
     root = str(tmp_path / "rebucket")
     with pytest.raises(RuntimeError, match="injected failure"):
         run_resumable(spark, src, root, n_buckets=4, fail_after=1)
     with open(os.path.join(root, "_bucketed_done")) as f:
-        assert json.load(f) == {"n_buckets": 4, "bucket_key": "url"}
+        assert json.load(f) == {
+            "n_buckets": 4,
+            "bucket_key": "url",
+            "config": _config_digest(PipelineConfig()),
+        }
 
-    def snapshot():
-        files = {}
-        for d, _, names in os.walk(root):
-            for n in names:
-                p = os.path.join(d, n)
-                files[os.path.relpath(p, root)] = (os.path.getsize(p), os.path.getmtime(p))
-        return files
-
-    before = snapshot()
+    before = _snapshot(root)
     assert any(k.startswith("labeled/bucket_id=") for k in before)
     with pytest.raises(ValueError, match="asks for {'n_buckets': 2"):
         run_resumable(spark, src, root, n_buckets=2)
@@ -275,7 +282,7 @@ def test_resume_with_changed_bucketing_is_refused(spark, tmp_path):
         run_resumable(
             spark, src, root, n_buckets=4, cfg=PipelineConfig(normalize_urls=True)
         )
-    assert snapshot() == before
+    assert _snapshot(root) == before
 
 
 def test_cross_bucket_near_dedup_one_keeper(spark, tmp_path):
@@ -318,7 +325,7 @@ def test_cross_bucket_near_dedup_one_keeper(spark, tmp_path):
     assert len(set(bucket_of.values())) >= 2, bucket_of
 
     src = pages_dataframe(spark, 150, seed=9).unionByName(planted)
-    cfg = PipelineConfig(dedup_near=True, near_dup_hash="md5")
+    cfg = PipelineConfig(dedup_near=True)
 
     clean = str(tmp_path / "xb_clean")
     run_resumable(spark, src, clean, n_buckets=4, cfg=cfg)
@@ -351,7 +358,7 @@ def test_lineage_with_near_dedup(spark, tmp_path):
     a bucket drop as dup_near, and kill/resume still converges."""
     from dataqualitykit_spark.config import PipelineConfig
 
-    cfg = PipelineConfig(dedup_near=True, near_dup_hash="md5")
+    cfg = PipelineConfig(dedup_near=True)
     src = pages_dataframe(spark, 300)
     clean = str(tmp_path / "nd_clean")
     run_resumable(spark, src, clean, n_buckets=2, cfg=cfg)
@@ -372,16 +379,112 @@ def test_lineage_with_near_dedup(spark, tmp_path):
 def test_near_dedup_resume_requires_sig_store(spark, tmp_path):
     """Resuming with dedup_near=True over buckets completed WITHOUT a
     signature store must fail loudly (silently skipping cross-bucket
-    near-dedup would mislabel)."""
+    near-dedup would mislabel): the config digest differs."""
     from dataqualitykit_spark.config import PipelineConfig
 
     src = pages_dataframe(spark, 120)
     root = str(tmp_path / "mix")
     with pytest.raises(RuntimeError, match="injected failure"):
         run_resumable(spark, src, root, n_buckets=2, fail_after=1)  # near OFF
-    cfg = PipelineConfig(dedup_near=True, near_dup_hash="md5")
-    with pytest.raises(RuntimeError, match="near_sigs"):
+    cfg = PipelineConfig(dedup_near=True)
+    same_bucketing = "asks for {'n_buckets': 2, 'bucket_key': 'url', 'config'"
+    with pytest.raises(ValueError, match=same_bucketing):
         run_resumable(spark, src, root, n_buckets=2, cfg=cfg)
+
+
+def test_resume_with_changed_config_is_refused(spark, tmp_path):
+    """A resume under another near_dup_threshold would label later
+    buckets by another rule than the completed ones; it must raise
+    before writing anything."""
+    from dataqualitykit_spark.config import PipelineConfig
+
+    src = pages_dataframe(spark, 60)
+    root = str(tmp_path / "reconfig")
+    cfg = PipelineConfig(dedup_near=True)
+    with pytest.raises(RuntimeError, match="injected failure"):
+        run_resumable(spark, src, root, n_buckets=2, cfg=cfg, fail_after=1)
+    before = _snapshot(root)
+    with pytest.raises(ValueError, match="n_buckets and config"):
+        changed = PipelineConfig(dedup_near=True, near_dup_threshold=0.7)
+        run_resumable(spark, src, root, n_buckets=2, cfg=changed)
+    assert _snapshot(root) == before
+
+
+def test_blocked_rows_sign_nothing_for_later_buckets(spark, tmp_path):
+    """A blocked row never enters run_pipeline's near-dup pass, so its
+    signature must not knock out a near-identical keepable doc in a later
+    bucket: run_resumable keeps what one run_pipeline pass keeps."""
+    import random
+    from datetime import datetime, timezone
+
+    from pyspark.sql import functions as F
+
+    from dataqualitykit_spark.config import PipelineConfig
+    from dataqualitykit_spark.fixtures import PAGES_SCHEMA
+    from dataqualitykit_spark.fixtures.pages import _english_sentence
+    from dataqualitykit_spark.pipeline import run_pipeline
+
+    text = _english_sentence(random.Random(7), 120)
+    ts = datetime(2024, 5, 1, tzinfo=timezone.utc)
+    src = spark.createDataFrame(
+        [
+            {"url": url, "warc_ts": ts, "html": None, "text": text + tail, "lang": "en"}
+            for url, tail in (
+                ("https://blocked.example/doc", " tailword0"),
+                ("https://good-0.example/x", " tailword1"),
+            )
+        ],
+        schema=PAGES_SCHEMA,
+    )
+    bucket_of = {
+        r["url"]: r["b"]
+        for r in src.select(
+            "url", F.pmod(F.xxhash64("url"), F.lit(2)).cast("int").alias("b")
+        ).collect()
+    }
+    assert bucket_of == {
+        "https://blocked.example/doc": 0,
+        "https://good-0.example/x": 1,
+    }
+    cfg = PipelineConfig(dedup_near=True, blocklist=("blocked.example",))
+    want = {
+        r["url"]: (r["keep"], r["drop_reason"])
+        for r in run_pipeline(src, cfg).select("url", "keep", "drop_reason").collect()
+    }
+    assert want == {
+        "https://blocked.example/doc": (False, "blocked_domain"),
+        "https://good-0.example/x": (True, None),
+    }
+    root = str(tmp_path / "blocked")
+    run_resumable(spark, src, root, n_buckets=2, cfg=cfg)
+    got = {
+        r["url"]: (r["keep"], r["drop_reason"])
+        for r in spark.read.parquet(f"{root}/labeled")
+        .select("url", "keep", "drop_reason")
+        .collect()
+    }
+    assert got == want
+
+
+def test_near_dedup_resume_past_buckets_without_participants(spark, tmp_path):
+    """A completed bucket with no near-dup participants (all its text is
+    NULL) writes no signature files; the next bucket must still read the
+    signature store (as empty) and label as one run_pipeline pass."""
+    from pyspark.sql import functions as F
+
+    from dataqualitykit_spark.config import PipelineConfig
+    from dataqualitykit_spark.pipeline import run_pipeline
+
+    pages = pages_dataframe(spark, 80)
+    in_b0 = F.pmod(F.xxhash64("url"), F.lit(2)) == 0
+    src = pages.withColumn("text", F.when(~in_b0, F.col("text")))
+    cfg = PipelineConfig(dedup_near=True)
+    want = _reason_counts(run_pipeline(src, cfg))
+    root = str(tmp_path / "nosigs")
+    run_resumable(spark, src, root, n_buckets=2, cfg=cfg)
+    manifest = json.load(open(os.path.join(root, "manifest.json")))
+    assert manifest["0"]["rows"] > 0
+    assert _reason_counts(spark.read.parquet(f"{root}/labeled")) == want
 
 
 def test_cross_bucket_near_dedup_with_paragraph_scrub(spark, tmp_path):
@@ -441,9 +544,7 @@ def test_cross_bucket_near_dedup_with_paragraph_scrub(spark, tmp_path):
         assert sum(1 for v in bucket_of.values() if v == b) >= 2, bucket_of
 
     src = pages_dataframe(spark, 150, seed=13).unionByName(planted)
-    cfg = PipelineConfig(
-        dedup_near=True, near_dup_hash="md5", dedup_paragraphs=True
-    )
+    cfg = PipelineConfig(dedup_near=True, dedup_paragraphs=True)
     root = str(tmp_path / "pscrub_xb")
     run_resumable(spark, src, root, n_buckets=2, cfg=cfg)
 

@@ -58,18 +58,34 @@ def test_portable_minhash_matches_python_mirror(spark):
         3: "tiny doc",
     }
     df = spark.createDataFrame(list(docs.items()), "doc_id int, text string")
-    sigs = {
-        r["id"]: list(r["sig"])
-        for r in dedup.minhash_signatures_portable(df, "text", "doc_id").collect()
-    }
-    for i, t in docs.items():
-        assert sigs[i] == S.minhash_signature(t), i
-    spark_pairs = {
-        (r["id_a"], r["id_b"]): r["est_jaccard"]
-        for r in dedup.minhash_jaccard_portable(df, "text", "doc_id").collect()
-    }
-    py_pairs = {(a, b): e for a, b, e in S.minhash_candidate_pairs(docs)}
-    assert spark_pairs == py_pairs
+    families = (
+        (
+            dedup.minhash_signatures_portable,
+            dedup.minhash_jaccard_portable,
+            S.minhash_signature,
+            S.minhash_candidate_pairs,
+        ),
+        (  # the default family run_pipeline and the oracle run
+            dedup.minhash_signatures,
+            dedup.minhash_jaccard,
+            S.minhash_signature_xxh64,
+            S.minhash_candidate_pairs_xxh64,
+        ),
+    )
+    for spark_sigs, spark_jaccard, py_sig, py_pairs_of in families:
+        sigs = {
+            r["id"]: list(r["sig"])
+            for r in spark_sigs(df, "text", "doc_id").collect()
+        }
+        for i, t in docs.items():
+            assert sigs[i] == py_sig(t), (py_sig.__name__, i)
+        # every candidate pair and its estimate, below the threshold too
+        spark_pairs = {
+            (r["id_a"], r["id_b"]): r["est_jaccard"]
+            for r in spark_jaccard(df, "text", "doc_id").collect()
+        }
+        py_pairs = {(a, b): e for a, b, e in py_pairs_of(docs)}
+        assert spark_pairs == py_pairs and py_pairs, py_pairs_of.__name__
 
 
 def test_portable_simhash_matches_python_mirror(spark):
@@ -331,6 +347,24 @@ def test_numpy_xxh64_matches_spark(spark):
             vals, dedup._xxh64_int_scalar(i)
         ).view(np.int64)
         assert [int(x) for x in mine] == got, f"seed {i}"
+
+
+def test_string_xxh64_matches_spark(spark):
+    """The python XXH64 of a string's UTF-8 bytes behind the oracle's word
+    hashes must be bit-exact with F.xxhash64(string): every tail branch
+    (0-3 bytes, one 4-byte word, 8-byte words, the 32-byte stripes and
+    the stripe merge), non-ASCII text and fixture words."""
+    from dataqualitykit_spark.fixtures import generate_pages
+
+    strs = ["", "a", "ab", "abc", "abcd", "abcdefg", "abcdefgh"]
+    strs += ["x" * n for n in (9, 12, 15, 31, 32, 33, 36, 40, 64, 77, 130)]
+    strs += ["héllo", "naïve café", "日本語のテキスト", "emoji 🙂 mid", "Ω" * 40]
+    page = max((p["text"] or "" for p in generate_pages(30)), key=len)
+    strs += page.split()[:50] + [page]
+    df = spark.createDataFrame([(t,) for t in strs], "s string")
+    got = [r[0] for r in df.select(F.xxhash64("s")).collect()]
+    mine = [dedup._xxh64_str_scalar(t) for t in strs]
+    assert [m - (1 << 64) if m >> 63 else m for m in mine] == got
 
 
 def test_band_keys_match_spark(spark):

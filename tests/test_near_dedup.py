@@ -1,7 +1,7 @@
 """Near-dup dedup integrated into the pipeline keep/drop (VERDICT r1 #1):
 MinHash-LSH pairs -> connected components -> canonical keep, others
 drop_reason='dup_near'. Spark pipeline vs the pure-python oracle must
-agree row-for-row when both use the md5-portable hash family.
+agree row-for-row on the xxhash64 MinHash family the pipeline runs.
 
 Re-imagines reference merge_similar_records (QualityControl.py:2062-2073,
 aspirational — blocking_columns undefined) as shuffle-parallel algebra.
@@ -19,7 +19,7 @@ from dataqualitykit_spark.operators.dedup import hamming_dup_pairs
 from dataqualitykit_spark.oracle import run_oracle
 from dataqualitykit_spark.pipeline import run_pipeline
 
-CFG = PipelineConfig(dedup_near=True, near_dup_hash="md5")
+CFG = PipelineConfig(dedup_near=True)
 N_PAGES = 600
 
 
