@@ -6,17 +6,26 @@ Common-Crawl-style page tables (see SURVEY.md for the full blueprint and
 reference citations).
 """
 
-from .config import DEFAULT_CONFIG, PipelineConfig
-from .pipeline import dataset_card, quality_metrics, run_pipeline
-from .session import get_spark
+import importlib
 
-__all__ = [
-    "DEFAULT_CONFIG",
-    "PipelineConfig",
-    "dataset_card",
-    "get_spark",
-    "quality_metrics",
-    "run_pipeline",
-]
+# name -> submodule, imported on first use: Spark's Python worker daemon
+# is `python -m dataqualitykit_spark._pydaemon`, which runs this file, and
+# an eager pipeline import would hold pandas/numpy/pyarrow in the daemon
+_EXPORTS = {
+    "DEFAULT_CONFIG": "config",
+    "PipelineConfig": "config",
+    "dataset_card": "pipeline",
+    "get_spark": "session",
+    "quality_metrics": "pipeline",
+    "run_pipeline": "pipeline",
+}
+__all__ = sorted(_EXPORTS)
+
+
+def __getattr__(name: str):
+    if name in _EXPORTS:
+        return getattr(importlib.import_module(f".{_EXPORTS[name]}", __name__), name)
+    raise AttributeError(f"module {__name__!r} has no attribute {name!r}")
+
 
 __version__ = "0.1.0"

@@ -82,6 +82,11 @@ _REASONS = ("kept", *DROP_REASON_ORDER)
 _NEAR_SIGS_SCHEMA = (
     "id string, sig array<bigint>, bands array<bigint>, bucket_id int"
 )
+# the labeled columns the prior-hash read needs, read with this schema so
+# no schema-inference job runs per bucket (bucket_id is the partition
+# column). The bucketed input keeps inferring: its columns follow the
+# caller's source.
+_LABELED_PRIOR_SCHEMA = "content_md5 string, drop_reason string, bucket_id int"
 
 
 def _config_digest(cfg: PipelineConfig) -> str:
@@ -281,7 +286,8 @@ def run_resumable(
         prior = None
         if cfg.dedup_content and claimed:
             prior = (
-                io.read("labeled")
+                spark.read.schema(_LABELED_PRIOR_SCHEMA)
+                .parquet(io._path("labeled"))
                 .filter(
                     F.col("bucket_id").isin(*claimed)
                     & (

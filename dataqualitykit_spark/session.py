@@ -3,7 +3,12 @@
 Design intent (SURVEY.md §4.2): everything rides on Catalyst/Tungsten —
 AQE on (runtime coalesce + skew-join), Arrow on (pandas UDF batches),
 explicit shuffle-partition sizing. On a real cluster the same builder is
-used by `spark-submit --py-files`; only master/memory flags change.
+used by `spark-submit --py-files dataqualitykit_spark.zip --conf
+spark.executorEnv.PYTHONPATH=dataqualitykit_spark.zip`; only
+master/memory flags change. The second flag is needed because Python
+workers fork from this package's daemon module, which must import before
+any task adds the `--py-files` zip to its own path (YARN alone puts
+py-files on the executors' PYTHONPATH).
 """
 
 from __future__ import annotations
@@ -38,6 +43,8 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.ui.enabled", "false")
+        # worker daemon that skips the per-task zip re-read (see _pydaemon)
+        .config("spark.python.daemon.module", "dataqualitykit_spark._pydaemon")
     )
     # shuffle spill on tmpfs when available: one local disk cannot feed 32
     # concurrent shuffle writers (local-mode stand-in for cluster NVMe)

@@ -3,12 +3,17 @@
 
     spark-submit \
       --py-files dataqualitykit_spark.zip \
+      --conf spark.executorEnv.PYTHONPATH=dataqualitykit_spark.zip \
       [--packages org.apache.iceberg:iceberg-spark-runtime-3.5_2.12:<v>] \
       scripts/run_quality_pipeline.py \
       --input  s3://bucket/pages_parquet_or_iceberg \
       --output s3://bucket/labeled_out \
       --format parquet|iceberg|wet \
       --buckets 64 --salt-partitions 4096 [--resume]
+
+The executors' PYTHONPATH must hold the zip: Spark starts each executor's
+Python worker daemon as `python -m dataqualitykit_spark._pydaemon`, before
+any task puts the `--py-files` zip on its own path.
 
 Local smoke:
     python scripts/run_quality_pipeline.py \
