@@ -159,14 +159,6 @@ class PipelineConfig:
     token_budget: int | None = None
     budget_by: str | None = "lang"
 
-    # internal (set by lineage.run_resumable): keep the post-scrub
-    # pre-model text as `_prescrub_text` in run_pipeline's output so the
-    # cross-bucket near-dedup stage signs it directly instead of
-    # re-applying the c4/paragraph scrubs to the bucket input (measured
-    # 11.6% of the bucket pass). The column must be dropped before the
-    # labeled table is persisted — raw text is never written to output.
-    carry_prescrub_text: bool = False
-
     # near-duplicate dedup (MinHash-LSH pairs -> connected components ->
     # keep the canonical min-url row per cluster, drop_reason='dup_near').
     # Off by default: it adds two shuffled joins + an iterative CC stage.

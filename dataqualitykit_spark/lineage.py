@@ -1,57 +1,67 @@
 """Resumable per-partition lineage (BASELINE.json north_rule: "resumable
 from checkpoint with per-partition lineage + metrics").
 
-The input is split into B deterministic url-hash buckets
-(pmod(xxhash64(url), B) — the same salted key that defuses domain skew;
+A run has two parts. BUCKETIZE runs pipeline.dedup (the map-side gates,
+the paragraph scrub, the url window and the content window) over the
+WHOLE source once and writes its output — the projected source columns,
+`text` after the C4/paragraph scrubs, and the pre-model reason `_pre` —
+as the bucketed table, partitioned by B deterministic url-hash buckets
+(pmod(xxhash64(url), B): the same salted key that defuses domain skew;
 the url window's key normalize_url(url) under cfg.normalize_urls, so
-mirrors of one page share a bucket and its url window) in ONE pass: the
-bucketed input is written once, partitioned by _bucket, and every
-per-bucket read afterwards partition-prunes to a single directory.
-(Round 1 filtered the original source per bucket — B full input scans;
-at 100 TB with B=8 that is 800 TB of read.)
+mirrors of one page share a bucket). Each BUCKET then runs only
+pipeline.score over its partition (a read that prunes to one directory):
+the fused scorer and the decide step (without near-dedup: one Spark job,
+no shuffle). Every bucket is appended to the labeled table, and its id
+is then recorded in a JSON manifest. A restart skips completed buckets, so a run killed
+after bucket k reprocesses nothing and converges to the same table as an
+uninterrupted run.
 
-Each bucket is processed and appended to the output table, then its id is
-recorded in a JSON manifest. A restart skips completed buckets, so a run
-killed after bucket k reprocesses nothing and converges to the same table
-as an uninterrupted run.
+Cross-bucket exact dedup is therefore global: the url and content
+windows see the whole source at bucketize, so for every config without
+near-dedup the labels equal one run_pipeline pass row for row, including
+which copy of a duplicate is kept. The trade-off: the part of a run that
+cannot resume (bucketize) now includes the two dedup shuffles over the
+whole source, while the Python scorer, which dominates the per-doc cost,
+stays bucketed. The total shuffled bytes do not change. content_md5 is
+not stored in the bucketed table; score recomputes it from the stored
+text (storing it cost more write bytes than the md5 costs time).
 
-Content-dedup across buckets stays exact and runs BEFORE the scorer:
-run_pipeline takes the content hashes that COMPLETED buckets already
-claimed (`prior_hashes`: content_md5 of every written row except dup_url,
-blocked_domain and url_keywords rows, which never enter the content
-window) and left-joins them ahead of its content window — a plain
-shuffled equi-join, NOT a forced broadcast: the hash set is the MAJORITY
-of the corpus at scale, billions of md5s; AQE may still choose broadcast
-when the set is actually small. A cross-bucket copy is then dup_content
-exactly as a later copy inside the bucket is, is never scored, and gets
-the label of one run_pipeline pass over the whole input (up to WHICH copy
-is kept: the earliest bucket's). Across buckets the manifest state
-substitutes for a global shuffle.
+The `_bucketed_done` marker records how the rows were bucketed
+(n_buckets, the bucket key), a digest of the config, the layout of the
+bucketed table and its schema as DDL. A resume under other bucketing, a
+different config or an older layout raises before anything is written;
+the bucketed table is read with the stored schema, so no
+schema-inference job runs.
 
 Per-bucket metrics come from the labeled write itself: one
 DataFrame.observe (an Observation) on the write gathers the row count and
 quality_metrics' per-reason docs, chars and avg_ppl inside the write's
-job. The metrics table is written from those values and the manifest
-records the row count, so the labeled partition is never read back; an
-empty bucket records rows=0 and writes no metrics rows.
+job. The driver writes the bucket's metrics partition from those values
+with pyarrow (no Spark job), and the manifest records the row count, so
+the labeled partition is never read back; an empty bucket records rows=0
+and writes no metrics rows.
 
 NEAR-dup dedup spans buckets through persisted signatures instead
-(cfg.dedup_near), after run_pipeline: each bucket persists the xxhash64
-MinHash signatures and band keys of its near-dedup participants (the
-rows run_pipeline bands: exact-dedup survivors outside the blocklist and
-url-keyword gates — kept, quality-dropped and near-dropped rows alike,
-so transitive chains propagate) to a `near_sigs` table partitioned by
-bucket_id; before finalizing bucket b, its participants' signatures
-band-join (dedup.minhash_jaccard_cross) against completed buckets'
-signatures, and any row whose estimated Jaccard against a prior doc clears
-cfg.near_dup_threshold is relabeled drop_reason='dup_near'. Semantics are
-GREEDY FIRST-SEEN in bucket order (the prior doc always wins), which is
-deterministic across kill/resume because bucket order is fixed and resume
-skips completed buckets — an interrupted run converges to the
-uninterrupted run's exact labels. (A single global run_pipeline instead
-picks the min-url doc of each connected component as keeper, so WHICH
-member of a cross-bucket cluster is kept can differ between the global and
-bucketed shapes; each shape is internally deterministic.)
+(cfg.dedup_near): each bucket persists the xxhash64 MinHash signatures
+and band keys of its near-dedup participants — its dedup survivors
+(`_pre IS NULL`), exactly the set run_pipeline's near stage bands, so
+transitive chains propagate through rows the rules later drop — to a
+`near_sigs` table partitioned by bucket_id; before finalizing bucket b,
+its participants' signatures band-join (dedup.minhash_jaccard_cross)
+against completed buckets' signatures, and any row whose estimated
+Jaccard against a prior doc clears cfg.near_dup_threshold is relabeled
+drop_reason='dup_near'. Semantics are GREEDY FIRST-SEEN in bucket order
+(the prior doc always wins), which is deterministic across kill/resume
+because bucket order is fixed and resume skips completed buckets — an
+interrupted run converges to the uninterrupted run's exact labels. (A
+single global run_pipeline instead picks the min-url doc of each
+connected component as keeper, so WHICH member of a cross-bucket cluster
+is kept can differ between the global and bucketed shapes; each shape is
+internally deterministic.)
+
+run_resumable works on a local file system only: the manifest, the
+marker and the metrics partitions are written with plain file
+operations (open, os.replace, pyarrow).
 """
 
 from __future__ import annotations
@@ -60,33 +70,40 @@ import functools
 import hashlib
 import json
 import os
-from dataclasses import fields, replace
+import shutil
+from dataclasses import fields
 from datetime import datetime, timezone
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from .config import DEFAULT_CONFIG, DROP_REASON_ORDER, PipelineConfig
 from .functions import text as T
-from .pipeline import run_pipeline
-from .sources import TableIO
+from .pipeline import dedup, score
 
-# drop reasons whose rows never enter the content window: their hashes
-# claim nothing for later buckets
-_INELIGIBLE = ("dup_url", "blocked_domain", "url_keywords")
 # every reason a labeled row can carry, as quality_metrics names it
 _REASONS = ("kept", *DROP_REASON_ORDER)
+# what the bucketed table holds: pipeline.dedup's output with its _pre
+# column (a store without the tag was bucketed from the raw source)
+_LAYOUT = "dedup"
+# the metrics table: quality_metrics' schema (bucket_id is the partition
+# column)
+_METRICS_SCHEMA = pa.schema(
+    [
+        ("reason", pa.string()),
+        ("docs", pa.int64()),
+        ("chars", pa.int64()),
+        ("avg_ppl", pa.float64()),
+    ]
+)
 # the near_sigs table: dedup.minhash_signatures of the url-keyed
 # participants, partitioned by bucket_id (read with this schema, so a
 # store whose buckets had no participants reads as empty)
 _NEAR_SIGS_SCHEMA = (
     "id string, sig array<bigint>, bands array<bigint>, bucket_id int"
 )
-# the labeled columns the prior-hash read needs, read with this schema so
-# no schema-inference job runs per bucket (bucket_id is the partition
-# column). The bucketed input keeps inferring: its columns follow the
-# caller's source.
-_LABELED_PRIOR_SCHEMA = "content_md5 string, drop_reason string, bucket_id int"
 
 
 def _config_digest(cfg: PipelineConfig) -> str:
@@ -147,44 +164,42 @@ def _bucket_metrics(sc) -> tuple[Column, ...]:
     return tuple(aggs)
 
 
-def _write_metrics(spark: SparkSession, io: TableIO, b: int, got: dict) -> int:
-    """Writes bucket b's rows of the metrics table (quality_metrics'
-    schema plus bucket_id, one row per reason present) from the observed
-    values, and returns the bucket's row count. The rows are a VALUES
-    relation planned on the JVM: no read-back of the labeled partition
-    and no Python worker (createDataFrame). An empty bucket writes
-    nothing."""
-
-    def lit(v, suffix=""):
-        return "NULL" if v is None else f"{v!r}{suffix}"
-
-    values = [
-        f"('{r}', {got[f'docs_{r}']}, {lit(got[f'chars_{r}'])}, "
-        f"{lit(got[f'avg_ppl_{r}'], 'D')})"
-        for r in sorted(_REASONS)
-        if got[f"docs_{r}"]
-    ]
+def _write_metrics(root: str, b: int, got: dict) -> int:
+    """Writes bucket b's partition of the metrics table (one row per
+    reason present) from the observed values with pyarrow, and returns
+    the bucket's row count. The file goes to a hidden directory first,
+    which then replaces `bucket_id=<b>/`, so a re-run bucket never
+    duplicates rows. An empty bucket writes nothing."""
+    reasons = [r for r in sorted(_REASONS) if got[f"docs_{r}"]]
     docs = sum(got[f"docs_{r}"] for r in _REASONS)
     if docs != got["rows"]:
         raise RuntimeError(
             f"bucket {b}: {got['rows']} labeled rows but {docs} carry a known "
             "drop_reason"
         )
-    if values:
-        (
-            spark.sql(
-                "SELECT reason, CAST(docs AS BIGINT) AS docs, "
-                "CAST(chars AS BIGINT) AS chars, "
-                f"CAST(avg_ppl AS DOUBLE) AS avg_ppl, {b} AS bucket_id "
-                f"FROM VALUES {', '.join(values)} AS t(reason, docs, chars, avg_ppl)"
-            )
-            .coalesce(1)
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("bucket_id")
-            .parquet(io._path("metrics"))
+    final = os.path.join(root, f"bucket_id={b}")
+    tmp = os.path.join(root, f".bucket_id={b}.tmp")
+    shutil.rmtree(tmp, ignore_errors=True)
+    if reasons:
+        os.makedirs(tmp)
+        table = pa.table(
+            {
+                "reason": reasons,
+                "docs": [got[f"docs_{r}"] for r in reasons],
+                "chars": [got[f"chars_{r}"] for r in reasons],
+                "avg_ppl": [got[f"avg_ppl_{r}"] for r in reasons],
+            },
+            schema=_METRICS_SCHEMA,
         )
+        pq.write_table(table, os.path.join(tmp, "part-00000.parquet"))
+    shutil.rmtree(final, ignore_errors=True)
+    if reasons:
+        os.rename(tmp, final)
     return got["rows"]
+
+
+def _ddl(df: DataFrame) -> str:
+    return ", ".join(f"`{f.name}` {f.dataType.simpleString()}" for f in df.schema)
 
 
 def run_resumable(
@@ -195,8 +210,9 @@ def run_resumable(
     cfg: PipelineConfig = DEFAULT_CONFIG,
     fail_after: int | None = None,
 ) -> Manifest:
-    """Process `source` in url-hash buckets, appending labeled output +
-    metrics per bucket; resume skips completed buckets.
+    """Dedup `source` once into url-hash buckets, then score each bucket,
+    appending labeled output + metrics per bucket; resume skips completed
+    buckets. `out_root` is a local directory.
 
     fail_after=k raises after k buckets (test hook for the kill/resume
     contract). A resume must pass the original n_buckets and a config
@@ -213,131 +229,79 @@ def run_resumable(
             "apply sampling.sample_to_token_budget to the compacted "
             "labeled table instead"
         )
-    io = TableIO(spark, out_root, fmt="parquet")
     os.makedirs(out_root, exist_ok=True)
     manifest = Manifest(os.path.join(out_root, "manifest.json"))
     done = manifest.completed()
 
-    # ONE source scan: materialize the bucketed input partitioned by
+    # ONE source scan: dedup the whole source and write it partitioned by
     # _bucket, then every per-bucket read below prunes to one partition
     # directory (PartitionFilters on _bucket). The marker file makes the
     # stage idempotent across restarts — a resume never re-scans the
     # source, matching the north rule's "resumable mid-table". It records
-    # how the rows were bucketed and the config digest: a resume that
-    # would bucket differently would loop over buckets the stored input
-    # does not have, and one under another config would mix two label
-    # semantics in one table, so either is refused before anything is
+    # how the rows were bucketed, the config digest and the layout: a
+    # resume that would bucket differently would loop over buckets the
+    # stored input does not have, one under another config would mix two
+    # label semantics in one table, and one over another layout would
+    # misread the stored columns, so each is refused before anything is
     # written.
-    bucketed_path = io._path("bucketed")
+    bucketed_path = os.path.join(out_root, "bucketed")
     marker = os.path.join(out_root, "_bucketed_done")
     bucketing = {
         "n_buckets": n_buckets,
         "bucket_key": "normalize_url" if cfg.normalize_urls else "url",
         "config": _config_digest(cfg),
+        "layout": _LAYOUT,
     }
     if os.path.exists(marker):
         with open(marker) as f:
             stored = json.load(f)
-        if stored != bucketing:
+        seen = {k: stored.get(k) for k in bucketing}
+        if seen != bucketing:
             raise ValueError(
-                f"run_resumable: {out_root} was bucketed as {stored}, this "
-                f"call asks for {bucketing} — resume with the original "
-                "n_buckets and config or restart with a fresh out_root"
+                f"run_resumable: {out_root} was bucketed as {seen}, this call "
+                f"asks for {bucketing} — resume with the original n_buckets "
+                "and config or restart with a fresh out_root"
             )
     else:
         # bucket on the url window's key, so every row one url window
         # compares lands in the same bucket
         key = T.normalize_url(F.col("url")) if cfg.normalize_urls else F.col("url")
-        # project the pipeline's columns only — never rewrite `html`
-        # page bytes into the bucketed copy
-        keep = [c for c in ("url", "warc_ts", "text", "lang") if c in source.columns]
-        (
-            source.select(*keep)
-            .withColumn(
-                "_bucket", F.pmod(F.xxhash64(key), F.lit(n_buckets)).cast("int")
-            )
-            .write.mode("overwrite")
-            .partitionBy("_bucket")
-            .parquet(bucketed_path)
+        deduped = dedup(source, cfg).withColumn(
+            "_bucket", F.pmod(F.xxhash64(key), F.lit(n_buckets)).cast("int")
         )
+        deduped.write.mode("overwrite").partitionBy("_bucket").parquet(bucketed_path)
+        stored = bucketing | {"schema": _ddl(deduped)}
         with open(marker, "w") as f:
-            json.dump(bucketing, f)
-    bucketed = spark.read.parquet(bucketed_path)
+            json.dump(stored, f)
+    if len(done) == n_buckets:
+        return manifest
+    bucketed = spark.read.schema(stored["schema"]).parquet(bucketed_path)
 
-    # with near-dedup on, carry the post-scrub pre-model text through the
-    # labeled frame so the signature stage reads it directly — re-applying
-    # the c4/paragraph scrubs to the bucket input was measured at 11.6% of
-    # the bucket pass (PLANS.md round 6). The column rides the existing
-    # localCheckpoint and is dropped before any write below.
-    bucket_cfg = replace(cfg, carry_prescrub_text=True) if cfg.dedup_near else cfg
     processed = 0
     for b in range(n_buckets):
         if b in done:
             continue
         part = bucketed.filter(F.col("_bucket") == b).drop("_bucket")
-        # cross-bucket exact content dedup: the content hashes that
-        # manifest-COMPLETED buckets already claimed go into the pipeline
-        # ahead of its content window, so a later copy is dup_content
-        # before the scorer and never scored. Only completed buckets: a
-        # torn previous run may have written this bucket's files without
-        # marking it, and reading them would dedup the bucket against its
-        # own stale copy and race the dynamic overwrite that replaces them.
-        claimed = manifest.nonempty()
-        prior = None
-        if cfg.dedup_content and claimed:
-            prior = (
-                spark.read.schema(_LABELED_PRIOR_SCHEMA)
-                .parquet(io._path("labeled"))
-                .filter(
-                    F.col("bucket_id").isin(*claimed)
-                    & (
-                        F.col("drop_reason").isNull()
-                        | ~F.col("drop_reason").isin(*_INELIGIBLE)
-                    )
-                )
-                .select("content_md5")
-            )
-        labeled = run_pipeline(part, bucket_cfg, prior_hashes=prior)
+        labeled = score(part, cfg)
         # cross-bucket NEAR-dup dedup: the key is a band-bucket collision
         # over persisted MinHash signatures instead of an exact hash.
         if cfg.dedup_near:
             from .operators import dedup as _dedup
 
-            # the near stage reuses `labeled` three times (participants,
-            # relabel join, write) — cut the UDF-scoring lineage once; the
-            # working set is one BUCKET, bounded by construction. Not
-            # lazy: under AQE the checkpoint call runs the bucket plan's
-            # shuffle stages here; only its last stage (the scorer) waits
-            # for the first consumer's job.
-            labeled = labeled.localCheckpoint(eager=False)
-            # near-dedup participants = the set run_pipeline bands within
-            # the bucket: kept rows AND quality/near-dropped rows, so
-            # chains propagate via dropped members; never missing_text,
-            # dup_content or _INELIGIBLE rows
-            participant = F.col("drop_reason").isNull() | ~F.col(
-                "drop_reason"
-            ).isin("missing_text", "dup_content", *_INELIGIBLE)
-            # participant text comes straight off the labeled frame: the
-            # carried `_prescrub_text` is the post-c4/post-paragraph text
-            # whose md5 IS content_md5 (run_pipeline's text after both
-            # scrubs), so no re-scrub and no (url, md5)
-            # recovery join against the bucket input is needed — that
-            # path was measured at 11.6% of a 25k-doc bucket pass
-            # (1.03 s of 8.86 s; PLANS.md round 6).
-            texts = (
-                labeled.filter(participant)
-                .select("url", F.col("_prescrub_text").alias("text"))
-                .dropDuplicates(["url"])
-            )
-            # (this checkpoint call runs the dropDuplicates shuffle, and
-            # with it the scorer stage of `labeled`)
+            # the participants are the bucket's dedup survivors, signed
+            # straight from the bucket input (their text is the
+            # post-scrub text whose md5 is content_md5)
             sigs_b = _dedup.minhash_signatures(
-                texts, "text", "url", cfg.near_dup_hashes
+                part.filter(F.col("_pre").isNull()).select("url", "text"),
+                "text",
+                "url",
+                cfg.near_dup_hashes,
             ).localCheckpoint(eager=False)
+            claimed = manifest.nonempty()
             if claimed:
                 prior_sigs = (
                     spark.read.schema(_NEAR_SIGS_SCHEMA)
-                    .parquet(io._path("near_sigs"))
+                    .parquet(os.path.join(out_root, "near_sigs"))
                     .filter(F.col("bucket_id").isin(*claimed))
                     .drop("bucket_id")
                 )
@@ -372,26 +336,22 @@ def run_resumable(
                 .write.mode("overwrite")
                 .option("partitionOverwriteMode", "dynamic")
                 .partitionBy("bucket_id")
-                .parquet(io._path("near_sigs"))
+                .parquet(os.path.join(out_root, "near_sigs"))
             )
-        # the carried pre-scrub text is a signature-stage convenience ONLY
-        # — raw text is never persisted to the labeled table
-        labeled = labeled.drop("_prescrub_text").withColumn(
-            "bucket_id", F.lit(b)
-        )
         # idempotent per-bucket commit: dynamic partition overwrite on
         # bucket_id means a crash AFTER the write but BEFORE manifest.mark
         # replaces (not duplicates) the bucket's rows on resume. The
         # write's own job gathers the bucket metrics (no read-back).
         obs = Observation(f"bucket_{b}")
         (
-            labeled.observe(obs, *_bucket_metrics(spark.sparkContext))
+            labeled.withColumn("bucket_id", F.lit(b))
+            .observe(obs, *_bucket_metrics(spark.sparkContext))
             .write.mode("overwrite")
             .option("partitionOverwriteMode", "dynamic")
             .partitionBy("bucket_id")
-            .parquet(io._path("labeled"))
+            .parquet(os.path.join(out_root, "labeled"))
         )
-        rows = _write_metrics(spark, io, b, obs.get)
+        rows = _write_metrics(os.path.join(out_root, "metrics"), b, obs.get)
         manifest.mark(b, rows)
         done.add(b)
         processed += 1

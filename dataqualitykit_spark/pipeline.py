@@ -1,10 +1,10 @@
 """The web-text quality pipeline, dedup-first (CCNet-style ordering):
 
     ingest (project html away) -> salt repartition by url ->
-    missing flag -> url keep-most-recent -> content keep-one (raw-text md5;
-    hashes earlier resumable buckets claimed count as an earlier copy)
+    missing flag -> url keep-most-recent -> content keep-one (raw-text md5)
+    = dedup()
     -> [survivors only] fused scrub+score Arrow UDF (every metric +
-    langid/ppl) -> quality decide -> labeled frame
+    langid/ppl) -> quality decide -> labeled frame = score()
 
 Why this shape at 100 TB (BASELINE.json north_rule):
 
@@ -269,17 +269,18 @@ def _scorer(sc, cfg: PipelineConfig, loader_ids: tuple) -> _Scorer:
 @dataclass(frozen=True)
 class _Plan:
     """run_pipeline's Columns for one (SparkContext, config, input
-    columns, prior-hash flag). Each dict is one withColumns; a stage
-    boundary sits wherever a column reads the previous stage's output."""
+    columns). Each dict is one withColumns; a stage boundary sits wherever
+    a column reads the previous stage's output. The fields up to `pre`
+    belong to dedup, the rest to score."""
 
     url_key: Column
     salt: bool
     gates: dict[str, Column]
     hashes: dict[str, Column]
     dup_url: dict[str, Column]
-    prior: dict[str, Column]
     eligible: dict[str, Column]
     dup_content: dict[str, Column]
+    pre: tuple[Column, ...]
     survivor: dict[str, Column]
     near: dict[str, Column]
     score: dict[str, Column]
@@ -294,7 +295,6 @@ def _plan(
     cfg: PipelineConfig,
     loader_ids: tuple,
     keep: tuple[str, ...],
-    has_prior: bool,
 ) -> _Plan:
     c = F.col
     scorer = _scorer(sc, cfg, loader_ids)
@@ -327,12 +327,11 @@ def _plan(
 
         gates["text"] = _c4.kept_lines_text(c("text"), cfg.c4_min_words_per_line)
 
-    # the raw-text md5 is computed ONCE: it keys the content window AND
-    # becomes the output's content_md5
-    hashes = {
-        "_missing_raw": T.is_missing(c("text")),
-        "_chash": F.md5(F.encode(F.coalesce(c("text"), F.lit("")), "UTF-8")),
-    }
+    # md5 of the post-scrub text: it keys the content window, and score
+    # hashes the same text again as the output's content_md5 (dedup's
+    # output, which run_resumable stores, does not carry the hash)
+    text_md5 = F.md5(F.encode(F.coalesce(c("text"), F.lit("")), "UTF-8"))
+    hashes = {"_missing_raw": T.is_missing(c("text")), "_chash": text_md5}
     chash = c("_chash")
     # pre-model drop flags, (reason, column), in DROP_REASON_ORDER
     flags = [
@@ -357,38 +356,32 @@ def _plan(
         dup_url["_dup_url"] = F.row_number().over(w_url) > 1
         flags.append(("dup_url", "_dup_url"))
 
-    # content keep-one among eligible rows, keyed by raw-text md5
+    # content keep-one among eligible rows, keyed by the text's md5
     # (blocked rows are ineligible: a blocked mirror must not win the
-    # window and shadow a keepable copy of the same content); a hash that
-    # `prior_hashes` holds marks every eligible copy
+    # window and shadow a keepable copy of the same content)
     eligible = ~c("_missing_raw")
     for flag in ("_dup_url", "_blocked", "_kw_blocked"):
         if flag in dup_url or flag in gates:
             eligible = eligible & ~c(flag)
     dup_content: dict[str, Column] = {}
-    survivor = c("_eligible")
     if cfg.dedup_content:
         order = [c("_eligible").desc(), c("url").asc()]
         if "warc_ts" in keep:
             order.append(c("warc_ts").asc())
         later = F.row_number().over(Window.partitionBy(chash).orderBy(*order)) > 1
-        if has_prior:
-            later = c("_prior").isNotNull() | later
         dup_content["_dup_content"] = c("_eligible") & later
-        survivor = survivor & ~c("_dup_content")
         flags.append(("dup_content", "_dup_content"))
 
-    near: dict[str, Column] = {}
-    if cfg.dedup_near:
-        near = {
-            "_dup_near": c("_nd").isNotNull(),
-            "_survivor": c("_survivor") & c("_nd").isNull(),
-        }
-        flags.append(("dup_near", "_dup_near"))
-
-    decide = F.when(c(flags[0][1]), F.lit(flags[0][0]))
+    # the first pre-model reason, NULL for a survivor
+    pre = F.when(c(flags[0][1]), F.lit(flags[0][0]))
     for reason, flag in flags[1:]:
-        decide = decide.when(c(flag), F.lit(reason))
+        pre = pre.when(c(flag), F.lit(reason))
+
+    near: dict[str, Column] = {}
+    decide = [c("_pre")]
+    if cfg.dedup_near:
+        near = {"_survivor": c("_survivor") & c("_nd").isNull()}
+        decide.append(F.when(c("_nd").isNotNull(), F.lit("dup_near")))
 
     # metric columns are NULL (not garbage zeros) for pre-model drops.
     # The labeled output does NOT duplicate the raw text (it lives in the
@@ -401,15 +394,7 @@ def _plan(
         if n in _METRIC_COLS
     ]
     out += [c("drop_reason"), c("drop_reason").isNull().alias("keep")]
-    out.append(chash.alias("content_md5"))
-    if cfg.carry_prescrub_text:
-        # opt-in column for run_resumable's near-sig stage: the
-        # post-c4/post-paragraph pre-model text whose md5 IS content_md5,
-        # so lineage can sign it directly instead of re-scrubbing the
-        # bucket input (measured 11.6% of a 25k-doc near-dedup bucket
-        # pass, 1.03 s of 8.86 s; PLANS.md round 6). Callers MUST drop it
-        # before persisting labeled output.
-        out.append(c("text").alias("_prescrub_text"))
+    out.append(text_md5.alias("content_md5"))
 
     return _Plan(
         url_key=url_key,
@@ -436,10 +421,10 @@ def _plan(
         gates=gates,
         hashes=hashes,
         dup_url=dup_url,
-        prior={"_prior": F.lit(True)},
         eligible={"_eligible": eligible},
         dup_content=dup_content,
-        survivor={"_survivor": survivor},
+        pre=(*[c(k) for k in keep], pre.alias("_pre")),
+        survivor={"_survivor": c("_pre").isNull()},
         near=near,
         # model + rules stage: ONE frame (a filter+union here would
         # duplicate the whole dedup subtree). Dropped rows cross the Arrow
@@ -447,7 +432,7 @@ def _plan(
         # so the models still only score survivors.
         score={"_score": scorer.udf(F.when(c("_survivor"), c("text")))},
         scorer=scorer,
-        decide={"drop_reason": decide.otherwise(scorer.quality)},
+        decide={"drop_reason": F.coalesce(*decide, scorer.quality)},
         out=tuple(out),
     )
 
@@ -531,29 +516,22 @@ def _token_budget(labeled: DataFrame, cfg: PipelineConfig) -> DataFrame:
     )
 
 
-def run_pipeline(
-    df: DataFrame,
-    cfg: PipelineConfig = DEFAULT_CONFIG,
-    *,
-    prior_hashes: DataFrame | None = None,
-) -> DataFrame:
-    """Full pipeline: input (url, warc_ts?, html?, text, lang?) ->
-    one labeled row per input row (keep, drop_reason, scrubbed_text +
-    metric columns; metrics are NULL for rows dropped pre-model).
+def _input_cols(df: DataFrame) -> tuple[str, ...]:
+    return tuple(c for c in ("url", "warc_ts", "text", "lang") if c in df.columns)
 
-    The plan is one select/withColumns per stage over Columns cached per
-    config (see _cache_key), so a warm build is a few hundred py4j round
-    trips instead of ~3k.
 
-    `prior_hashes` (run_resumable's cross-bucket dedup): a one-column
-    frame of content hashes already claimed by earlier output. Every
-    eligible row whose content_md5 it holds drops as dup_content ahead of
-    the scorer, exactly like a later copy inside the content window."""
-    if prior_hashes is not None and not cfg.dedup_content:
-        raise ValueError("prior_hashes needs cfg.dedup_content")
+def dedup(df: DataFrame, cfg: PipelineConfig = DEFAULT_CONFIG) -> DataFrame:
+    """run_pipeline's first half, everything ahead of the models: the
+    map-side gates, the paragraph scrub, the url window and the content
+    window. Returns the projected input columns (`text` after the C4 and
+    paragraph scrubs) plus `_pre`, the first pre-model drop reason in
+    DROP_REASON_ORDER (blocked_domain, url_keywords, missing_text,
+    dup_url, dup_content); a row survives to the scorer iff `_pre` is
+    NULL. Both windows see the whole input, so this half is where every
+    cross-row decision except near-dup is made."""
     sc = df.sparkSession.sparkContext
-    keep = tuple(c for c in ("url", "warc_ts", "text", "lang") if c in df.columns)
-    p = _plan(*_cache_key(df, cfg), keep, prior_hashes is not None)
+    keep = _input_cols(df)
+    p = _plan(*_cache_key(df, cfg), keep)
     base = df.select(*keep)
     n_salt = cfg.salt_partitions
     if n_salt < 0:  # AUTO: 2x cores — AQE can still coalesce small stages
@@ -575,26 +553,41 @@ def run_pipeline(
     base = base.withColumns(p.hashes)
     if p.dup_url:
         base = base.withColumns(p.dup_url)
-    if prior_hashes is not None:
-        # plain equi-join on the hash key: AQE broadcasts a small prior
-        # set on its own, and a shuffled join on _chash already satisfies
-        # the content window's distribution
-        prior = prior_hashes.toDF("_chash").distinct().withColumns(p.prior)
-        base = base.join(prior, "_chash", "left")
     base = base.withColumns(p.eligible)
     if p.dup_content:
         base = base.withColumns(p.dup_content)
-    base = base.withColumns(p.survivor)
+    return base.select(*p.pre)
+
+
+def score(deduped: DataFrame, cfg: PipelineConfig = DEFAULT_CONFIG) -> DataFrame:
+    """run_pipeline's second half, over dedup's output (or any subset of
+    its rows): the near-dup stage among the survivors, the fused scorer
+    and the decide step, coalesce(_pre, dup_near, first failing quality
+    rule). content_md5 is the md5 of the stored post-scrub text."""
+    p = _plan(*_cache_key(deduped, cfg), _input_cols(deduped))
+    base = deduped.withColumns(p.survivor)
     if cfg.dedup_near:
         base = base.join(_near_dup_urls(base, cfg), "url", "left").withColumns(
             p.near
         )
-    labeled = (
+    return (
         base.withColumns(p.score)
         .withColumns(p.scorer.metrics)
         .withColumns(p.decide)
         .select(*p.out)
     )
+
+
+def run_pipeline(df: DataFrame, cfg: PipelineConfig = DEFAULT_CONFIG) -> DataFrame:
+    """Full pipeline: input (url, warc_ts?, html?, text, lang?) ->
+    one labeled row per input row (keep, drop_reason, scrubbed_text +
+    metric columns; metrics are NULL for rows dropped pre-model):
+    score(dedup(df)), then the opt-in token budget.
+
+    The plan is one select/withColumns per stage over Columns cached per
+    config (see _cache_key), so a warm build is a few hundred py4j round
+    trips instead of ~3k."""
+    labeled = score(dedup(df, cfg), cfg)
     if cfg.token_budget is not None:
         labeled = _token_budget(labeled, cfg)
     return labeled

@@ -58,8 +58,8 @@ def four_bucket_root(spark, tmp_path_factory):
 
 def test_bucketed_input_written_once_and_pruned(spark, four_bucket_root):
     """Scale contract: the source is scanned ONCE into a partitioned
-    bucketed copy; per-bucket reads partition-prune; the cross-bucket
-    dedup join carries no forced broadcast hint."""
+    bucketed copy; per-bucket reads partition-prune; no stage carries a
+    forced broadcast hint."""
     root = four_bucket_root
 
     # partitioned layout on disk, html column projected away
@@ -81,10 +81,9 @@ def test_bucketed_input_written_once_and_pruned(spark, four_bucket_root):
     )
     assert "PartitionFilters" in plan and "_bucket" in plan.split("PartitionFilters")[1][:120]
 
-    # the cross-bucket dedup join (run_pipeline's prior_hashes, fed by
-    # run_resumable) must not force a broadcast hint — grep the source,
-    # not the plan (AQE may legitimately pick broadcast at runtime for
-    # small sets)
+    # neither the resumable run nor the pipeline may force a broadcast
+    # hint — grep the source, not the plan (AQE may legitimately pick
+    # broadcast at runtime for small sets)
     import inspect
 
     import dataqualitykit_spark.lineage as L
@@ -268,11 +267,15 @@ def test_resume_with_changed_bucketing_is_refused(spark, tmp_path):
     with pytest.raises(RuntimeError, match="injected failure"):
         run_resumable(spark, src, root, n_buckets=4, fail_after=1)
     with open(os.path.join(root, "_bucketed_done")) as f:
-        assert json.load(f) == {
-            "n_buckets": 4,
-            "bucket_key": "url",
-            "config": _config_digest(PipelineConfig()),
-        }
+        stored = json.load(f)
+    assert stored == {
+        "n_buckets": 4,
+        "bucket_key": "url",
+        "config": _config_digest(PipelineConfig()),
+        "layout": "dedup",
+        "schema": stored["schema"],
+    }
+    assert "`_pre` string" in stored["schema"], stored["schema"]
 
     before = _snapshot(root)
     assert any(k.startswith("labeled/bucket_id=") for k in before)
@@ -562,6 +565,150 @@ def test_cross_bucket_near_dedup_with_paragraph_scrub(spark, tmp_path):
     ), [(r["url"], r["drop_reason"]) for r in out]
     # the scrub really ran: boilerplate is gone from the kept text
     assert boiler not in (keepers[0]["scrubbed_text"] or "")
+
+
+_CONTRACT = ("url", "warc_ts", "keep", "drop_reason", "scrubbed_text", "content_md5")
+
+
+def _contract_rows(df):
+    from collections import Counter
+
+    return Counter(tuple(r) for r in df.select(*_CONTRACT).collect())
+
+
+def _planted_copies():
+    """Two groups of three copies. In each, the min-url copy (the one a
+    single pass keeps) hashes to a later bucket than another copy, for
+    3 and for 5 buckets, so a first-seen keeper would differ."""
+    import random
+    from datetime import datetime, timezone
+
+    from dataqualitykit_spark.fixtures.pages import _english_sentence
+
+    ts = datetime(2024, 5, 1, tzinfo=timezone.utc)
+    texts = {0: _english_sentence(random.Random(3), 120), 2: "short copied text"}
+    return [
+        {"url": f"https://plant-{g}-{i}.example/p", "warc_ts": ts, "html": None,
+         "text": text, "lang": "en"}
+        for g, text in texts.items()
+        for i in range(3)
+    ]
+
+
+@pytest.mark.parametrize("paragraphs", [False, True], ids=["default", "dedup_paragraphs"])
+def test_resumable_equals_single_pass(spark, tmp_path, paragraphs):
+    """run_resumable labels every row as one run_pipeline pass does —
+    including which copy of a duplicate is kept — for 1, 3 and 5 buckets
+    and after a kill following bucket 1 and a resume."""
+    from pyspark.sql import functions as F
+
+    from dataqualitykit_spark.config import PipelineConfig
+    from dataqualitykit_spark.fixtures import PAGES_SCHEMA, generate_pages
+    from dataqualitykit_spark.pipeline import run_pipeline
+
+    planted = _planted_copies()
+    src = spark.createDataFrame(generate_pages(200) + planted, schema=PAGES_SCHEMA)
+    for n in (3, 5):  # precondition: the min-url copy sits in a later bucket
+        b = {
+            r["url"]: r["b"]
+            for r in spark.createDataFrame(planted, schema=PAGES_SCHEMA)
+            .select("url", F.pmod(F.xxhash64("url"), F.lit(n)).alias("b"))
+            .collect()
+        }
+        for g in (0, 2):
+            group = [b[f"https://plant-{g}-{i}.example/p"] for i in range(3)]
+            assert group[0] > min(group), (n, g, group)
+
+    cfg = PipelineConfig(dedup_paragraphs=paragraphs)
+    want = _contract_rows(run_pipeline(src, cfg))
+
+    def check(root, n):
+        got = _contract_rows(spark.read.parquet(f"{root}/labeled"))
+        diff = (got - want) + (want - got)
+        assert not diff, (n, len(diff), list(diff)[:4])
+
+    for n in (1, 3):
+        root = str(tmp_path / f"b{n}")
+        run_resumable(spark, src, root, n_buckets=n, cfg=cfg)
+        check(root, n)
+    root = str(tmp_path / "b5")
+    with pytest.raises(RuntimeError, match="injected failure after bucket 0"):
+        run_resumable(spark, src, root, n_buckets=5, cfg=cfg, fail_after=1)
+    run_resumable(spark, src, root, n_buckets=5, cfg=cfg)
+    check(root, 5)
+
+
+def test_torn_bucket_is_rewritten_once(spark, four_bucket_root, tmp_path):
+    """A bucket whose files were written but whose manifest entry was not
+    (a kill between the two) is redone on resume: its metrics rows appear
+    exactly once and its labeled rows do not change."""
+    import math
+    import shutil
+
+    root = str(tmp_path / "torn")
+    shutil.copytree(four_bucket_root, root)
+
+    def metrics():
+        out = {}
+        for r in spark.read.parquet(f"{root}/metrics").collect():
+            out.setdefault((r["bucket_id"], r["reason"]), []).append(r)
+        return out
+
+    def labeled():
+        return sorted(map(repr, spark.read.parquet(f"{root}/labeled").collect()))
+
+    metrics_before, labeled_before = metrics(), labeled()
+    manifest_path = os.path.join(root, "manifest.json")
+    with open(manifest_path) as f:
+        manifest = json.load(f)
+    torn = manifest.pop("3")
+    with open(manifest_path, "w") as f:
+        json.dump(manifest, f)
+
+    run_resumable(spark, pages_dataframe(spark, 200), root, n_buckets=4)
+
+    with open(manifest_path) as f:
+        assert json.load(f)["3"]["rows"] == torn["rows"]
+    after = metrics()
+    assert after.keys() == metrics_before.keys()
+    assert any(b == 3 for b, _ in after)
+    for key, rows in after.items():
+        assert len(rows) == 1, key
+        (got,), (was,) = rows, metrics_before[key]
+        assert (got["docs"], got["chars"]) == (was["docs"], was["chars"]), key
+        if was["avg_ppl"] is None:
+            assert got["avg_ppl"] is None, key
+        else:
+            assert math.isclose(got["avg_ppl"], was["avg_ppl"], rel_tol=1e-9), key
+    assert labeled() == labeled_before
+
+
+def test_store_of_an_older_layout_is_refused(spark, tmp_path):
+    """A store bucketed from the raw source (no `_pre` column, a marker
+    without a layout tag) cannot be scored by bucket; a resume over it
+    must raise before writing anything."""
+    from pyspark.sql import functions as F
+
+    from dataqualitykit_spark.config import PipelineConfig
+    from dataqualitykit_spark.lineage import _config_digest
+
+    src = pages_dataframe(spark, 40)
+    root = str(tmp_path / "older")
+    (
+        src.select("url", "warc_ts", "text", "lang")
+        .withColumn("_bucket", F.pmod(F.xxhash64("url"), F.lit(2)).cast("int"))
+        .write.partitionBy("_bucket")
+        .parquet(f"{root}/bucketed")
+    )
+    with open(os.path.join(root, "_bucketed_done"), "w") as f:
+        json.dump(
+            {"n_buckets": 2, "bucket_key": "url", "config": _config_digest(PipelineConfig())},
+            f,
+        )
+    before = _snapshot(root)
+    with pytest.raises(ValueError, match="'layout': None"):
+        run_resumable(spark, src, root, n_buckets=2)
+    assert _snapshot(root) == before
 
 
 def test_run_resumable_rejects_global_token_budget(spark, tmp_path):
