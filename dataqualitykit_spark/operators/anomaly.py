@@ -133,22 +133,6 @@ def lag_tolerance_breach(
     )
 
 
-def neighborhood_deviation(
-    df: DataFrame,
-    col: str,
-    order_col: str,
-    partition_by: list[str] | None = None,
-) -> DataFrame:
-    """W7 (:3186-3191): |x - avg over [-1,+1] frame|."""
-    w = Window.orderBy(order_col)
-    if partition_by:
-        w = Window.partitionBy(*partition_by).orderBy(order_col)
-    return df.withColumn(
-        "neighborhood_dev",
-        F.abs(F.col(col) - F.avg(col).over(w.rowsBetween(-1, 1))),
-    )
-
-
 def weighted_moving_average(
     df: DataFrame,
     col: str,

@@ -104,13 +104,6 @@ def scrub_invalid(df: DataFrame, col: str, fmt: str, custom_pattern: str | None 
     return df.filter(matches_format(F.col(col), fmt, custom_pattern))
 
 
-def flag_invalid(df: DataFrame, col: str, fmt: str, custom_pattern: str | None = None) -> DataFrame:
-    """fix(strategy='flag'): {col}_format_ok boolean column."""
-    return df.withColumn(
-        f"{col}_format_ok", matches_format(F.col(col), fmt, custom_pattern)
-    )
-
-
 def parse_datetime(
     df: DataFrame, col: str, output_columns: tuple[str, str] = ("date", "time")
 ) -> DataFrame:

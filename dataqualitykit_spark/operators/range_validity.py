@@ -75,17 +75,6 @@ def custom_rule(df: DataFrame, rule: str) -> DataFrame:
     return df.filter(F.expr(rule))
 
 
-def violation_counts(df: DataFrame, col: str, lo: float, hi: float) -> DataFrame:
-    """check() report (:649-798) as one aggregation row."""
-    c = F.col(col)
-    return df.agg(
-        F.count(F.lit(1)).alias("total_rows"),
-        F.sum((c < F.lit(lo)).cast("long")).alias("below_min"),
-        F.sum((c > F.lit(hi)).cast("long")).alias("above_max"),
-        F.sum(c.isNull().cast("long")).alias("null_count"),
-    )
-
-
 def log_transform(col_name: str) -> Column:
     """strategy='transform' log leg (:950): golden log(1000)=6.907755."""
     return F.log(F.col(col_name))

@@ -212,15 +212,6 @@ def bpe_encode(
     return df.withColumn(out_col, udf(F.col(text_col)))
 
 
-def bpe_decode_ids(model: BpeModel, ids) -> str:
-    """Token ids -> the concatenation of their token strings (pure-python
-    mirror). NOTE: the pretokenizer drops whitespace, so this reconstructs
-    the PRETOKEN CONCATENATION, not the original text — the reconstruction
-    invariant both the tests and the driver oracle pin."""
-    inv = model.id_to_token()
-    return "".join(inv[i] for i in ids)
-
-
 def bpe_reconstruction_check(
     df: DataFrame,
     model: BpeModel,

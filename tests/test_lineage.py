@@ -152,6 +152,8 @@ def test_empty_bucket_records_zero_rows(spark, tmp_path):
         for r in spark.read.parquet(f"{root}/metrics").select("bucket_id").collect()
     }
     assert metric_buckets == held
+    partitions = sorted(os.listdir(f"{root}/labeled"))
+    assert partitions == [f"bucket_id={b}" for b in sorted(held)]
     assert spark.read.parquet(f"{root}/labeled").count() == n
 
 
@@ -724,3 +726,118 @@ def test_run_resumable_rejects_global_token_budget(spark, tmp_path):
     cfg = PipelineConfig(token_budget=1000)
     with pytest.raises(ValueError, match="global"):
         run_resumable(spark, pages_dataframe(spark, 20), str(tmp_path / "o"), cfg=cfg)
+
+
+def test_failed_bucket_leaves_no_partition_and_resumes(
+    spark, four_bucket_root, tmp_path, monkeypatch
+):
+    """Bucket 1 of 4 fails after its labeled write while bucket 0 is in
+    flight beside it: the failure propagates, the buckets already
+    submitted drain and are marked, and bucket 1 leaves neither a visible
+    partition nor a manifest entry. Hidden temp directories (bucket 1's,
+    and a stale one holding a junk file) are invisible to readers, and a
+    plain resume replaces them and equals the uninterrupted run."""
+    from dataqualitykit_spark import lineage
+
+    src = pages_dataframe(spark, 200)
+    root = str(tmp_path / "failed")
+    labeled = os.path.join(root, "labeled")
+    stale = os.path.join(labeled, ".bucket_id=2.tmp")
+    os.makedirs(stale)
+    with open(os.path.join(stale, "part-00000.parquet"), "w") as f:
+        f.write("not parquet")
+
+    write_metrics = lineage._write_metrics
+
+    def failing(metrics_root, b, got):
+        if b == 1:
+            raise OSError("no space left writing metrics of bucket 1")
+        return write_metrics(metrics_root, b, got)
+
+    monkeypatch.setattr(lineage, "_write_metrics", failing)
+    with pytest.raises(OSError, match="bucket 1"):
+        run_resumable(spark, src, root, n_buckets=4)
+    monkeypatch.undo()
+
+    manifest_path = os.path.join(root, "manifest.json")
+    before = json.load(open(manifest_path))
+    assert "0" in before and "1" not in before, before
+    visible = {n for n in os.listdir(labeled) if not n.startswith((".", "_"))}
+    assert visible == {f"bucket_id={b}" for b in before}
+    assert os.path.isdir(os.path.join(labeled, ".bucket_id=1.tmp"))
+    read = spark.read.parquet(labeled).select("bucket_id").distinct().collect()
+    assert {r[0] for r in read} == {int(b) for b in before}
+
+    run_resumable(spark, src, root, n_buckets=4)
+    after = json.load(open(manifest_path))
+    assert sorted(after) == ["0", "1", "2", "3"]
+    for b in before:  # the drained buckets were not redone
+        assert after[b] == before[b]
+    assert all(m["seconds"] > 0 for m in after.values()), after
+    assert [n for n in os.listdir(labeled) if n.startswith(".")] == []
+    assert _labeled_set(spark, four_bucket_root) == _labeled_set(spark, root)
+
+
+def test_run_jobs_carry_the_callers_group_and_their_stage(spark, tmp_path):
+    """Every job of a run joins the caller's job group (so cancelJobGroup
+    cancels the run) and names its stage — bucketize, or the bucket it
+    scores — while the caller's own description is back once the run
+    returns."""
+    sc = spark.sparkContext
+    jvm_sc = sc._jsc.sc()
+    tracker = sc.statusTracker()
+
+    def settled_ids(group):
+        jvm_sc.listenerBus().waitUntilEmpty()
+        return set(tracker.getJobIdsForGroup(group))
+
+    def description(job_id):
+        d = jvm_sc.statusStore().job(job_id).description()
+        return d.get() if d.isDefined() else None
+
+    ungrouped = settled_ids(None)
+    first = max(ungrouped, default=-1) + 1
+    sc.setJobGroup("g", "caller stage")
+    try:
+        src = pages_dataframe(spark, 120)
+        run_resumable(spark, src, str(tmp_path / "o"), n_buckets=4)
+        assert sc.getLocalProperty("spark.job.description") == "caller stage"
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+
+    grouped = settled_ids("g")
+    assert {j for j in settled_ids(None) if j >= first} == set()
+    assert grouped and min(grouped) >= first
+    stages = {description(j) for j in grouped}
+    assert stages == {
+        "run_resumable: bucketize",
+        *(f"run_resumable: bucket {b}" for b in range(4)),
+    }, stages
+
+
+def test_manifest_marks_from_many_threads(tmp_path):
+    """Manifest.mark from more threads than cores, switching threads
+    every microsecond, loses no entry and raises in none of them."""
+    import sys
+    from concurrent.futures import ThreadPoolExecutor
+
+    from dataqualitykit_spark.lineage import Manifest
+
+    path = str(tmp_path / "manifest.json")
+    manifest = Manifest(path)
+
+    def mark(t):
+        for i in range(25):
+            manifest.mark(t * 25 + i, rows=i, seconds=0.001)
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        with ThreadPoolExecutor(16) as pool:
+            futures = [pool.submit(mark, t) for t in range(16)]
+            for f in futures:
+                f.result(timeout=60)
+    finally:
+        sys.setswitchinterval(interval)
+    assert Manifest(path).completed() == set(range(400))
