@@ -2,37 +2,39 @@
 from checkpoint with per-partition lineage + metrics").
 
 A run has two parts. BUCKETIZE runs pipeline.dedup (the map-side gates,
-the paragraph scrub, the url window and the content window) over the
-WHOLE source once and writes its output — the projected source columns,
-`text` after the C4/paragraph scrubs, and the pre-model reason `_pre` —
-as the bucketed table, partitioned by B deterministic url-hash buckets
-(pmod(xxhash64(url), B): the same salted key that defuses domain skew;
-the url window's key normalize_url(url) under cfg.normalize_urls, so
-mirrors of one page share a bucket). Each BUCKET then runs only
-pipeline.score over its partition (a read that prunes to one directory):
-the fused scorer and the decide step (without near-dedup: one Spark job,
-no shuffle). Without near-dedup no bucket reads another bucket's output,
-so two buckets are in flight at once on driver threads: one bucket's
-scorer stage runs while the other builds its plan, fetches its
-Observation and commits. Each bucket writes its labeled rows with a
-plain overwrite to a hidden `labeled/.bucket_id=<b>.tmp/` (readers skip
-hidden directories), renames it to `bucket_id=<b>/` after its metrics
-partition is written, and then records its id in a JSON manifest. A restart skips completed buckets and
-rewrites the rest, so a run killed with buckets in flight reprocesses no
-completed bucket and converges to the same table as an uninterrupted
-run. Each bucket's jobs carry the description `run_resumable: bucket
-<b>` (bucketize's: `run_resumable: bucketize`), inside the caller's job
-group.
+the paragraph scrub, the url window, the content window and the opt-in
+near-dup stage) over the WHOLE source once and writes its output — the
+projected source columns, `text` after the C4/paragraph scrubs, and the
+pre-model reason `_pre` — as the bucketed table, partitioned by B
+deterministic url-hash buckets (pmod(xxhash64(url), B): the same salted
+key that defuses domain skew; the url window's key normalize_url(url)
+under cfg.normalize_urls, so mirrors of one page share a bucket). Each
+BUCKET then runs only pipeline.score over its partition (a read that
+prunes to one directory): the fused scorer and the decide step, one
+Spark job with no shuffle. No bucket reads another bucket's output, so
+two buckets are in flight at once on driver threads: one bucket's scorer
+stage runs while the other builds its plan, fetches its Observation and
+commits. Each bucket writes its labeled rows with a plain overwrite to a
+hidden `labeled/.bucket_id=<b>.tmp/` (readers skip hidden directories),
+renames it to `bucket_id=<b>/` after its metrics partition is written,
+and then records its id in a JSON manifest. A restart skips completed
+buckets and rewrites the rest, so a run killed with buckets in flight
+reprocesses no completed bucket and converges to the same table as an
+uninterrupted run. Each bucket's jobs carry the description
+`run_resumable: bucket <b>` (bucketize's: `run_resumable: bucketize`),
+inside the caller's job group.
 
-Cross-bucket exact dedup is therefore global: the url and content
-windows see the whole source at bucketize, so for every config without
-near-dedup the labels equal one run_pipeline pass row for row, including
+Cross-bucket dedup is therefore global: the url and content windows and
+the near-dup stage see the whole source at bucketize, so for every
+config the labels equal one run_pipeline pass row for row, including
 which copy of a duplicate is kept. The trade-off: the part of a run that
-cannot resume (bucketize) now includes the two dedup shuffles over the
-whole source, while the Python scorer, which dominates the per-doc cost,
-stays bucketed. The total shuffled bytes do not change. content_md5 is
-not stored in the bucketed table; score recomputes it from the stored
-text (storing it cost more write bytes than the md5 costs time).
+cannot resume (bucketize) includes the two dedup shuffles over the whole
+source and, under cfg.dedup_near, the near stage's two eager actions
+(the signature checkpoint and the bounded pair collect), while the
+Python scorer, which dominates the per-doc cost, stays bucketed. The
+total shuffled bytes do not change. content_md5 is not stored in the
+bucketed table; score recomputes it from the stored text (storing it
+cost more write bytes than the md5 costs time).
 
 The `_bucketed_done` marker records how the rows were bucketed
 (n_buckets, the bucket key), a digest of the config, the layout of the
@@ -48,25 +50,6 @@ job. The driver writes the bucket's metrics partition from those values
 with pyarrow (no Spark job), and the manifest records the row count, so
 the labeled partition is never read back; an empty bucket records rows=0
 and writes no metrics rows.
-
-NEAR-dup dedup spans buckets through persisted signatures instead
-(cfg.dedup_near): each bucket persists the xxhash64 MinHash signatures
-and band keys of its near-dedup participants — its dedup survivors
-(`_pre IS NULL`), exactly the set run_pipeline's near stage bands, so
-transitive chains propagate through rows the rules later drop — to a
-`near_sigs` table partitioned by bucket_id; before finalizing bucket b,
-its participants' signatures band-join (dedup.minhash_jaccard_cross)
-against completed buckets' signatures, and any row whose estimated
-Jaccard against a prior doc clears cfg.near_dup_threshold is relabeled
-drop_reason='dup_near'. Semantics are GREEDY FIRST-SEEN in bucket order
-(the prior doc always wins), which is deterministic across kill/resume
-because bucket order is fixed and resume skips completed buckets — an
-interrupted run converges to the uninterrupted run's exact labels. (A
-single global run_pipeline instead picks the min-url doc of each
-connected component as keeper, so WHICH member of a cross-bucket cluster
-is kept can differ between the global and bucketed shapes; each shape is
-internally deterministic.) Near configs therefore score one bucket at a
-time, in bucket order.
 
 run_resumable works on a local file system only: the manifest, the
 marker and the metrics partitions are written, and each labeled
@@ -99,9 +82,10 @@ from .pipeline import dedup, score
 
 # every reason a labeled row can carry, as quality_metrics names it
 _REASONS = ("kept", *DROP_REASON_ORDER)
-# what the bucketed table holds: pipeline.dedup's output with its _pre
-# column (a store without the tag was bucketed from the raw source)
-_LAYOUT = "dedup"
+# what the bucketed table holds: pipeline.dedup's output, whose _pre
+# carries dup_near (a "dedup" store left near-dup to the buckets; a store
+# without the tag was bucketed from the raw source)
+_LAYOUT = "dedup+near"
 # the metrics table: quality_metrics' schema (bucket_id is the partition
 # column)
 _METRICS_SCHEMA = pa.schema(
@@ -111,12 +95,6 @@ _METRICS_SCHEMA = pa.schema(
         ("chars", pa.int64()),
         ("avg_ppl", pa.float64()),
     ]
-)
-# the near_sigs table: dedup.minhash_signatures of the url-keyed
-# participants, partitioned by bucket_id (read with this schema, so a
-# store whose buckets had no participants reads as empty)
-_NEAR_SIGS_SCHEMA = (
-    "id string, sig array<bigint>, bands array<bigint>, bucket_id int"
 )
 # buckets in flight: one bucket's scorer stage runs while the other builds
 # its plan, fetches its Observation and commits. Each one adds a Python
@@ -151,11 +129,6 @@ class Manifest:
 
     def completed(self) -> set[int]:
         return {int(k) for k in self.state}
-
-    def nonempty(self) -> list[int]:
-        """Completed buckets that wrote rows — the only ones a read of
-        the output tables can see."""
-        return sorted(int(k) for k, v in self.state.items() if v["rows"])
 
     def mark(self, bucket: int, rows: int, seconds: float) -> None:
         # one lock over the update and the replace: the threads share the
@@ -253,62 +226,7 @@ def _score_bucket(
     `run_resumable: bucket <b>`."""
     t0 = time.perf_counter()
     spark.sparkContext.setJobDescription(f"run_resumable: bucket {b}")
-    part = bucketed.filter(F.col("_bucket") == b).drop("_bucket")
-    labeled = score(part, cfg)
-    # cross-bucket NEAR-dup dedup: the key is a band-bucket collision
-    # over persisted MinHash signatures instead of an exact hash.
-    if cfg.dedup_near:
-        from .operators import dedup as _dedup
-
-        # the participants are the bucket's dedup survivors, signed
-        # straight from the bucket input (their text is the
-        # post-scrub text whose md5 is content_md5)
-        sigs_b = _dedup.minhash_signatures(
-            part.filter(F.col("_pre").isNull()).select("url", "text"),
-            "text",
-            "url",
-            cfg.near_dup_hashes,
-        ).localCheckpoint(eager=False)
-        claimed = manifest.nonempty()
-        if claimed:
-            prior_sigs = (
-                spark.read.schema(_NEAR_SIGS_SCHEMA)
-                .parquet(os.path.join(out_root, "near_sigs"))
-                .filter(F.col("bucket_id").isin(*claimed))
-                .drop("bucket_id")
-            )
-            near_hits = (
-                _dedup.minhash_jaccard_cross(
-                    sigs_b,
-                    prior_sigs,
-                    num_hashes=cfg.near_dup_hashes,
-                )
-                .filter(F.col("est_jaccard") >= cfg.near_dup_threshold)
-                .select(F.col("id_a").alias("url"))
-                .distinct()
-                .withColumn("_nd_prior", F.lit(True))
-            )
-            labeled = (
-                labeled.join(near_hits, "url", "left")
-                .withColumn(
-                    "drop_reason",
-                    F.when(
-                        F.col("_nd_prior").isNotNull(), F.lit("dup_near")
-                    ).otherwise(F.col("drop_reason")),
-                )
-                .withColumn("keep", F.col("keep") & F.col("_nd_prior").isNull())
-                .drop("_nd_prior")
-            )
-        # persist this bucket's participant signatures with their band
-        # keys, so later buckets band against the same keys (idempotent
-        # dynamic overwrite; near configs run one bucket at a time)
-        (
-            sigs_b.withColumn("bucket_id", F.lit(b))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("bucket_id")
-            .parquet(os.path.join(out_root, "near_sigs"))
-        )
+    labeled = score(bucketed.filter(F.col("_bucket") == b).drop("_bucket"), cfg)
     # per-bucket commit: the rows go to a hidden directory, which then
     # replaces `bucket_id=<b>/` once the metrics partition is written, so
     # a crash before manifest.mark leaves at most a hidden directory or a
@@ -337,8 +255,8 @@ def run_resumable(
     fail_after: int | None = None,
 ) -> Manifest:
     """Dedup `source` once into url-hash buckets, then score the buckets
-    two at a time (one at a time under cfg.dedup_near), committing labeled
-    output + metrics per bucket; resume skips completed buckets.
+    two at a time, committing labeled output + metrics per bucket; resume
+    skips completed buckets.
     `out_root` is a local directory. A bucket that fails stops the
     submission of further buckets; the ones in flight finish and are
     marked, then the failure is raised. The caller's job group and local
@@ -420,13 +338,11 @@ def run_resumable(
     todo = [b for b in range(n_buckets) if b not in done]
     if fail_after is not None:
         todo = todo[:fail_after]
-    # near configs read earlier buckets' near_sigs, so they run in order
-    depth = 1 if cfg.dedup_near else _IN_FLIGHT
     futures: list[Future] = []
     running: set[Future] = set()
-    with ThreadPoolExecutor(depth) as pool:
+    with ThreadPoolExecutor(_IN_FLIGHT) as pool:
         for b in todo:
-            if len(running) == depth:
+            if len(running) == _IN_FLIGHT:
                 finished, running = wait(running, return_when=FIRST_COMPLETED)
                 if any(f.exception() for f in finished):
                     break

@@ -533,47 +533,46 @@ def minhash_jaccard(
     sigs = minhash_signatures(
         df, text_col, id_col, num_hashes, rows_per_band=rows_per_band
     ).localCheckpoint(eager=False)
-    return _lsh_estimate(
-        sigs, sigs, num_hashes, rows_per_band, portable=False, self_join=True
-    )
+    return _lsh_estimate(sigs, num_hashes, rows_per_band, portable=False)
 
 
 def _lsh_estimate(
-    sigs_a: DataFrame,
-    sigs_b: DataFrame,
+    sigs: DataFrame,
     num_hashes: int,
     rows_per_band: int,
     portable: bool,
-    self_join: bool,
 ) -> DataFrame:
-    """The one band-join + slot-match core: (id_a, id_b, est_jaccard) for
-    every pair sharing a band bucket, est = matching slots / num_hashes.
-    The band join carries (id, band, bucket) only; signatures join back
-    per candidate pair. A self join keeps id_a < id_b. (SQL strings, not
-    Column chains: with dataFrameDebugging on, every F.* call is ~20 py4j
-    round trips, and this runs on the driver once per near-dedup call.)"""
+    """The one band self-join + slot-match core: (id_a, id_b,
+    est_jaccard) with id_a < id_b for every pair sharing a band bucket,
+    est = matching slots / num_hashes. The band join carries (id, band,
+    bucket) only; signatures join back per candidate pair. (SQL strings,
+    not Column chains: with dataFrameDebugging on, every F.* call is ~20
+    py4j round trips, and this runs on the driver once per near-dedup
+    call.)"""
     if num_hashes % rows_per_band != 0:
         raise ValueError("num_hashes must be divisible by rows_per_band")
 
-    def banded(sigs: DataFrame) -> DataFrame:
-        # an all-NULL signature (NULL text) bands to the same key in every
-        # band, which would pair every two NULL-text docs
-        sigs = sigs.filter("exists(sig, x -> x IS NOT NULL)")
-        if portable:
-            return _band_keys_portable(sigs, num_hashes // rows_per_band, rows_per_band)
-        return _band_keys_fast(sigs)
-
+    # an all-NULL signature (NULL text) bands to the same key in every
+    # band, which would pair every two NULL-text docs
+    signed = sigs.filter("exists(sig, x -> x IS NOT NULL)")
+    if portable:
+        bands = num_hashes // rows_per_band
+        banded = _band_keys_portable(signed, bands, rows_per_band)
+    else:
+        banded = _band_keys_fast(signed)
     # join on=[names] so Catalyst plans a shuffled hash/sort-merge EQUI-join;
     # a raw self-join condition on aliased frames risks ambiguous-attribute
     # resolution degrading to BroadcastNestedLoopJoin (O(n^2) — observed)
-    a = banded(sigs_a).withColumnsRenamed({"id": "id_a"})
-    b = banded(sigs_b).withColumnsRenamed({"id": "id_b"})
-    pairs = a.join(b, on=["band", "bucket"])
-    if self_join:
-        pairs = pairs.filter("id_a < id_b")
-    pairs = pairs.select("id_a", "id_b").distinct()
-    sa = sigs_a.selectExpr("id AS id_a", "sig AS sig_a")
-    sb = sigs_b.selectExpr("id AS id_b", "sig AS sig_b")
+    a = banded.withColumnsRenamed({"id": "id_a"})
+    b = banded.withColumnsRenamed({"id": "id_b"})
+    pairs = (
+        a.join(b, on=["band", "bucket"])
+        .filter("id_a < id_b")
+        .select("id_a", "id_b")
+        .distinct()
+    )
+    sa = sigs.selectExpr("id AS id_a", "sig AS sig_a")
+    sb = sigs.selectExpr("id AS id_b", "sig AS sig_b")
     return pairs.join(sa, "id_a").join(sb, "id_b").selectExpr(
         "id_a",
         "id_b",
@@ -646,11 +645,11 @@ def connected_components(
     materialized. `contract_cap` is the most rows ever collected to the
     driver. Which path runs:
 
-    1. Driver (the pair list has <= contract_cap rows — per-bucket
-       near-dedup lands here): ONE action, `pairs.limit(cap + 1)
-       .toArrow()`; _arrow_components labels the graph in numpy and the
-       result comes back through createDataFrame(<arrow table>). No
-       checkpoint, no join, no pyspark Row.
+    1. Driver (the pair list has <= contract_cap rows): ONE action,
+       `pairs.limit(cap + 1).toArrow()`; _arrow_components labels the
+       graph in numpy and the result comes back through
+       createDataFrame(<arrow table>). No checkpoint, no join, no pyspark
+       Row.
     2. Contract (more pairs than the cap): one groupBy folds the round-1
        propagation into the initial labels (cliques collapse at once),
        then the graph is CONTRACTED to its label graph — tiny once
@@ -891,30 +890,7 @@ def minhash_jaccard_portable(
     sigs = minhash_signatures_portable(
         df, text_col, id_col, num_hashes, shingle_k
     ).localCheckpoint(eager=False)
-    return _lsh_estimate(
-        sigs, sigs, num_hashes, rows_per_band, portable=True, self_join=True
-    )
-
-
-def minhash_jaccard_cross(
-    sigs_a: DataFrame,
-    sigs_b: DataFrame,
-    num_hashes: int = 32,
-    rows_per_band: int = 4,
-) -> DataFrame:
-    """LSH candidates BETWEEN two signature sets (cross join, not self):
-    (id_a from sigs_a, id_b from sigs_b, est_jaccard) for every band-bucket
-    collision. Both inputs are (id, sig, bands) frames from
-    minhash_signatures — the same band keys and estimate as
-    minhash_jaccard (_lsh_estimate), so within-set and cross-set
-    candidacy use identical collision geometry.
-
-    This is the cross-BUCKET near-dedup primitive: lineage.run_resumable
-    bands the current bucket's signatures against the persisted signatures
-    of completed buckets, mirroring the content_md5 prior-join."""
-    return _lsh_estimate(
-        sigs_a, sigs_b, num_hashes, rows_per_band, portable=False, self_join=False
-    )
+    return _lsh_estimate(sigs, num_hashes, rows_per_band, portable=True)
 
 
 def simhash_portable(

@@ -51,7 +51,7 @@ def blocked_domain_col(url, blocked: list[str] | tuple[str, ...]):
     bl = F.array(*[F.lit(d.lower()) for d in blocked])
     # NULL url => NULL host/suffixes => arrays_overlap NULL; coalesce to
     # False so the flag matches url_keyword_score_col's NULL contract —
-    # a NULL here would poison run_pipeline's eligible/_survivor booleans
+    # a NULL here would poison run_pipeline's eligible/survivor booleans
     # and silently exclude the row from every downstream gate
     return F.coalesce(
         F.arrays_overlap(_suffixes(_host_of(url)), bl), F.lit(False)

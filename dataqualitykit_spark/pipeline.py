@@ -2,7 +2,7 @@
 
     ingest (project html away) -> salt repartition by url ->
     missing flag -> url keep-most-recent -> content keep-one (raw-text md5)
-    = dedup()
+    -> [opt-in] near-dup MinHash-LSH among the survivors = dedup()
     -> [survivors only] fused scrub+score Arrow UDF (every metric +
     langid/ppl) -> quality decide -> labeled frame = score()
 
@@ -281,8 +281,6 @@ class _Plan:
     eligible: dict[str, Column]
     dup_content: dict[str, Column]
     pre: tuple[Column, ...]
-    survivor: dict[str, Column]
-    near: dict[str, Column]
     score: dict[str, Column]
     scorer: _Scorer
     decide: dict[str, Column]
@@ -376,12 +374,7 @@ def _plan(
     pre = F.when(c(flags[0][1]), F.lit(flags[0][0]))
     for reason, flag in flags[1:]:
         pre = pre.when(c(flag), F.lit(reason))
-
-    near: dict[str, Column] = {}
-    decide = [c("_pre")]
-    if cfg.dedup_near:
-        near = {"_survivor": c("_survivor") & c("_nd").isNull()}
-        decide.append(F.when(c("_nd").isNotNull(), F.lit("dup_near")))
+    survivor = c("_pre").isNull()
 
     # metric columns are NULL (not garbage zeros) for pre-model drops.
     # The labeled output does NOT duplicate the raw text (it lives in the
@@ -389,7 +382,7 @@ def _plan(
     # the md5 fingerprint instead, which dedup/lineage key on
     out = [c(k) for k in keep if k != "text"] + [c(g) for g in scorer.gates]
     out += [
-        F.when(c("_survivor"), c(n)).cast(_METRIC_COLS[n]).alias(n)
+        F.when(survivor, c(n)).cast(_METRIC_COLS[n]).alias(n)
         for n in scorer.metrics
         if n in _METRIC_COLS
     ]
@@ -424,40 +417,38 @@ def _plan(
         eligible={"_eligible": eligible},
         dup_content=dup_content,
         pre=(*[c(k) for k in keep], pre.alias("_pre")),
-        survivor={"_survivor": c("_pre").isNull()},
-        near=near,
         # model + rules stage: ONE frame (a filter+union here would
         # duplicate the whole dedup subtree). Dropped rows cross the Arrow
         # boundary as NULL text, which the batch functions short-circuit,
         # so the models still only score survivors.
-        score={"_score": scorer.udf(F.when(c("_survivor"), c("text")))},
+        score={"_score": scorer.udf(F.when(survivor, c("text")))},
         scorer=scorer,
-        decide={"drop_reason": F.coalesce(*decide, scorer.quality)},
+        decide={"drop_reason": F.coalesce(c("_pre"), scorer.quality)},
         out=tuple(out),
     )
 
 
 def _near_dup_urls(base: DataFrame, cfg: PipelineConfig) -> DataFrame:
     """Non-canonical members of near-dup clusters among exact-dedup
-    survivors, as (url, _nd=True): MinHash-LSH pairs -> connected
-    components -> every url but the component's canonical (min url) one.
+    survivors (`_pre IS NULL`), as (url, _nd=True): MinHash-LSH pairs ->
+    connected components -> every url but the component's canonical (min
+    url) one.
 
     This stage is eager; building the plan runs Spark jobs:
     - the signature checkpoint runs the base subtree's shuffle stages
       when it is called (AQE);
     - connected_components collects the pair list as Arrow in ONE action
-      and labels it on the driver when it has at most contract_cap rows
-      (per-bucket near-dedup lands there); a bigger pair list takes its
-      distributed contract/loop path instead.
+      and labels it on the driver when it has at most contract_cap rows;
+      a bigger pair list takes its distributed contract/loop path
+      instead.
     The (url, component) frame holds only near-dup PARTICIPANTS — tiny
     relative to the corpus — so the left join back is broadcastable by
     AQE; the corpus itself is never re-shuffled. The join-back evaluates
     the base subtree once more (one extra source scan beats caching the
-    corpus in executor storage; run near-dedup per lineage bucket to
-    bound the working set)."""
+    corpus in executor storage)."""
     from .operators import dedup as _dedup
 
-    surv = base.filter(F.col("_survivor")).select("url", "text")
+    surv = base.filter("_pre IS NULL").select("url", "text")
     pairs = _dedup.minhash_jaccard(
         surv, "text", "url", num_hashes=cfg.near_dup_hashes
     ).filter(F.col("est_jaccard") >= cfg.near_dup_threshold)
@@ -522,13 +513,14 @@ def _input_cols(df: DataFrame) -> tuple[str, ...]:
 
 def dedup(df: DataFrame, cfg: PipelineConfig = DEFAULT_CONFIG) -> DataFrame:
     """run_pipeline's first half, everything ahead of the models: the
-    map-side gates, the paragraph scrub, the url window and the content
-    window. Returns the projected input columns (`text` after the C4 and
-    paragraph scrubs) plus `_pre`, the first pre-model drop reason in
-    DROP_REASON_ORDER (blocked_domain, url_keywords, missing_text,
-    dup_url, dup_content); a row survives to the scorer iff `_pre` is
-    NULL. Both windows see the whole input, so this half is where every
-    cross-row decision except near-dup is made."""
+    map-side gates, the paragraph scrub, the url window, the content
+    window and (cfg.dedup_near) the near-dup stage. Returns the projected
+    input columns (`text` after the C4 and paragraph scrubs) plus `_pre`,
+    the first pre-model drop reason in DROP_REASON_ORDER (blocked_domain,
+    url_keywords, missing_text, dup_url, dup_content, dup_near); a row
+    survives to the scorer iff `_pre` is NULL. Every stage here sees the
+    whole input, so this half makes every cross-row decision. The
+    near-dup stage is eager (see _near_dup_urls)."""
     sc = df.sparkSession.sparkContext
     keep = _input_cols(df)
     p = _plan(*_cache_key(df, cfg), keep)
@@ -556,22 +548,25 @@ def dedup(df: DataFrame, cfg: PipelineConfig = DEFAULT_CONFIG) -> DataFrame:
     base = base.withColumns(p.eligible)
     if p.dup_content:
         base = base.withColumns(p.dup_content)
-    return base.select(*p.pre)
+    out = base.select(*p.pre)
+    if cfg.dedup_near:
+        # near-dup LAST, among the survivors: DROP_REASON_ORDER ranks
+        # dup_near right after dup_content, so it folds into `_pre`
+        out = out.join(_near_dup_urls(out, cfg), "url", "left").selectExpr(
+            *(f"`{k}`" for k in keep),
+            "coalesce(_pre, CASE WHEN _nd THEN 'dup_near' END) AS _pre",
+        )
+    return out
 
 
 def score(deduped: DataFrame, cfg: PipelineConfig = DEFAULT_CONFIG) -> DataFrame:
     """run_pipeline's second half, over dedup's output (or any subset of
-    its rows): the near-dup stage among the survivors, the fused scorer
-    and the decide step, coalesce(_pre, dup_near, first failing quality
-    rule). content_md5 is the md5 of the stored post-scrub text."""
+    its rows): a row-local map, the fused scorer over the survivors and
+    the decide step, coalesce(_pre, first failing quality rule).
+    content_md5 is the md5 of the stored post-scrub text."""
     p = _plan(*_cache_key(deduped, cfg), _input_cols(deduped))
-    base = deduped.withColumns(p.survivor)
-    if cfg.dedup_near:
-        base = base.join(_near_dup_urls(base, cfg), "url", "left").withColumns(
-            p.near
-        )
     return (
-        base.withColumns(p.score)
+        deduped.withColumns(p.score)
         .withColumns(p.scorer.metrics)
         .withColumns(p.decide)
         .select(*p.out)

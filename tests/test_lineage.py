@@ -274,7 +274,7 @@ def test_resume_with_changed_bucketing_is_refused(spark, tmp_path):
         "n_buckets": 4,
         "bucket_key": "url",
         "config": _config_digest(PipelineConfig()),
-        "layout": "dedup",
+        "layout": "dedup+near",
         "schema": stored["schema"],
     }
     assert "`_pre` string" in stored["schema"], stored["schema"]
@@ -292,9 +292,9 @@ def test_resume_with_changed_bucketing_is_refused(spark, tmp_path):
 
 def test_cross_bucket_near_dedup_one_keeper(spark, tmp_path):
     """Planted near-dup clones whose urls hash into DIFFERENT buckets get
-    exactly ONE keeper (the others drop as dup_near via the persisted-
-    signature prior-join), and a killed+resumed run converges to the
-    uninterrupted run's exact labels."""
+    exactly ONE keeper, run_pipeline's min-url one (the others drop as
+    dup_near), and a killed+resumed run converges to the uninterrupted
+    run's exact labels."""
     import random
     from datetime import datetime, timezone
 
@@ -303,6 +303,7 @@ def test_cross_bucket_near_dedup_one_keeper(spark, tmp_path):
     from dataqualitykit_spark.config import PipelineConfig
     from dataqualitykit_spark.fixtures import PAGES_SCHEMA
     from dataqualitykit_spark.fixtures.pages import _english_sentence
+    from dataqualitykit_spark.pipeline import run_pipeline
 
     base_text = _english_sentence(random.Random(7), 120)
     ts = datetime(2024, 5, 1, tzinfo=timezone.utc)
@@ -345,10 +346,18 @@ def test_cross_bucket_near_dedup_one_keeper(spark, tmp_path):
     keepers = [u for u, (k, _, _) in labels.items() if k]
     assert len(keepers) == 1, labels
     assert all(dr == "dup_near" for u, (k, dr, _) in labels.items() if not k), labels
-    # greedy first-seen: the keeper lives in the EARLIEST bucket holding a
-    # clone, and at least one dup_near decision crossed a bucket boundary
+    # the keeper is one run_pipeline pass's min-url keeper, and at least
+    # one dup_near decision crossed a bucket boundary
+    want = {
+        r["url"]: (r["keep"], r["drop_reason"])
+        for r in run_pipeline(src, cfg)
+        .filter(F.col("url").startswith("https://ndclone-"))
+        .select("url", "keep", "drop_reason")
+        .collect()
+    }
+    assert {u: (k, dr) for u, (k, dr, _) in labels.items()} == want
+    assert keepers == [min(labels)], labels
     keeper_bucket = labels[keepers[0]][2]
-    assert keeper_bucket == min(b for _, _, b in labels.values())
     assert any(b != keeper_bucket for _, _, b in labels.values())
 
     resumed = str(tmp_path / "xb_resumed")
@@ -358,33 +367,11 @@ def test_cross_bucket_near_dedup_one_keeper(spark, tmp_path):
     assert _labeled_set(spark, clean) == _labeled_set(spark, resumed)
 
 
-def test_lineage_with_near_dedup(spark, tmp_path):
-    """cfg.dedup_near composes with the bucketed runner: near-dups within
-    a bucket drop as dup_near, and kill/resume still converges."""
-    from dataqualitykit_spark.config import PipelineConfig
-
-    cfg = PipelineConfig(dedup_near=True)
-    src = pages_dataframe(spark, 300)
-    clean = str(tmp_path / "nd_clean")
-    run_resumable(spark, src, clean, n_buckets=2, cfg=cfg)
-
-    resumed = str(tmp_path / "nd_resumed")
-    with pytest.raises(RuntimeError, match="injected failure"):
-        run_resumable(spark, src, resumed, n_buckets=2, cfg=cfg, fail_after=1)
-    run_resumable(spark, src, resumed, n_buckets=2, cfg=cfg)
-
-    assert _labeled_set(spark, clean) == _labeled_set(spark, resumed)
-    reasons = {
-        r["drop_reason"]
-        for r in spark.read.parquet(f"{clean}/labeled").select("drop_reason").collect()
-    }
-    assert "dup_near" in reasons
-
-
-def test_near_dedup_resume_requires_sig_store(spark, tmp_path):
-    """Resuming with dedup_near=True over buckets completed WITHOUT a
-    signature store must fail loudly (silently skipping cross-bucket
-    near-dedup would mislabel): the config digest differs."""
+def test_turning_near_dedup_on_at_resume_is_refused(spark, tmp_path):
+    """Resuming with dedup_near=True over a store bucketed without it
+    must fail loudly: its `_pre` carries no dup_near, so the remaining
+    buckets would silently keep near duplicates. The config digest
+    differs."""
     from dataqualitykit_spark.config import PipelineConfig
 
     src = pages_dataframe(spark, 120)
@@ -471,34 +458,11 @@ def test_blocked_rows_sign_nothing_for_later_buckets(spark, tmp_path):
     assert got == want
 
 
-def test_near_dedup_resume_past_buckets_without_participants(spark, tmp_path):
-    """A completed bucket with no near-dup participants (all its text is
-    NULL) writes no signature files; the next bucket must still read the
-    signature store (as empty) and label as one run_pipeline pass."""
-    from pyspark.sql import functions as F
-
-    from dataqualitykit_spark.config import PipelineConfig
-    from dataqualitykit_spark.pipeline import run_pipeline
-
-    pages = pages_dataframe(spark, 80)
-    in_b0 = F.pmod(F.xxhash64("url"), F.lit(2)) == 0
-    src = pages.withColumn("text", F.when(~in_b0, F.col("text")))
-    cfg = PipelineConfig(dedup_near=True)
-    want = _reason_counts(run_pipeline(src, cfg))
-    root = str(tmp_path / "nosigs")
-    run_resumable(spark, src, root, n_buckets=2, cfg=cfg)
-    manifest = json.load(open(os.path.join(root, "manifest.json")))
-    assert manifest["0"]["rows"] > 0
-    assert _reason_counts(spark.read.parquet(f"{root}/labeled")) == want
-
-
 def test_cross_bucket_near_dedup_with_paragraph_scrub(spark, tmp_path):
-    """ADVICE r3: run_pipeline computes content_md5 AFTER the opt-in
-    paragraph scrub, so the cross-bucket near-dedup text recovery must
-    scrub the raw bucket text the same way before hashing. Under the old
-    code every scrubbed doc's hash mismatched, it silently got no MinHash
-    signature, and cross-bucket clusters kept one doc PER BUCKET instead
-    of one overall."""
+    """Under dedup_paragraphs the near stage signs the post-scrub text,
+    the text content_md5 hashes: near-dup clones behind a boilerplate
+    line the scrub removes, with urls in both buckets, keep ONE doc
+    overall, not one per bucket."""
     import random
     from datetime import datetime, timezone
 
@@ -597,8 +561,12 @@ def _planted_copies():
     ]
 
 
-@pytest.mark.parametrize("paragraphs", [False, True], ids=["default", "dedup_paragraphs"])
-def test_resumable_equals_single_pass(spark, tmp_path, paragraphs):
+@pytest.mark.parametrize(
+    "opts",
+    [{}, {"dedup_paragraphs": True}, {"dedup_near": True}],
+    ids=["default", "dedup_paragraphs", "dedup_near"],
+)
+def test_resumable_equals_single_pass(spark, tmp_path, opts):
     """run_resumable labels every row as one run_pipeline pass does —
     including which copy of a duplicate is kept — for 1, 3 and 5 buckets
     and after a kill following bucket 1 and a resume."""
@@ -621,8 +589,10 @@ def test_resumable_equals_single_pass(spark, tmp_path, paragraphs):
             group = [b[f"https://plant-{g}-{i}.example/p"] for i in range(3)]
             assert group[0] > min(group), (n, g, group)
 
-    cfg = PipelineConfig(dedup_paragraphs=paragraphs)
+    cfg = PipelineConfig(**opts)
     want = _contract_rows(run_pipeline(src, cfg))
+    if cfg.dedup_near:  # not vacuous: the single pass drops near copies
+        assert any(row[3] == "dup_near" for row in want), want
 
     def check(root, n):
         got = _contract_rows(spark.read.parquet(f"{root}/labeled"))
@@ -686,31 +656,40 @@ def test_torn_bucket_is_rewritten_once(spark, four_bucket_root, tmp_path):
 
 
 def test_store_of_an_older_layout_is_refused(spark, tmp_path):
-    """A store bucketed from the raw source (no `_pre` column, a marker
-    without a layout tag) cannot be scored by bucket; a resume over it
-    must raise before writing anything."""
+    """A store of an older layout must be refused before anything is
+    written: one bucketed from the raw source (no `_pre` column, a
+    marker without a layout tag) cannot be scored by bucket, and a near
+    store of the "dedup" layout has a `_pre` without dup_near, so its
+    buckets would keep near duplicates under a matching config digest."""
     from pyspark.sql import functions as F
 
     from dataqualitykit_spark.config import PipelineConfig
     from dataqualitykit_spark.lineage import _config_digest
+    from dataqualitykit_spark.pipeline import dedup
 
     src = pages_dataframe(spark, 40)
-    root = str(tmp_path / "older")
-    (
-        src.select("url", "warc_ts", "text", "lang")
-        .withColumn("_bucket", F.pmod(F.xxhash64("url"), F.lit(2)).cast("int"))
-        .write.partitionBy("_bucket")
-        .parquet(f"{root}/bucketed")
-    )
-    with open(os.path.join(root, "_bucketed_done"), "w") as f:
-        json.dump(
-            {"n_buckets": 2, "bucket_key": "url", "config": _config_digest(PipelineConfig())},
-            f,
+    raw = src.select("url", "warc_ts", "text", "lang")
+    # (layout tag, config, stored rows): the "dedup" store left near-dup
+    # to the buckets
+    for layout, cfg, stored in (
+        (None, PipelineConfig(), raw),
+        ("dedup", PipelineConfig(dedup_near=True), dedup(src, PipelineConfig())),
+    ):
+        root = str(tmp_path / f"older_{layout}")
+        (
+            stored.withColumn("_bucket", F.pmod(F.xxhash64("url"), F.lit(2)).cast("int"))
+            .write.partitionBy("_bucket")
+            .parquet(f"{root}/bucketed")
         )
-    before = _snapshot(root)
-    with pytest.raises(ValueError, match="'layout': None"):
-        run_resumable(spark, src, root, n_buckets=2)
-    assert _snapshot(root) == before
+        marker = {"n_buckets": 2, "bucket_key": "url", "config": _config_digest(cfg)}
+        if layout is not None:
+            marker["layout"] = layout
+        with open(os.path.join(root, "_bucketed_done"), "w") as f:
+            json.dump(marker, f)
+        before = _snapshot(root)
+        with pytest.raises(ValueError, match=f"'layout': {layout!r}"):
+            run_resumable(spark, src, root, n_buckets=2, cfg=cfg)
+        assert _snapshot(root) == before
 
 
 def test_run_resumable_rejects_global_token_budget(spark, tmp_path):
